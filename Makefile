@@ -15,7 +15,7 @@ test:
 
 # The no-Spark spec gates only (seconds, not minutes).
 test-fast:
-	python -m pytest tests/test_protowire.py tests/test_protoshim.py -q
+	python -m pytest tests/test_protowire.py -q
 
 # The driver-style correctness gate at a chosen scale:
 #   make oracle ORACLE_SF_DIR=/root/testdata/sf0.01

@@ -363,11 +363,15 @@ def containment_pairs(
     # digest bytes, and the trailing raw-string tiebreak only ever
     # distinguished md5-colliding shingles. PPJoin completeness needs a
     # fixed TOTAL order, so totality now rests on md5 injectivity over
-    # the corpus shingle set (the 2^-120-scale ExactSubstr argument);
-    # candidates are VERIFIED against the raw arrays either way, so a
-    # collision can only add a spurious candidate (killed by verify) or
-    # perturb ranks of the colliding pair — and the DuckDB oracle keeps
-    # raw-string semantics end-to-end as the collision canary.
+    # the corpus shingle set (the 2^-120-scale ExactSubstr argument).
+    # Verification against the raw arrays keeps a collision from ever
+    # EMITTING a false pair, but not from losing a true one: two
+    # shingles sharing a fingerprint share a df count and a rank, which
+    # shifts the prefix positions the PPJoin positional filter bounds
+    # with, so a pair that would verify can be filtered out before
+    # verification — a completeness cost, not just a spurious
+    # candidate. The DuckDB oracle keeps raw-string semantics
+    # end-to-end as the collision canary.
     ex = (
         exploded_shingles(df, id_col, text_col, n, arrays=arr)
         .join(vm.filter(F.col("doc_id") == F.col("rep")).select("doc_id"), "doc_id")

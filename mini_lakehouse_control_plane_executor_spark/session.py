@@ -13,8 +13,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-from mini_lakehouse_control_plane_executor_spark.vendor import ensure_protobuf
-
 
 def get_spark(
     app_name: str = "mini_lakehouse_control_plane_executor_spark",
@@ -28,12 +26,6 @@ def get_spark(
     ``shuffle_partitions`` defaults to ``cpus`` — on a real cluster this
     would be ~2-3× total executor cores; AQE coalesces down from there.
     """
-    # Before the JVM launches: make google.protobuf importable (vendored
-    # shim when the real package is absent) so the PYTHONPATH the JVM —
-    # and therefore every Python worker it spawns, including the
-    # transformWithStateInPandas state-server workers — inherits can
-    # import the StateMessage protobuf stubs.
-    ensure_protobuf()
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     if shuffle_partitions is None:
@@ -60,10 +52,9 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        # RocksDB state store: required by transformWithStateInPandas
-        # (multiple column families) and the right default at scale —
-        # the HDFS-backed provider keeps every key in executor heap,
-        # RocksDB spills to local disk with changelog checkpointing.
+        # RocksDB state store: the HDFS-backed provider keeps every
+        # key in executor heap, RocksDB spills to local disk with
+        # changelog checkpointing.
         .config(
             "spark.sql.streaming.stateStore.providerClass",
             "org.apache.spark.sql.execution.streaming.state."

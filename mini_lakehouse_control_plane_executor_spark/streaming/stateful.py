@@ -50,8 +50,7 @@ def _update_profile(
         if len(pdf):
             # Normalize to datetime64[ns] before the int conversion —
             # Arrow may hand ts as [us] depending on version, which
-            # would silently yield milliseconds in a field named _us
-            # (the FunnelProcessor discipline).
+            # would silently yield milliseconds in a field named _us.
             last = max(
                 last,
                 int(pdf["ts"].astype("datetime64[ns]").astype("int64").max() // 1000),
@@ -71,6 +70,101 @@ def user_profiles(events: DataFrame) -> DataFrame:
             _update_profile,
             outputStructType=PROFILE_SCHEMA,
             stateStructType=STATE_SCHEMA,
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Streaming ordered funnel
+# ---------------------------------------------------------------------------
+
+FUNNEL_SCHEMA = T.StructType(
+    [
+        T.StructField("user_id", T.LongType()),
+        T.StructField("n_seen", T.LongType()),
+        T.StructField("ts_signup", T.TimestampType()),
+        T.StructField("ts_click", T.TimestampType()),
+        T.StructField("ts_purchase", T.TimestampType()),
+        T.StructField("funnel_depth", T.IntegerType()),
+    ]
+)
+
+FUNNEL_STATE_SCHEMA = T.StructType(
+    [
+        T.StructField("stages", T.ArrayType(T.IntegerType())),
+        T.StructField("ts_us", T.ArrayType(T.LongType())),
+    ]
+)
+
+_FUNNEL_STAGES = {"signup": 0, "click": 1, "purchase": 2}
+
+
+def _update_funnel(
+    key: tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: GroupState
+) -> Iterable[pd.DataFrame]:
+    (user_id,) = key
+    stages, ts_us = map(list, state.get) if state.exists else ([], [])
+    n_before = len(stages)
+    for pdf in pdfs:
+        hit = pdf[pdf["event_type"].isin(_FUNNEL_STAGES)]
+        stages.extend(int(c) for c in hit["event_type"].map(_FUNNEL_STAGES))
+        # datetime64[ns] first: Arrow may hand ts as [us] (see above).
+        ts_us.extend(
+            int(t) for t in hit["ts"].astype("datetime64[ns]").astype("int64") // 1_000
+        )
+    if len(stages) == n_before:
+        return
+    state.update((stages, ts_us))
+    events = list(zip(stages, ts_us))
+    ts_signup = min((t for c, t in events if c == 0), default=None)
+    ts_click = (
+        min((t for c, t in events if c == 1 and t > ts_signup), default=None)
+        if ts_signup is not None
+        else None
+    )
+    ts_purchase = (
+        min((t for c, t in events if c == 2 and t > ts_click), default=None)
+        if ts_click is not None
+        else None
+    )
+    stamp = lambda us: pd.Timestamp(us, unit="us") if us is not None else pd.NaT
+    yield pd.DataFrame(
+        {
+            "user_id": [user_id],
+            "n_seen": [len(events)],
+            "ts_signup": [stamp(ts_signup)],
+            "ts_click": [stamp(ts_click)],
+            "ts_purchase": [stamp(ts_purchase)],
+            "funnel_depth": [
+                sum(t is not None for t in (ts_signup, ts_click, ts_purchase))
+            ],
+        }
+    )
+
+
+def funnel_stream(events: DataFrame) -> DataFrame:
+    """Streaming twin of the batch ``events_funnel`` query: first
+    signup → first LATER click → first LATER purchase per user, correct
+    under out-of-order arrival. Emits the current funnel row per user
+    per micro-batch (update mode); ``n_seen`` grows monotonically, so a
+    drain picks each user's final row by it.
+
+    State is the user's milestone buffer (parallel stage / µs-timestamp
+    arrays), not a running (signup, click, purchase) triple: a late
+    signup can re-qualify a click that preceded the earlier-known
+    signup, so the funnel is recomputed from the whole buffer each
+    batch. Non-milestone event types are dropped before they reach
+    state, and users with no milestone events never materialize any;
+    state is O(milestone events per user)."""
+    return (
+        events.select("user_id", "event_type", "ts")
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            _update_funnel,
+            outputStructType=FUNNEL_SCHEMA,
+            stateStructType=FUNNEL_STATE_SCHEMA,
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )

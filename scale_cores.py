@@ -14,7 +14,8 @@ smallest scale on this box where compute outweighs per-stage overhead.
 Usage: python scale_cores.py            # runs both core counts, prints table
 Env:   SPARK_GRAFT_SCALE_OUT  sf1 dir   (default /root/repo/.scale/sf1;
                                          build it with scale_build.py)
-       SPARK_GRAFT_SCALE_CORES          (default "32,8")
+       SPARK_GRAFT_SCALE_CORES          (default "32,8"; two or more distinct
+                                         positive counts, else exit 1)
 
 Each bench.py child inherits the unmodified driver contract
 ($SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS, master local[$CPUS]); this
@@ -30,10 +31,25 @@ import subprocess
 import sys
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SCALE_OUT", "/root/repo/.scale/sf1")
-CORES = [
-    c.strip()
-    for c in os.environ.get("SPARK_GRAFT_SCALE_CORES", "32,8").split(",")
-]
+
+
+def parse_cores(raw: str) -> list[str]:
+    """Comma-separated positive core counts, duplicates dropped; the
+    table is a paired comparison, so at least two distinct counts."""
+    try:
+        cores = [int(c) for c in raw.split(",")]
+    except ValueError:
+        cores = []
+    if not cores or min(cores) < 1:
+        raise SystemExit(
+            f"SPARK_GRAFT_SCALE_CORES={raw!r}: expected comma-separated positive integers"
+        )
+    cores = list(dict.fromkeys(str(c) for c in cores))
+    if len(cores) < 2:
+        raise SystemExit(
+            f"SPARK_GRAFT_SCALE_CORES={raw!r}: need two distinct core counts"
+        )
+    return cores
 
 
 def run_bench(cores: str) -> dict:
@@ -55,8 +71,9 @@ def run_bench(cores: str) -> dict:
 
 
 def main() -> None:
-    results = {c: run_bench(c) for c in CORES}
-    base, other = CORES[0], CORES[1] if len(CORES) > 1 else CORES[0]
+    cores = parse_cores(os.environ.get("SPARK_GRAFT_SCALE_CORES", "32,8"))
+    results = {c: run_bench(c) for c in cores}
+    base, other = cores[0], cores[1]
     qb, qo = results[base]["queries"], results[other]["queries"]
     print(f"# paired bench at {SF_DIR}: {base} vs {other} cores")
     print(f"| query | {base}c s | {other}c s | ratio ({other}c/{base}c) |")
@@ -67,7 +84,7 @@ def main() -> None:
         print(f"| {q} | {qb[q]:.3f} | {qo.get(q, float('nan')):.3f} | {r:.2f}x |")
     tb, to = results[base]["value"], results[other]["value"]
     print(f"| **total** | **{tb:.3f}** | **{to:.3f}** | **{to / tb:.2f}x** |")
-    for c in CORES:
+    for c in cores:
         with open(f".scale_cores_{c}.json", "w") as f:
             json.dump(results[c], f)
 

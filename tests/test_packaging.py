@@ -9,6 +9,7 @@ import sys
 import time
 import urllib.request
 
+import pytest
 import yaml
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -56,6 +57,22 @@ def test_makefile_demo_target_runs_the_demo_module():
     for target in ("test:", "demo:", "serve:", "bench:", "compose-config:"):
         assert target in mk, target
     assert "mini_lakehouse_control_plane_executor_spark.demo" in mk
+
+
+@pytest.mark.parametrize("cores", ["", "8", "8,8", "8,x", "8,,32", "0,8"])
+def test_scale_cores_rejects_bad_core_list(cores):
+    """A paired core-scaling table needs two distinct positive counts;
+    anything else exits non-zero before any bench run starts."""
+    proc = subprocess.run(
+        [sys.executable, "scale_cores.py"],
+        cwd=ROOT,
+        env=dict(os.environ, SPARK_GRAFT_SCALE_CORES=cores),
+        capture_output=True,
+        text=True,
+        timeout=60,
+    )
+    assert proc.returncode != 0
+    assert "SPARK_GRAFT_SCALE_CORES" in proc.stderr
 
 
 def test_server_entrypoint_serves_rest(tmp_path):

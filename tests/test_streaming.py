@@ -300,152 +300,6 @@ def test_merge_stream_exactly_once(spark, lake, tmp_path):
     assert {r.k: r.v for r in t.read().collect()}[100] == "new@3"
 
 
-def test_tws_user_profiles_equals_batch(spark, event_dir):
-    """transformWithStateInPandas (Spark 4 arbitrary-state API): the
-    final emitted running profile per user equals the batch aggregate —
-    count, value total, distinct-type count, and the deterministic
-    top event type. The TWS Python workers speak protobuf to the JVM
-    state server: with no protobuf package in this container, get_spark
-    activates the vendored pure-Python shim
-    (``vendor/protoshim``) — so this run is also the wire-format
-    cross-validation of that shim against the JVM's real protobuf."""
-    from mini_lakehouse_control_plane_executor_spark.streaming.tws import user_profiles_tws
-
-    stream = user_profiles_tws(W.stream_events(spark, event_dir))
-    got = _drain(spark, stream, "t_tws", mode="update")
-    final = got.groupBy("user_id").agg(
-        F.max("n_events").alias("n_events"),
-        F.max("total_value").alias("total_value"),
-        F.max("n_types").alias("n_types"),
-        F.max_by("top_type", "n_events").alias("top_type"),
-    )
-    batch_events = _batch(spark, event_dir)
-    per_type = batch_events.groupBy("user_id", "event_type").agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    from pyspark.sql.window import Window as SqlWindow
-
-    w = SqlWindow.partitionBy("user_id").orderBy(F.col("c").desc(), "event_type")
-    top = (
-        per_type.withColumn("rn", F.row_number().over(w))
-        .filter("rn = 1")
-        .select("user_id", F.col("event_type").alias("top_type"))
-    )
-    batch = (
-        batch_events.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.coalesce(F.col("value"), F.lit(0.0))).alias("total_value"),
-            F.count_distinct("event_type").alias("n_types"),
-        )
-        .join(top, "user_id")
-    )
-    got_rows = _rows(final, ["user_id"])
-    want_rows = _rows(batch, ["user_id"])
-    assert len(got_rows) == len(want_rows)
-    for g, b in zip(got_rows, want_rows):
-        assert (g.user_id, g.n_events, g.n_types, g.top_type) == (
-            b.user_id, b.n_events, b.n_types, b.top_type
-        )
-        assert abs(g.total_value - b.total_value) < 1e-6
-
-
-def test_tws_processor_logic():
-    """UserProfileProcessor semantics against a fake StatefulProcessor
-    handle (ValueState/MapState in dicts): accumulation across batches,
-    NULL-value coalescing, deterministic top-type tie-break — the
-    fake-twin discipline (operators/multimodal.py) for an API whose
-    runtime transport (protobuf) is absent in this container."""
-    import pandas as pd
-    from mini_lakehouse_control_plane_executor_spark.streaming.tws import UserProfileProcessor
-
-    class FakeValueState:
-        def __init__(self):
-            self._v = None
-        def exists(self):
-            return self._v is not None
-        def get(self):
-            return self._v
-        def update(self, v):
-            self._v = v
-
-    class FakeMapState:
-        def __init__(self):
-            self._m = {}
-        def containsKey(self, k):
-            return k in self._m
-        def getValue(self, k):
-            return self._m[k]
-        def updateValue(self, k, v):
-            self._m[k] = v
-        def iterator(self):
-            return iter(self._m.items())
-
-    class FakeHandle:
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            return FakeValueState()
-        def getMapState(self, name, ks, vs, ttlDurationMs=None):
-            return FakeMapState()
-
-    p = UserProfileProcessor()
-    p.init(FakeHandle())
-    b1 = pd.DataFrame({"event_type": ["view", "view", "click"], "value": [1.0, None, 2.0]})
-    (out1,) = p.handleInputRows((7,), iter([b1]), None)
-    assert out1.iloc[0].to_dict() == {
-        "user_id": 7, "n_events": 3, "total_value": 3.0,
-        "n_types": 2, "top_type": "view",
-    }
-    # Second batch revises the SAME state; 'click' ties 'view' at 2 ->
-    # lexicographic tie-break picks 'click'.
-    b2 = pd.DataFrame({"event_type": ["click"], "value": [4.0]})
-    (out2,) = p.handleInputRows((7,), iter([b2]), None)
-    assert out2.iloc[0].to_dict() == {
-        "user_id": 7, "n_events": 4, "total_value": 7.0,
-        "n_types": 2, "top_type": "click",
-    }
-
-
-def test_tws_plan_analyzes_and_conforms_to_real_api(spark):
-    """Protobuf-free attestation for transformWithStateInPandas (the
-    runtime e2e above needs protobuf): (a) the processor subclasses
-    pyspark's REAL StatefulProcessor ABC with every abstract method
-    implemented — not a lookalike; (b) building the TWS plan on a real
-    streaming source passes JVM-side analysis (operator registration,
-    output schema, Update mode, grouping key), which is everything
-    short of executing the state server protocol."""
-    import inspect
-
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    from mini_lakehouse_control_plane_executor_spark.streaming.tws import (
-        UserProfileProcessor,
-        user_profiles_tws,
-    )
-
-    assert issubclass(UserProfileProcessor, StatefulProcessor)
-    assert not inspect.isabstract(UserProfileProcessor)
-    proc = UserProfileProcessor()
-    assert isinstance(proc, StatefulProcessor)
-
-    stream = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", "1")
-        .load()
-        .select(
-            (F.col("value") % 5).alias("user_id"),
-            F.lit("click").alias("event_type"),
-            F.col("timestamp").alias("ts"),
-            F.lit(1.0).alias("value"),
-        )
-    )
-    out = user_profiles_tws(stream)
-    assert out.isStreaming
-    assert out.schema.simpleString() == (
-        "struct<user_id:bigint,n_events:bigint,total_value:double,"
-        "n_types:bigint,top_type:string>"
-    )
-
-
 def test_cms_sketch_stream_equals_batch(spark, event_dir):
     """Streaming count-min sketch (operators/sketch.py): the cell table
     is an UNWINDOWED stateful aggregation whose state is exactly the
@@ -484,113 +338,17 @@ def test_cms_sketch_stream_equals_batch(spark, event_dir):
         assert est >= truth[u]  # CMS never undercounts
 
 
-def test_tws_session_finalizer_equals_batch(spark, tmp_path):
-    """Timer-based event-time sessionization (transformWithStateInPandas,
-    Append mode): finalized sessions equal the batch lag/cumsum
-    sessionization on the same rows. Exercises the full timer protocol
-    through the state server — RegisterTimer, ListTimers, DeleteTimer,
-    watermark-driven handleExpiredTimer — on top of the vendored
-    protobuf shim. A far-future sentinel user pushes the watermark past
-    every real session so all of them finalize."""
-    from pyspark.sql.window import Window as SqlWindow
-
-    from mini_lakehouse_control_plane_executor_spark.streaming.tws import finalized_sessions_tws
-
-    base = 1_700_000_000_000  # ms epoch
-    gap_min = 1
-    rows = []
-    # 4 users x irregular sessions: in-batch splits AND cross-batch state.
-    for u in range(1, 5):
-        t = base + u * 7_000
-        for s in range(u):  # user u has u sessions
-            for i in range(3 + (s % 2)):
-                rows.append((u, t, float(u + i)))
-                t += 10_000 * (i + 1)  # 10-40s steps, inside the gap
-            t += 300_000  # 5 min: exceeds the 1-min gap
-    sentinel = [(99, base + 86_400_000, 0.0)]
-
-    def mk(rs, path):
-        (
-            spark.createDataFrame(rs, "user_id long, ts_ms long, value double")
-            .withColumn("ts", (F.col("ts_ms") / 1000).cast("timestamp"))
-            .select("user_id", "value", "ts")
-            .coalesce(1)
-            .write.parquet(path)
-        )
-
-    # Split real rows across two stream files (state must carry over),
-    # sentinel last so the watermark jump happens after all data.
-    half = len(rows) // 2
-    srcdir = tmp_path / "in"
-    srcdir.mkdir()
-    for i, chunk in enumerate([rows[:half], rows[half:], sentinel]):
-        mk(chunk, str(tmp_path / f"f{i}"))
-        src = glob.glob(str(tmp_path / f"f{i}" / "part-*.parquet"))[0]
-        shutil.copy(src, str(srcdir / f"{i:03d}.parquet"))
-
-    stream = (
-        spark.readStream.schema("user_id long, value double, ts timestamp")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(srcdir))
-        .withWatermark("ts", "1 seconds")
-    )
-    out = finalized_sessions_tws(stream, gap_minutes=gap_min)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("t_tws_sessions")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(240)
-    got = _rows(spark.table("t_tws_sessions"), ["user_id", "session_start"])
-
-    # Batch oracle: lag/cumsum sessionization over the same (real) rows.
-    batch = (
-        spark.createDataFrame(rows, "user_id long, ts_ms long, value double")
-        .withColumn("ts", (F.col("ts_ms") / 1000).cast("timestamp"))
-    )
-    w = SqlWindow.partitionBy("user_id").orderBy("ts")
-    want_df = (
-        batch.withColumn("prev", F.lag("ts").over(w))
-        .withColumn(
-            "new_sess",
-            (
-                F.col("prev").isNull()
-                | (F.unix_millis("ts") - F.unix_millis("prev") > gap_min * 60_000)
-            ).cast("long"),
-        )
-        .withColumn("sess_id", F.sum("new_sess").over(w))
-        .groupBy("user_id", "sess_id")
-        .agg(
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("value").alias("total_value"),
-        )
-        .drop("sess_id")
-    )
-    want = _rows(want_df, ["user_id", "session_start"])
-    assert len(want) == 1 + 2 + 3 + 4  # user u has u sessions
-    assert [r.user_id for r in got] == [r.user_id for r in want]
-    for g, b in zip(got, want):
-        assert (g.user_id, g.session_start, g.session_end, g.n_events) == (
-            b.user_id, b.session_start, b.session_end, b.n_events
-        )
-        assert abs(g.total_value - b.total_value) < 1e-9
-
-
-def test_tws_state_survives_query_restart(spark, tmp_path):
+def test_stateful_state_survives_query_restart(spark, tmp_path):
     """Arbitrary state must restore across SEPARATE query runs from the
     checkpoint (RocksDB snapshot + changelog replay), not just across
     micro-batches of one run: drain batch 1, start a NEW query on the
     same checkpoint with more data, and the running profiles must equal
     the batch aggregate over ALL rows."""
-    from mini_lakehouse_control_plane_executor_spark.streaming.tws import user_profiles_tws
+    from mini_lakehouse_control_plane_executor_spark.streaming.stateful import user_profiles
 
     part1 = [(1, "view", 1.0), (1, "click", 2.0), (2, "view", 3.0)]
     part2 = [(1, "view", 4.0), (2, "buy", 5.0), (3, "view", 6.0)]
+    schema = "user_id long, event_type string, value double, ts timestamp"
     srcdir = tmp_path / "in"
     srcdir.mkdir()
 
@@ -598,6 +356,7 @@ def test_tws_state_survives_query_restart(spark, tmp_path):
         d = tmp_path / name
         (
             spark.createDataFrame(rows, "user_id long, event_type string, value double")
+            .withColumn("ts", F.lit("2024-01-01 00:00:00").cast("timestamp"))
             .coalesce(1)
             .write.parquet(str(d))
         )
@@ -608,11 +367,9 @@ def test_tws_state_survives_query_restart(spark, tmp_path):
     def drain():
         # memory sinks refuse checkpoint recovery; foreachBatch +
         # parquet-append supports Update mode AND restart.
-        stream = spark.readStream.schema(
-            "user_id long, event_type string, value double"
-        ).parquet(str(srcdir))
+        stream = spark.readStream.schema(schema).parquet(str(srcdir))
         q = (
-            user_profiles_tws(stream)
+            user_profiles(stream)
             .writeStream.foreachBatch(
                 lambda df, _id: df.write.mode("append").parquet(out_dir)
             )
@@ -630,10 +387,10 @@ def test_tws_state_survives_query_restart(spark, tmp_path):
 
     add_file(part2, "f2")
     got = {
-        r.user_id: (r.n_events, r.total_value)
+        r.user_id: (r.n_events, r.sum_value)
         for r in drain().groupBy("user_id").agg(
             F.max("n_events").alias("n_events"),
-            F.max("total_value").alias("total_value"),
+            F.max("sum_value").alias("sum_value"),
         ).collect()
     }
     # Profiles reflect part1 + part2 — state carried across query runs.
@@ -664,18 +421,17 @@ def test_bloom_stream_equals_batch(spark, event_dir):
     assert 0 < len(batch) <= B.BLOOM_BITS // B.WORD_BITS
 
 
-def test_tws_funnel_equals_batch(spark, event_dir):
-    """ListState funnel tracker (the third typed state primitive after
-    ValueState/MapState): the final streamed funnel row per user equals
-    the batch chained-min funnel (first signup -> first later click ->
-    first later purchase) on the same rows, for every user that
-    signed up."""
+def test_funnel_stream_equals_batch(spark, event_dir):
+    """Milestone-buffer funnel tracker (applyInPandasWithState): the
+    final streamed funnel row per user equals the batch chained-min
+    funnel (first signup -> first later click -> first later purchase)
+    on the same rows, for every user that signed up."""
     from pyspark.sql.window import Window as SqlWindow
 
-    from mini_lakehouse_control_plane_executor_spark.streaming.tws import funnel_tws
+    from mini_lakehouse_control_plane_executor_spark.streaming.stateful import funnel_stream
 
-    stream = funnel_tws(W.stream_events(spark, event_dir))
-    got = _drain(spark, stream, "t_tws_funnel", mode="update")
+    stream = funnel_stream(W.stream_events(spark, event_dir))
+    got = _drain(spark, stream, "t_funnel", mode="update")
     final = (
         got.withColumn(
             "rn",
