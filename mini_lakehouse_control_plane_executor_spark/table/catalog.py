@@ -81,6 +81,10 @@ RESULT_PREVIEW_ROWS = 100
 # Finished jobs beyond this count are evicted oldest-first (JobInfo and
 # result directory) so a long-lived server's job map is bounded.
 MAX_FINISHED_JOBS = 200
+# Spark's status tracker applies scheduler events asynchronously; a
+# job's counters are read once the tracker shows all its Spark jobs
+# ended, waiting at most this long.
+TRACKER_SETTLE_S = 2.0
 
 
 class LakehouseSession:
@@ -600,20 +604,6 @@ class LakehouseSession:
             info.extra["schema"] = [f.name for f in df.schema.fields]
             # Parquet footer count — metadata-only, no data scan.
             info.metrics["output_rows"] = result.count()
-            tracker = sc.statusTracker()
-            spark_jobs = tracker.getJobIdsForGroup(job_id) or []
-            num_tasks = 0
-            num_stages = 0
-            for jid in spark_jobs:
-                ji = tracker.getJobInfo(jid)
-                for sid in ji.stageIds if ji else []:
-                    si = tracker.getStageInfo(sid)
-                    if si:
-                        num_stages += 1
-                        num_tasks += si.numTasks
-            info.metrics["spark_jobs"] = len(spark_jobs)
-            info.metrics["num_stages"] = num_stages
-            info.metrics["num_tasks"] = num_tasks
             info.status = "COMPLETED"
         except Exception as exc:
             info.status = "FAILED"
@@ -629,6 +619,8 @@ class LakehouseSession:
             info.error = "cancelled" if is_cancel_exc else msg
             job_span.record_error(info.error)
         finally:
+            # Counted here so a failed job reports what it ran too.
+            info.metrics.update(self._stage_counters(job_id))
             job_span.set_attributes(
                 job_status=info.status,
                 output_rows=info.metrics.get("output_rows", 0),
@@ -653,6 +645,41 @@ class LakehouseSession:
             self._evict_finished_jobs()
             info.done.set()
 
+    def _stage_counters(self, job_group: str) -> dict:
+        """Stage and task counts of every Spark job in ``job_group``, from
+        the status tracker. A stage that launched no task was skipped
+        (its shuffle output already existed) and is left out, as the
+        Spark UI leaves skipped tasks out of a job's total. The task
+        counts of a Spark job are final once the tracker shows it ended."""
+        tracker = self.spark.sparkContext.statusTracker()
+        deadline = time.monotonic() + TRACKER_SETTLE_S
+        while True:
+            spark_jobs = [
+                ji
+                for ji in map(tracker.getJobInfo, tracker.getJobIdsForGroup(job_group) or [])
+                if ji
+            ]
+            if time.monotonic() >= deadline or all(
+                ji.status != "RUNNING" for ji in spark_jobs
+            ):
+                break
+            time.sleep(0.01)
+        stage_ids = {sid for ji in spark_jobs for sid in ji.stageIds}
+        stages = [
+            si
+            for si in map(tracker.getStageInfo, sorted(stage_ids))
+            if si and si.numActiveTasks + si.numCompletedTasks + si.numFailedTasks
+        ]
+        return {
+            "spark_jobs": len(spark_jobs),
+            "num_stages": len(stages),
+            "completed_stages": sum(si.numCompletedTasks >= si.numTasks for si in stages),
+            "num_tasks": sum(si.numTasks for si in stages),
+            "completed_tasks": sum(si.numCompletedTasks for si in stages),
+            "failed_tasks": sum(si.numFailedTasks for si in stages),
+            "running_tasks": sum(si.numActiveTasks for si in stages),
+        }
+
     def _record_job_totals(self, info: JobInfo) -> None:
         with self._totals_mu:
             t = self._totals
@@ -660,7 +687,7 @@ class LakehouseSession:
             t["query_duration_seconds_sum"] += (
                 (info.finished_ms or info.started_ms) - info.started_ms
             ) / 1000.0
-            t["tasks_completed"] += info.metrics.get("num_tasks", 0)
+            t["tasks_completed"] += info.metrics.get("completed_tasks", 0)
             t["input_rows"] += info.metrics.get("input_rows", 0)
             t["input_bytes"] += info.metrics.get("input_bytes", 0)
             t["output_rows"] += info.metrics.get("output_rows", 0)
@@ -672,29 +699,31 @@ class LakehouseSession:
         ``start_time``/``end_time`` are RFC3339 (Go ``time.Time`` JSON),
         ``end_time`` omitted while running (``omitempty``), and
         ``duration_ms`` of an in-flight job is time-since-start
-        (``:484-490``). COMPLETED jobs report every tracked task/stage
-        as completed (Spark's driver retries failed tasks internally);
-        FAILED jobs report zero completed stages/tasks — we don't track
-        partial stage completion, and claiming all stages completed
-        would misrepresent a failure."""
+        (``:484-490``). Stage and task counters are Spark's status-tracker
+        counts over the job's stages, read once when the job ends, failed
+        or not (``_stage_counters``): ``completed_tasks``,
+        ``failed_tasks`` and ``running_tasks`` sum each stage's
+        completed, failed and active tasks; ``completed_stages`` (and
+        ``current_stage``) counts the stages whose every task completed.
+        Failed task attempts that Spark retried to success count in
+        ``failed_tasks`` of a completed job. A running job reports zero
+        until it ends."""
         with self._jobs_mu:
             info = self._jobs[job_id]
-        completed = info.status == "COMPLETED"
-        tasks = info.metrics.get("num_tasks", 0)
-        stages = info.metrics.get("num_stages", 0)
+        m = info.metrics
         end_ms = info.finished_ms
         out = {
             "job_id": info.job_id,
             "status": info.status.lower(),
             "start_time": _rfc3339(info.started_ms),
             "duration_ms": (end_ms or int(time.time() * 1000)) - info.started_ms,
-            "total_stages": stages,
-            "completed_stages": stages if completed else 0,
-            "current_stage": stages if completed else 0,
-            "total_tasks": tasks,
-            "completed_tasks": tasks if completed else 0,
-            "failed_tasks": 0,
-            "running_tasks": 0,
+            "total_stages": m.get("num_stages", 0),
+            "completed_stages": m.get("completed_stages", 0),
+            "current_stage": m.get("completed_stages", 0),
+            "total_tasks": m.get("num_tasks", 0),
+            "completed_tasks": m.get("completed_tasks", 0),
+            "failed_tasks": m.get("failed_tasks", 0),
+            "running_tasks": m.get("running_tasks", 0),
         }
         if end_ms is not None:
             out["end_time"] = _rfc3339(end_ms)

@@ -15,6 +15,9 @@ Spark-first differences from the reference:
   ``query_planner.go:249-255``);
 - reads are ``spark.read.parquet(<snapshot file list>)`` so Catalyst gets
   the real scan (column pruning, predicate pushdown, vectorized reader);
+  the log is the file index: Spark stats each listed file on the driver
+  and starts no listing job, whatever the file count (the session's
+  ``parallelPartitionDiscovery.threshold``, ``session.get_spark``);
 - compaction rewrite is real (coalesced re-write), not simulated.
 """
 

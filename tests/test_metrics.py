@@ -94,6 +94,23 @@ def test_failed_query_counted(server, lake, spark):
     assert vals['lakehouse_queries_total{status="failed"}'] >= 1
 
 
+def test_failed_query_reports_real_task_counts(lake, spark):
+    """A job that fails inside a Spark task reports the tasks it ran,
+    with the failed ones counted, not zeros."""
+    lake.create_table("ovf", [Field("id", "int64")])
+    lake.insert("ovf", spark.createDataFrame([(2**62,), (2**62,)], "id long"))
+    job_id = lake.submit_async(
+        {"table_name": "ovf", "aggregates": [{"function": "sum", "column": "id"}]}
+    )
+    with pytest.raises(RuntimeError):
+        lake.job_wait(job_id)  # ANSI sum overflows in a task
+    m = lake.query_metrics(job_id)
+    assert m["status"] == "failed"
+    assert m["failed_tasks"] >= 1
+    assert m["total_tasks"] >= m["completed_tasks"] + m["failed_tasks"]
+    assert m["completed_stages"] < m["total_stages"]
+
+
 def test_unknown_job_metrics_404(server):
     req = urllib.request.Request(
         f"http://127.0.0.1:{server.port}/queries/does-not-exist/metrics"

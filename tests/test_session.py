@@ -19,3 +19,16 @@ def test_get_spark_leaves_pythonpath_and_sys_path_alone(spark, monkeypatch):
     assert session.get_spark("mini_lakehouse_tests", cpus=8, shuffle_partitions=8) is spark
     assert os.environ.get("PYTHONPATH") == pythonpath
     assert sys.path == path
+
+
+def test_default_driver_heap_fits_the_machine(spark, monkeypatch):
+    """Without $SPARK_GRAFT_DRIVER_MEM the driver heap is capped at half
+    of physical memory (48g at most), so the JVM cannot grow past what
+    the machine has; the running session was built with that default."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    want = f"{min(48 * 1024, phys_mb // 2)}m"
+    assert session._default_driver_mem() == want
+    monkeypatch.setattr(os, "sysconf", lambda name: 2**17 if "PAGES" in name else 2**20)
+    assert session._default_driver_mem() == "49152m"  # 128 GiB machine
+    if "SPARK_GRAFT_DRIVER_MEM" not in os.environ:
+        assert spark.conf.get("spark.driver.memory") == want

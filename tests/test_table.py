@@ -13,8 +13,8 @@ from mini_lakehouse_control_plane_executor_spark.table.schema import Field
 SCHEMA = [Field("k", "int64"), Field("v", "string"), Field("x", "float64")]
 
 
-def _df(spark, lo, hi):
-    return spark.range(lo, hi).select(
+def _df(spark, lo, hi, partitions=None):
+    return spark.range(lo, hi, numPartitions=partitions).select(
         F.col("id").alias("k"),
         F.concat(F.lit("v"), F.col("id")).alias("v"),
         (F.col("id") * 1.5).alias("x"),
@@ -62,6 +62,38 @@ def test_stats_pruning(lake, spark):
     assert lake.query(SimpleQuery(table_name="t", filter="k >= 250")).count() == 50
     # Correctness unaffected when predicate matches nothing.
     assert t.read(prune_filter="k > 9999").count() == 0
+
+
+def test_read_and_sql_plan_without_spark_jobs(lake, spark):
+    """The log is the file index: planning a read of more files than
+    Spark's parallel-listing threshold (32 paths) must not start a Spark
+    job to list again the files the snapshot already names."""
+    import uuid
+
+    lake.create_table("big", SCHEMA)
+    lake.insert("big", _df(spark, 0, 6400, partitions=64))
+    t = lake.table("big")
+    assert len(t.snapshot().files) == 64
+
+    sc = spark.sparkContext
+    group = f"plan-{uuid.uuid4()}"
+    tracker = sc.statusTracker()
+    sc.setJobGroup(group, "planning only")
+    try:
+        before = set(tracker.getJobIdsForGroup(group))
+        full = t.read()
+        pruned = t.read(prune_filter="k >= 1600")  # keeps 48 of 64 files
+        counted = lake.sql("SELECT count(*) AS n FROM big")
+        # Execute under another group, so the planning group's jobs (the
+        # status tracker learns of them asynchronously) have long been
+        # recorded by the time it is read again.
+        sc.setJobGroup(f"run-{group}", "execution")
+        assert full.count() == 6400
+        assert pruned.count() == 4800
+        assert counted.collect()[0].n == 6400
+        assert set(tracker.getJobIdsForGroup(group)) == before
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
 
 
 def test_compaction_preserves_results(lake, spark):
