@@ -10,6 +10,7 @@ Job tracking (ids + status + row metrics) mirrors
 
 from __future__ import annotations
 
+import dataclasses
 import os
 import shutil
 import threading
@@ -17,7 +18,11 @@ import time
 import uuid
 from dataclasses import dataclass, field as dc_field
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.conversion import ArrowTableToRowsConversion
+from pyspark.sql.types import StructType
 
 from mini_lakehouse_control_plane_executor_spark.observability import log as _slog
 from mini_lakehouse_control_plane_executor_spark.observability import span as _span
@@ -78,6 +83,7 @@ COMPACT_MAX_CONCURRENT = 3  # compaction_service.go:654
 # kept in driver memory, so a SELECT * over a large table cannot OOM the
 # driver.
 RESULT_PREVIEW_ROWS = 100
+
 # Finished jobs beyond this count are evicted oldest-first (JobInfo and
 # result directory) so a long-lived server's job map is bounded.
 MAX_FINISHED_JOBS = 200
@@ -85,6 +91,34 @@ MAX_FINISHED_JOBS = 200
 # job's counters are read once the tracker shows all its Spark jobs
 # ended, waiting at most this long.
 TRACKER_SETTLE_S = 2.0
+
+
+def _read_result(
+    path: str, schema: StructType, limit: int | None = None
+) -> tuple[int, list[dict]]:
+    """(row count, first ``limit`` rows) of a result directory; all rows
+    when ``limit`` is None. Reads the part files its one Spark write left,
+    on the driver with pyarrow, in write order, and starts no Spark job:
+    the count is the sum of the footers' ``num_rows``, and reading stops
+    once ``limit`` rows are in hand. Rows go through Spark's own
+    Arrow-to-Row conversion (the one Spark Connect's ``collect`` uses), so
+    timestamps, dates, NaN and nulls come back as ``collect()`` returns
+    them."""
+    count, rows, left = 0, [], limit
+    for name in table_module.part_files(path):
+        with pq.ParquetFile(os.path.join(path, name)) as pf:
+            count += pf.metadata.num_rows
+            if left == 0:
+                continue
+            # 65,536 rows is pyarrow's own default batch size.
+            for batch in pf.iter_batches(batch_size=left or 65_536):
+                part = pa.Table.from_batches([batch]).slice(0, left)
+                rows += ArrowTableToRowsConversion.convert(part, schema)
+                if left is not None:
+                    left -= part.num_rows
+                    if left == 0:
+                        break
+    return count, [r.asDict(recursive=True) for r in rows]
 
 
 class LakehouseSession:
@@ -509,24 +543,23 @@ class LakehouseSession:
 
     # -- jobs ----------------------------------------------------------
 
-    def _planned_scan_metrics(self, q: SimpleQuery) -> dict:
-        """Input-side metrics from the pinned snapshot (after stats-based
-        file pruning) — what the executors will be handed to scan."""
-        try:
-            snap = self.table(q.table_name).snapshot(q.version)
-            files = snap.files
-            if q.filter:
-                from mini_lakehouse_control_plane_executor_spark.functions.filters import prune_files
+    def _pin_snapshot(self, q: SimpleQuery) -> tuple[SimpleQuery, dict]:
+        """Resolve the query's snapshot once: return the query pinned to
+        that version, and the input metrics of the files it will scan
+        there after stats-based pruning. A commit landing later changes
+        neither."""
+        snap = self.table(q.table_name).snapshot(q.version)
+        files = snap.files
+        if q.filter:
+            from mini_lakehouse_control_plane_executor_spark.functions.filters import prune_files
 
-                files = prune_files(files, q.filter, snap.schema)
-            return {
-                "input_files": len(files),
-                "input_bytes": sum(f.size for f in files),
-                # live rows: physical minus deletion-vector'd
-                "input_rows": sum(f.rows - f.dv_rows for f in files),
-            }
-        except Exception:
-            return {}
+            files = prune_files(files, q.filter, snap.schema)
+        return dataclasses.replace(q, version=snap.version), {
+            "input_files": len(files),
+            "input_bytes": sum(f.size for f in files),
+            # live rows: physical minus deletion-vector'd
+            "input_rows": sum(f.rows - f.dv_rows for f in files),
+        }
 
     def submit(self, q: SimpleQuery | dict) -> tuple[str, DataFrame]:
         """Synchronous job-tracked planning: returns (job_id, result df).
@@ -539,7 +572,8 @@ class LakehouseSession:
         with self._jobs_mu:
             self._jobs[job_id] = info
         try:
-            info.metrics.update(self._planned_scan_metrics(q))
+            q, scan_metrics = self._pin_snapshot(q)
+            info.metrics.update(scan_metrics)
             df = self.query(q)
             info.status = "COMPLETED"
             return job_id, df
@@ -590,20 +624,23 @@ class LakehouseSession:
             # cancel_job's cancelJobGroup covers the whole execution,
             # not just the result write.
             sc.setJobGroup(job_id, f"lakehouse-job-{job_id}")
-            info.metrics.update(self._planned_scan_metrics(q))
+            q, scan_metrics = self._pin_snapshot(q)
+            info.metrics.update(scan_metrics)
             df = self.query(q)
             # File-backed result sink: rows go to parquet at executor
-            # parallelism and NEVER materialize on the driver; only a
-            # bounded preview is collected.
+            # parallelism and NEVER materialize on the driver; the row
+            # count (footers) and a bounded preview are read back from
+            # the written files without another Spark job.
             result_path = os.path.join(self.root, "results", job_id)
             df.write.mode("overwrite").parquet(result_path)
-            result = self.spark.read.parquet(result_path)
-            preview = result.limit(RESULT_PREVIEW_ROWS).collect()
+            output_rows, preview = _read_result(
+                result_path, df.schema, RESULT_PREVIEW_ROWS
+            )
             info.extra["result_path"] = result_path
-            info.extra["preview"] = [r.asDict(recursive=True) for r in preview]
+            info.extra["preview"] = preview
             info.extra["schema"] = [f.name for f in df.schema.fields]
-            # Parquet footer count — metadata-only, no data scan.
-            info.metrics["output_rows"] = result.count()
+            info.extra["spark_schema"] = df.schema
+            info.metrics["output_rows"] = output_rows
             info.status = "COMPLETED"
         except Exception as exc:
             info.status = "FAILED"
@@ -811,12 +848,7 @@ class LakehouseSession:
         materialization happens HERE, at the caller's explicit request —
         the job runner itself never holds more than the preview."""
         info = self.job_wait(job_id, timeout_s)
-        path = info.extra["result_path"]
-        cols = info.extra["schema"]
-        return [
-            r.asDict(recursive=True)
-            for r in self.spark.read.parquet(path).select(*cols).collect()
-        ]
+        return _read_result(info.extra["result_path"], info.extra["spark_schema"])[1]
 
     def cancel_job(self, job_id: str) -> bool:
         """Best-effort async-job cancel, the reference's ``CancelQuery``

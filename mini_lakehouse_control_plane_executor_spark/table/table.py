@@ -286,6 +286,30 @@ def _footer_stats(path: str, fields: list[Field]) -> tuple[int, dict, dict]:
     return md.num_rows, mins, maxs
 
 
+_PART_TASK = re.compile(r"part-(\d+)")
+
+
+def part_files(directory: str) -> list[str]:
+    """Names of the Parquet part files one Spark write left in
+    ``directory``, in write order: by the write task's number compared as
+    an integer (``part-%05d`` stops being fixed-width past 99,999 tasks),
+    then by name. Checksums (``.*``) and markers (``_SUCCESS``) are left
+    out."""
+
+    def order(name: str) -> tuple[int, str]:
+        m = _PART_TASK.match(name)
+        return (int(m.group(1)) if m else -1, name)
+
+    return sorted(
+        (
+            f
+            for f in os.listdir(directory)
+            if f.endswith(".parquet") and not f.startswith((".", "_"))
+        ),
+        key=order,
+    )
+
+
 def constraint_violation_over_files(
     spark: SparkSession,
     schema,
@@ -888,11 +912,7 @@ class LakehouseTable:
             stage = os.path.join(self.tmp_dir, f"dv-{tag}")
             dv_df.coalesce(1).write.mode("overwrite").parquet(stage)
             os.makedirs(self.dv_dir, exist_ok=True)
-            part = next(
-                f
-                for f in sorted(os.listdir(stage))
-                if f.endswith(".parquet") and not f.startswith((".", "_"))
-            )
+            part = part_files(stage)[0]
             dv_name = f"dv-{uuid.uuid4()}.parquet"
             shutil.move(
                 os.path.join(stage, part), os.path.join(self.dv_dir, dv_name)
@@ -1509,11 +1529,7 @@ class LakehouseTable:
         harvest footer stats (``table_service.go:455-474``)."""
         fields = self.fields
         adds: list[FileAdd] = []
-        staged = sorted(
-            f for f in os.listdir(stage)
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        )
-        for i, fname in enumerate(staged):
+        for i, fname in enumerate(part_files(stage)):
             src = os.path.join(stage, fname)
             dst_name = f"part-{i:05d}-{uuid.uuid4()}.parquet"
             dst = os.path.join(self.data_dir, dst_name)

@@ -1,6 +1,7 @@
 """Async job lifecycle + execution metrics (reference
 QueryExecutionMetrics parity: distributed_query_executor.go:510-524)."""
 
+import os
 import threading
 import time
 
@@ -121,3 +122,158 @@ def test_finished_job_eviction_bounds_job_map(lake, spark, monkeypatch):
     # evicted jobs' result dirs are gone; surviving ones remain
     results_root = os.path.join(lake.root, "results")
     assert len(os.listdir(results_root)) <= 3
+
+
+def test_result_sink_adds_no_spark_job(lake, spark):
+    """The async job runs exactly the Spark jobs of writing its result:
+    the row count and preview come from the written files' footers and
+    rows on the driver, not from reading the result back through Spark."""
+    import uuid
+
+    lake.create_table("sj", SCHEMA)
+    lake.insert("sj", _df(spark, 0, 1000))
+    for q in (
+        SimpleQuery(table_name="sj", aggregates=[Aggregate("count", "*", "n")]),
+        SimpleQuery(table_name="sj", filter="k >= 500"),
+        SimpleQuery(
+            table_name="sj",
+            group_by=["v"],
+            aggregates=[Aggregate("max", "x", "m")],
+        ),
+    ):
+        sc = spark.sparkContext
+        group = f"ref-{uuid.uuid4()}"
+        sc.setJobGroup(group, "reference write")
+        try:
+            lake.query(q).write.parquet(os.path.join(lake.root, group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        want = lake._stage_counters(group)["spark_jobs"]
+        info = lake.job_wait(lake.submit_async(q))
+        assert info.metrics["spark_jobs"] == want, q
+
+
+EIGHT_TYPES = [
+    Field("i", "int32"),
+    Field("l", "int64"),
+    Field("f", "float32"),
+    Field("d", "float64"),
+    Field("s", "string"),
+    Field("b", "boolean"),
+    Field("dt", "date"),
+    Field("ts", "timestamp"),
+]
+
+
+def _collected(spark, path):
+    rows = [r.asDict(recursive=True) for r in spark.read.parquet(path).collect()]
+    return sorted(map(repr, rows))
+
+
+def test_preview_matches_spark_collect(lake, spark):
+    """The driver-side preview holds the values ``collect()`` returns for
+    every schema type, nulls, NaN and infinities included."""
+    import datetime as dt
+
+    from mini_lakehouse_control_plane_executor_spark.table.schema import to_spark_schema
+
+    nan, inf = float("nan"), float("inf")
+    rows = [
+        (1, 10, 1.5, 2.25, "a", True, dt.date(2024, 2, 29),
+         dt.datetime(2024, 2, 29, 23, 59, 59, 123456)),
+        (2, -(2**62), nan, -inf, "ü", False, dt.date(1969, 12, 31),
+         dt.datetime(1969, 12, 31, 23, 59, 59)),
+        (3, 2**62, -inf, nan, "", True, dt.date(1, 1, 1),
+         dt.datetime(2038, 1, 19, 3, 14, 8)),
+        (None, None, None, None, None, None, None, None),
+    ]
+    lake.create_table("types", EIGHT_TYPES)
+    lake.insert("types", spark.createDataFrame(rows, to_spark_schema(EIGHT_TYPES)))
+
+    info = lake.job_wait(lake.submit_async(SimpleQuery(table_name="types")))
+    assert info.metrics["output_rows"] == 4
+    want = _collected(spark, info.extra["result_path"])
+    assert sorted(map(repr, info.extra["preview"])) == want
+    assert sorted(map(repr, lake.job_result(info.job_id))) == want
+
+    grouped = SimpleQuery(
+        table_name="types",
+        group_by=["b"],
+        aggregates=[
+            Aggregate("avg", "d", "avg_d"),
+            Aggregate("min", "ts", "min_ts"),
+            Aggregate("max", "f", "max_f"),
+            Aggregate("count", "*", "n"),
+        ],
+    )
+    info = lake.job_wait(lake.submit_async(grouped))
+    assert info.metrics["output_rows"] == 3
+    assert sorted(map(repr, info.extra["preview"])) == _collected(
+        spark, info.extra["result_path"]
+    )
+
+
+def test_empty_result(lake, spark):
+    from mini_lakehouse_control_plane_executor_spark.api.rest import LakehouseRestServer
+
+    lake.create_table("em", SCHEMA)
+    lake.insert("em", _df(spark, 0, 100))
+    for flt in ("k < 0", "x < 0"):  # pruned to no file / scanned, no match
+        info = lake.job_wait(lake.submit_async(SimpleQuery(table_name="em", filter=flt)))
+        assert info.metrics["output_rows"] == 0
+        assert info.extra["preview"] == []
+        assert lake.job_result(info.job_id) == []
+        srv = LakehouseRestServer(lake)
+        try:
+            status, body = srv.query_results(info.job_id)
+        finally:
+            srv.httpd.server_close()
+        assert status == 200 and body["rows"] == [] and body["preview_only"] is False
+
+
+def test_job_result_keeps_result_order(lake, spark):
+    """A result written as several part files reads back in write order.
+    Spark's own reader packs files into partitions largest first, so a
+    pad that grows with ``k`` would scramble an ordered result."""
+    lake.create_table("ord", [Field("k", "int64"), Field("pad", "string")])
+    lake.insert(
+        "ord",
+        spark.range(20_000).select(
+            F.col("id").alias("k"), F.expr("repeat('x', cast(id / 50 as int))").alias("pad")
+        ),
+    )
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        job_id = lake.submit_async(SimpleQuery(table_name="ord", order_by=["k"]))
+        rows = lake.job_result(job_id)
+    finally:
+        spark.conf.set(key, old)
+    parts = [
+        f for f in os.listdir(lake.job_status(job_id).extra["result_path"])
+        if f.startswith("part-")
+    ]
+    assert len(parts) > 1
+    ks = [r["k"] for r in rows]
+    assert ks == list(range(20_000))
+
+
+def test_job_pins_one_snapshot(lake, spark, monkeypatch):
+    """Input metrics describe the version the job ran: a commit landing
+    between planning and execution must change neither."""
+    lake.create_table("pin", SCHEMA)
+    lake.insert("pin", _df(spark, 0, 10))
+    real_query = lake.query
+
+    def racing_query(q):
+        lake.insert("pin", _df(spark, 10, 25))
+        return real_query(q)
+
+    monkeypatch.setattr(lake, "query", racing_query)
+    q = SimpleQuery(table_name="pin", aggregates=[Aggregate("count", "*", "n")])
+    info = lake.job_wait(lake.submit_async(q))
+    assert info.metrics["input_rows"] == lake.job_result(info.job_id)[0]["n"] == 10
+
+    job_id, df = lake.submit(q)
+    assert lake.job_status(job_id).metrics["input_rows"] == df.collect()[0]["n"] == 25
