@@ -70,14 +70,20 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from pyspark.errors import PySparkException
 
 from mini_lakehouse_control_plane_executor_spark.table.catalog import LakehouseSession
-from mini_lakehouse_control_plane_executor_spark.table.schema import Field, SchemaError
+from mini_lakehouse_control_plane_executor_spark.table.schema import (
+    Field,
+    SchemaError,
+    arrow_types,
+    to_spark_schema,
+)
 
 # Failure classes a malformed client body produces on the write paths:
 # non-dict row elements raise TypeError, missing row fields KeyError,
-# bad literals/exprs/constraint names ValueError (SchemaError subclasses
-# it), and createDataFrame type mismatches / in-write CHECK violations
-# PySparkException. Anything else (AttributeError, OSError from the
-# staging dir, ...) is a genuine server defect and must surface as 500.
+# row keys outside the schema and bad literals/exprs/constraint names
+# ValueError (SchemaError subclasses it), and row-verifier type
+# mismatches / in-write CHECK violations PySparkException. Anything else
+# (AttributeError, OSError from the staging dir, ...) is a genuine
+# server defect and must surface as 500.
 _CLIENT_INPUT_ERRORS = (ValueError, KeyError, TypeError, PySparkException)
 
 
@@ -120,6 +126,47 @@ def _fields_from_api(schema: dict) -> list[Field]:
         Field(f.get("name", ""), f.get("type", ""), bool(f.get("nullable", True)))
         for f in fields
     ]
+
+
+def _rows_to_arrow(rows: list, fields: list[Field]) -> "pa.Table":
+    """Request rows (JSON objects) -> a ``pa.Table`` in table-schema
+    order, with exactly the acceptance and stored values of
+    ``createDataFrame(<tuples>, schema)``: every row first passes
+    PySpark's own row verifier (the ``verifySchema=True`` check), since
+    Arrow would otherwise coerce silently (``1.5`` into an int column
+    stored as ``1``, ``true`` into a float column as ``1.0``, JSON
+    numbers into a date column as epoch days). Only a string column
+    takes any JSON value; it stores Python ``str()`` of it, with a bare
+    boolean lower-cased, as the row path does. A key outside the schema
+    is an error: silently dropping data is never correct."""
+    import pyarrow as pa
+    from pyspark.sql.types import _make_type_verifier
+
+    names = [f.name for f in fields]
+    known = set(names)
+    verify = _make_type_verifier(to_spark_schema(fields))
+    tuples = []
+    for r in rows:
+        if not isinstance(r, dict):
+            raise TypeError(f"row must be a JSON object, got {type(r).__name__}")
+        unknown = sorted(set(r) - known)
+        if unknown:
+            raise ValueError(f"row key(s) {unknown} not in table schema")
+        row = tuple(r[n] for n in names)
+        verify(row)
+        tuples.append(row)
+    types = arrow_types()
+    arrays = []
+    for f, col in zip(fields, zip(*tuples)):
+        if f.type == "string":
+            col = [
+                v if v is None or isinstance(v, str)
+                else str(v).lower() if isinstance(v, bool)
+                else str(v)
+                for v in col
+            ]
+        arrays.append(pa.array(col, type=types[f.type]))
+    return pa.Table.from_arrays(arrays, names=names)
 
 
 def _fields_to_api(fields: list[Field]) -> dict:
@@ -244,13 +291,19 @@ class LakehouseRestServer:
             raise _ApiError(400, "Missing rows")
         t = self._table(name)
         try:
-            df = self.lake.spark.createDataFrame(
-                [tuple(r[f.name] for f in t.fields) for r in rows], t.spark_schema
-            )
-            version = t.insert(df, txn_id=body.get("txn_id"))
+            version = t.insert(self._rows_df(t, rows), txn_id=body.get("txn_id"))
         except _CLIENT_INPUT_ERRORS as exc:
             raise _ApiError(400, f"Insert failed: {exc}")
         return 200, {"success": True, "new_version": version}
+
+    def _rows_df(self, t, rows: list):
+        """Inline request rows as a driver-local DataFrame: an Arrow
+        table, so the write plans as one ``LocalTableScan`` and lands as
+        one file (``LakehouseTable.insert``)."""
+        fields = t.fields
+        return self.lake.spark.createDataFrame(
+            _rows_to_arrow(rows, fields), to_spark_schema(fields)
+        )
 
     def execute_query_async(self, body: dict):
         try:
@@ -378,11 +431,8 @@ class LakehouseRestServer:
             raise _ApiError(400, "Missing rows or key")
         t = self._table(name)
         try:
-            df = self.lake.spark.createDataFrame(
-                [tuple(r[f.name] for f in t.fields) for r in rows], t.spark_schema
-            )
             version, n_upd, n_ins = t.merge(
-                df,
+                self._rows_df(t, rows),
                 key,
                 txn_id=body.get("txn_id"),
                 when_matched=body.get("when_matched"),

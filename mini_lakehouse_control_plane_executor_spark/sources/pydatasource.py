@@ -49,7 +49,10 @@ from pyspark.sql.datasource import (
 )
 
 from mini_lakehouse_control_plane_executor_spark.table.log import TransactionLog
-from mini_lakehouse_control_plane_executor_spark.table.schema import to_spark_schema
+from mini_lakehouse_control_plane_executor_spark.table.schema import (
+    arrow_types,
+    to_spark_schema,
+)
 
 _OPS = {
     EqualTo: "=",
@@ -58,26 +61,6 @@ _OPS = {
     LessThan: "<",
     LessThanOrEqual: "<=",
 }
-
-
-def _pa_types():
-    """Schema-type -> pyarrow-type map, built lazily (executor-side
-    workers import pyarrow on demand). ONE definition shared by the
-    reader's evolution-NULL backfill and the writer's typed arrays — a
-    type added to only one of two copies would silently diverge the
-    read and write paths (r12 review)."""
-    import pyarrow as pa
-
-    return {
-        "int32": pa.int32(),
-        "int64": pa.int64(),
-        "float32": pa.float32(),
-        "float64": pa.float64(),
-        "string": pa.string(),
-        "boolean": pa.bool_(),
-        "date": pa.date32(),
-        "timestamp": pa.timestamp("us", tz="UTC"),
-    }
 
 
 @dataclass
@@ -296,7 +279,7 @@ class _MinilakeReader(DataSourceReader):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        pa_types = _pa_types()
+        pa_types = arrow_types()
         fields = self._schema_fields
         deleted: set[int] = set()
         if partition.dv_path:
@@ -579,7 +562,7 @@ class _MinilakeWriter(DataSourceWriter):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        pa_types = _pa_types()
+        pa_types = arrow_types()
         by_name = {f.name: f for f in self._fields}
         rows = [tuple(r) for r in iterator]
         names = [f.name for f in self._fields]

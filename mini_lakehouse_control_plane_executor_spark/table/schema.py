@@ -27,6 +27,26 @@ _TYPE_MAP: dict[str, T.DataType] = {
 }
 _REVERSE_TYPE_MAP = {type(v): k for k, v in _TYPE_MAP.items()}
 
+
+def arrow_types() -> dict:
+    """Schema-type -> pyarrow-type map, built lazily (executor-side
+    workers import pyarrow on demand). ONE definition shared by the data
+    source reader's evolution-NULL backfill, its writer's typed arrays
+    and the REST row builder: a type added to only one of several copies
+    would silently diverge the read and write paths."""
+    import pyarrow as pa
+
+    return {
+        "int32": pa.int32(),
+        "int64": pa.int64(),
+        "float32": pa.float32(),
+        "float64": pa.float64(),
+        "string": pa.string(),
+        "boolean": pa.bool_(),
+        "date": pa.date32(),
+        "timestamp": pa.timestamp("us", tz="UTC"),
+    }
+
 _NAME_RE = re.compile(r"^[A-Za-z0-9_]+$")
 
 

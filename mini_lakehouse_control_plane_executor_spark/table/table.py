@@ -671,6 +671,12 @@ class LakehouseTable:
         """Commit ``df`` as a new version (staged write → move → OCC
         commit with bounded retry). Idempotent per ``txn_id``.
 
+        Driver-local inputs (``df.isLocal()``: pandas or Arrow frames,
+        REST rows) are written as right-sized files with no shuffle: one
+        file per ``COMPACT_TARGET_FILE_SIZE`` of input by the plan's size
+        estimate, so a small append is one task and one file. Other
+        inputs keep their own partitioning.
+
         ``mode='append'`` adds files; ``mode='overwrite'`` additionally
         removes every file visible at commit time (refreshed on each OCC
         retry, so a concurrent append cannot survive an overwrite that
@@ -718,6 +724,14 @@ class LakehouseTable:
             fields = self.fields
         schema = to_spark_schema(fields)
         _validate_cluster_args(fields, cluster_by, zorder_by)
+        # A driver-local frame (LocalRelation: pandas/Arrow input, REST
+        # rows) is sized by its plan statistics; decided before the
+        # guards below wrap the plan.
+        local_bytes = (
+            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+            if df.isLocal() and not (cluster_by or zorder_by)
+            else None
+        )
         # Align column order/types to the table schema before writing.
         # NOT NULL enforcement rides the same projection (raise_error
         # fires inside the write pass — no extra scan), and also catches
@@ -750,6 +764,12 @@ class LakehouseTable:
                 df, n_part, cluster_by, zorder_by,
                 {f.name: f.type for f in fields},
             )
+        elif local_bytes is not None:
+            # Right-size driver-local writes: one file per
+            # COMPACT_TARGET_FILE_SIZE of input instead of one per core
+            # (coalesce never raises the partition count, and adds no
+            # shuffle), so a small append is one task and one file.
+            df = df.coalesce(max(1, -(-int(local_bytes) // COMPACT_TARGET_FILE_SIZE)))
 
         self._sweep_stale_stages()
         stage = os.path.join(self.tmp_dir, txn_id)

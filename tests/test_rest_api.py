@@ -725,3 +725,148 @@ def test_delete_update_rows_over_http(server, spark):
     _call(server, "POST", "/tables/du/update",
           {"filter": "price > 0", "set": {"price": "price"},
            "mode": "bogus"}, expect=400)
+
+
+# One value of each JSON kind: int, int beyond int32, float, bool, str,
+# null, array, object.
+_JSON_KINDS = [7, 2**40, 1.5, True, "abc", None, [1, 2], {"a": 1}]
+_ALL_TYPES = ["int32", "int64", "float32", "float64", "string", "boolean", "date", "timestamp"]
+
+
+def _status(srv, method, path, body):
+    req = urllib.request.Request(
+        f"http://127.0.0.1:{srv.port}{path}",
+        method=method,
+        data=json.dumps(body).encode(),
+        headers={"Content-Type": "application/json"},
+    )
+    try:
+        with urllib.request.urlopen(req) as resp:
+            return resp.status
+    except urllib.error.HTTPError as err:
+        return err.code
+
+
+def _row_list_status(lake, spark, name, op, rows):
+    """Reference: the row-list ``createDataFrame`` path the REST
+    handlers used before their rows became an Arrow table."""
+    from mini_lakehouse_control_plane_executor_spark.api.rest import _CLIENT_INPUT_ERRORS
+
+    t = lake.table(name)
+    try:
+        df = spark.createDataFrame(
+            [tuple(r[f.name] for f in t.fields) for r in rows], t.spark_schema
+        )
+        if op == "insert":
+            t.insert(df)
+        else:
+            t.merge(df, "k")
+    except _CLIENT_INPUT_ERRORS:
+        return 400
+    return 200
+
+
+def _stored(lake, name):
+    return {r["k"]: repr(r.asDict()) for r in lake.table(name).read().collect()}
+
+
+def _both(server, lake, spark, op, rows):
+    """(REST status, row-list status) of one request, each against its
+    own table."""
+    got = _status(server, "POST", f"/tables/mx_rest/{op}", {"rows": rows, "key": "k"})
+    return got, _row_list_status(lake, spark, "mx_ref", op, rows)
+
+
+def test_rest_rows_type_matrix_matches_row_list_path(server, lake, spark):
+    """Every schema type x every JSON value kind: REST insert and merge
+    (Arrow rows) give the status and stored value of the row-list path,
+    computed here as the reference."""
+    from mini_lakehouse_control_plane_executor_spark.table.schema import Field
+
+    fields = [Field("k", "int64", False)] + [Field(f"c_{t}", t) for t in _ALL_TYPES]
+    for name in ("mx_rest", "mx_ref"):
+        lake.create_table(name, fields)
+    cells = []
+    for typ in _ALL_TYPES:
+        for v in _JSON_KINDS:
+            row = {f.name: None for f in fields} | {"k": len(cells), f"c_{typ}": v}
+            cells.append((typ, v, row))
+    # Insert: one request per cell.
+    status = {}
+    for typ, v, row in cells:
+        got, want = _both(server, lake, spark, "insert", [row])
+        assert got == want, ("insert", typ, v, got, want)
+        status[typ, json.dumps(v)] = got
+    # Merge (new keys, so every accepted row is inserted): each rejected
+    # cell alone, then the accepted cells in one request, which
+    # succeeds only if every one of its rows is accepted.
+    accepted = []
+    for typ, v, row in cells:
+        row = row | {"k": row["k"] + len(cells)}
+        if status[typ, json.dumps(v)] == 200:
+            accepted.append(row)
+        else:
+            assert _both(server, lake, spark, "merge", [row]) == (400, 400), (typ, v)
+    assert _both(server, lake, spark, "merge", accepted) == (200, 200)
+    # Any JSON value into a string column keeps the row path's text.
+    texts = [1e20, 0.1, False, 42, {"a": 1}, [1, 2], True]
+    rows = [
+        {f.name: None for f in fields} | {"k": 1000 + i, "c_string": v}
+        for i, v in enumerate(texts)
+    ]
+    assert _both(server, lake, spark, "insert", rows) == (200, 200)
+    assert _stored(lake, "mx_rest") == _stored(lake, "mx_ref")
+    assert [
+        r["c_string"]
+        for r in lake.table("mx_rest").read().filter("k >= 1000").orderBy("k").collect()
+    ] == ["1e+20", "0.1", "false", "42", "{'a': 1}", "[1, 2]", "true"]
+    # Arrow would coerce these silently; they stay 400s.
+    for typ, v in [("int32", 1.5), ("int64", 1.5), ("date", 7), ("timestamp", 7),
+                   ("date", 1.5), ("float32", True), ("float64", True)]:
+        assert status[typ, json.dumps(v)] == 400, (typ, v)
+    assert sum(s == 200 for s in status.values()) == len(accepted) == 21
+
+
+@pytest.mark.parametrize("op", ["insert", "merge"])
+def test_rest_rows_constraints_match_row_list_path(server, lake, spark, op):
+    """NOT NULL and CHECK violations are 400s on both paths; a
+    non-string into a NOT NULL string column is stored as text."""
+    from mini_lakehouse_control_plane_executor_spark.table.schema import Field
+
+    fields = [Field("k", "int64", False), Field("s", "string", False), Field("n", "int64")]
+    for name in ("cx_rest", "cx_ref"):
+        lake.create_table(name, fields, constraints={"n_nonneg": "n >= 0"})
+    cases = [
+        ({"k": 1, "s": "a", "n": 1}, 200),
+        ({"k": 2, "s": None, "n": 1}, 400),   # NOT NULL string
+        ({"k": None, "s": "b", "n": 1}, 400),  # NOT NULL key
+        ({"k": 3, "s": "c", "n": -1}, 400),   # CHECK
+        ({"k": 4, "s": 5, "n": None}, 200),   # non-string into NOT NULL string
+        ({"k": 5, "s": True, "n": 2}, 200),
+        ({"k": 6, "s": "d"}, 400),            # missing field
+    ]
+    for row, expect in cases:
+        got = _status(server, "POST", f"/tables/cx_rest/{op}", {"rows": [row], "key": "k"})
+        assert got == expect == _row_list_status(lake, spark, "cx_ref", op, [row]), row
+    assert _stored(lake, "cx_rest") == _stored(lake, "cx_ref")
+    assert {r["k"]: r["s"] for r in lake.table("cx_rest").read().collect()} == {
+        1: "a", 4: "5", 5: "true"
+    }
+
+
+@pytest.mark.parametrize("op", ["insert", "merge"])
+def test_rest_rows_unknown_keys_are_400(server, lake, spark, op):
+    """A row key outside the table schema is rejected by name, not
+    silently dropped (the library insert raises on extra columns too)."""
+    from mini_lakehouse_control_plane_executor_spark.table.schema import Field
+
+    lake.create_table("uk", [Field("g", "int64"), Field("w", "int64")])
+    out = _call(
+        server, "POST", f"/tables/uk/{op}",
+        {"rows": [{"g": 1, "w": 2, "wieght": 3}], "key": "g"}, expect=400,
+    )
+    assert "wieght" in out["error"]
+    assert lake.table("uk").read().count() == 0
+    assert _call(
+        server, "POST", f"/tables/uk/{op}", {"rows": [{"g": 1, "w": 2}], "key": "g"}
+    )["success"]

@@ -1112,3 +1112,153 @@ def test_history_limit_reads_tail_only(lake, spark):
     for lim in (1, 2, 3, len(full), len(full) + 5):
         assert t.history(limit=lim) == full[:lim]
     assert [h["schema_changed"] for h in full[:2]] == [False, True]
+
+
+def _write_plans(monkeypatch):
+    """Record the physical plan of every DataFrame the table layer
+    writes with ``DataFrameWriter.parquet``."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    plans = []
+    orig = DataFrameWriter.parquet
+
+    def parquet(self, path, *a, **k):
+        plans.append(self._df._jdf.queryExecution().executedPlan().toString())
+        return orig(self, path, *a, **k)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    return plans
+
+
+def _pandas_df(spark, n):
+    import pandas as pd
+
+    return spark.createDataFrame(
+        pd.DataFrame(
+            {"k": range(n), "v": [f"v{i}" for i in range(n)], "x": [i * 1.5 for i in range(n)]}
+        )
+    )
+
+
+def test_rest_insert_writes_one_local_file(lake, spark, monkeypatch):
+    """A small REST insert is driver-local (an Arrow LocalTableScan) and
+    lands as exactly one file, not one per core."""
+    from mini_lakehouse_control_plane_executor_spark.api.rest import LakehouseRestServer
+
+    lake.create_table("r1", SCHEMA)
+    plans = _write_plans(monkeypatch)
+    rows = [{"k": i, "v": f"v{i}", "x": i * 0.5} for i in range(5)]
+    srv = LakehouseRestServer(lake)
+    try:
+        status, out = srv.insert_rows("r1", {"rows": rows})
+    finally:
+        srv.httpd.server_close()
+    assert status == 200 and out["new_version"] == 2
+    t = lake.table("r1")
+    assert len(t.snapshot().files) == 1
+    assert sorted(r.k for r in t.read().collect()) == list(range(5))
+    assert len(plans) == 1 and "LocalTableScan" in plans[0], plans
+    assert "Exchange" not in plans[0], plans
+
+
+def test_local_pandas_insert_writes_one_file(lake, spark):
+    lake.create_table("p1", SCHEMA)
+    df = _pandas_df(spark, 1000)
+    assert df.isLocal() and df.rdd.getNumPartitions() > 1
+    lake.insert("p1", df)
+    t = lake.table("p1")
+    assert len(t.snapshot().files) == 1
+    assert t.read().count() == 1000
+
+
+def test_local_insert_splits_at_target_file_size(lake, spark, monkeypatch):
+    """A local frame larger than the compaction target still writes in
+    parallel: ceil(size / target) files, capped at its partition count."""
+    df = _pandas_df(spark, 1000)
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    n_part = df.rdd.getNumPartitions()
+    assert n_part > 3
+    lake.create_table("p3", SCHEMA)
+    t = lake.table("p3")
+    monkeypatch.setattr(table_mod, "COMPACT_TARGET_FILE_SIZE", -(-size // 3))
+    t.insert(df)
+    assert len(t.snapshot().files) == 3
+    monkeypatch.setattr(table_mod, "COMPACT_TARGET_FILE_SIZE", 1)
+    t.insert(df)
+    assert len(t.snapshot().files) == 3 + n_part
+    assert t.read().count() == 2000
+
+
+def test_distributed_insert_keeps_its_partitioning(lake, spark):
+    lake.create_table("d8", SCHEMA)
+    lake.insert("d8", _df(spark, 0, 800, partitions=8))
+    assert len(lake.table("d8").snapshot().files) == 8
+
+
+def test_local_insert_with_cluster_by_keeps_range_layout(lake, spark):
+    lake.create_table("lc", SCHEMA)
+    t = lake.table("lc")
+    t.insert(_pandas_df(spark, 1000), cluster_by=["k"])
+    files = sorted(t.snapshot().files, key=lambda f: f.min_values["k"])
+    assert len(files) > 1
+    for a, b in zip(files, files[1:]):
+        assert a.max_values["k"] < b.min_values["k"]
+    assert t.read().count() == 1000
+
+
+def test_concurrent_sql_pinned_versions_during_inserts(lake, spark):
+    """sql() callers pinned to different versions of one table, racing
+    each other and a writer that keeps committing: every result equals
+    its pinned version's row count (the view-registration lock keeps
+    one caller from binding another's snapshot)."""
+    import sys
+    import threading
+
+    lake.create_table("cs", SCHEMA)
+    counts = {}
+    total = 0
+    for size in (10, 20, 30):
+        total += size
+        counts[lake.insert("cs", _df(spark, total - size, total))] = total
+
+    errors = []
+    stop = threading.Event()
+
+    def write():
+        lo = total
+        try:
+            while not stop.is_set():
+                lake.insert("cs", _df(spark, lo, lo + 5))
+                lo += 5
+        except Exception as exc:  # pragma: no cover - failure detail
+            errors.append(exc)
+
+    def read(version, expect):
+        try:
+            for _ in range(6):
+                n = lake.sql(
+                    "SELECT count(*) AS n FROM cs", versions={"cs": version}
+                ).collect()[0].n
+                assert n == expect, f"v{version} saw {n}, expected {expect}"
+        except Exception as exc:  # pragma: no cover - failure detail
+            errors.append(exc)
+
+    writer = threading.Thread(target=write)
+    readers = [
+        threading.Thread(target=read, args=(v, n))
+        for v, n in counts.items()
+        for _ in range(2)
+    ]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        writer.start()
+        [r.start() for r in readers]
+        [r.join(timeout=300) for r in readers]
+        stop.set()
+        writer.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in [writer, *readers])
+    assert not errors, errors
+    assert lake.table("cs").log.latest_version() > max(counts)
