@@ -31,9 +31,9 @@ _REVERSE_TYPE_MAP = {type(v): k for k, v in _TYPE_MAP.items()}
 def arrow_types() -> dict:
     """Schema-type -> pyarrow-type map, built lazily (executor-side
     workers import pyarrow on demand). ONE definition shared by the data
-    source reader's evolution-NULL backfill, its writer's typed arrays
-    and the REST row builder: a type added to only one of several copies
-    would silently diverge the read and write paths."""
+    source reader's evolution-NULL backfill and the REST row builder: a
+    type added to only one of two copies would silently diverge the read
+    and write paths."""
     import pyarrow as pa
 
     return {

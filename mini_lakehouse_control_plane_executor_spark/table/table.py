@@ -310,45 +310,6 @@ def part_files(directory: str) -> list[str]:
     )
 
 
-def constraint_violation_over_files(
-    spark: SparkSession,
-    schema,
-    abs_paths: list[str],
-    constraints: dict[str, str],
-) -> str | None:
-    """Name of the first CHECK constraint any row in ``abs_paths``
-    violates (TRUE/NULL passes, FALSE fails — SQL CHECK semantics), else
-    None. ONE aggregate scan evaluates every constraint; the files are
-    already schema-aligned (written post-cast), so this matches the
-    in-write ``_constraint_guard`` exactly. Shared by the native insert
-    commit loop and the ``minilake`` DataSource writer."""
-    if not constraints or not abs_paths:
-        return None
-    names = sorted(constraints)
-    row = (
-        spark.read.schema(schema)
-        .parquet(*abs_paths)
-        .agg(
-            *[
-                F.count(
-                    F.when(
-                        ~F.coalesce(
-                            F.expr(constraints[n]).cast("boolean"), F.lit(True)
-                        ),
-                        1,
-                    )
-                ).alias(n)
-                for n in names
-            ]
-        )
-        .collect()[0]
-    )
-    for n in names:
-        if row[n]:
-            return n
-    return None
-
-
 class LakehouseTable:
     def __init__(self, spark: SparkSession, root: str, name: str):
         self.spark = spark
@@ -773,8 +734,8 @@ class LakehouseTable:
 
         self._sweep_stale_stages()
         stage = os.path.join(self.tmp_dir, txn_id)
-        df.write.mode("overwrite").parquet(stage)
         try:
+            df.write.mode("overwrite").parquet(stage)
             adds = self._promote_staged(stage)
         finally:
             shutil.rmtree(stage, ignore_errors=True)
@@ -881,8 +842,8 @@ class LakehouseTable:
             keep = src.filter(~F.coalesce(pred, F.lit(False))).coalesce(
                 max(1, len(candidates))
             )
-            keep.write.mode("overwrite").parquet(stage)
             try:
+                keep.write.mode("overwrite").parquet(stage)
                 adds = self._promote_staged(stage)
             finally:
                 shutil.rmtree(stage, ignore_errors=True)
@@ -930,14 +891,16 @@ class LakehouseTable:
             if carry:
                 dv_df = dv_df.unionByName(self._dv_rows(carry))
             stage = os.path.join(self.tmp_dir, f"dv-{tag}")
-            dv_df.coalesce(1).write.mode("overwrite").parquet(stage)
-            os.makedirs(self.dv_dir, exist_ok=True)
-            part = part_files(stage)[0]
             dv_name = f"dv-{uuid.uuid4()}.parquet"
-            shutil.move(
-                os.path.join(stage, part), os.path.join(self.dv_dir, dv_name)
-            )
-            shutil.rmtree(stage, ignore_errors=True)
+            try:
+                dv_df.coalesce(1).write.mode("overwrite").parquet(stage)
+                os.makedirs(self.dv_dir, exist_ok=True)
+                shutil.move(
+                    os.path.join(stage, part_files(stage)[0]),
+                    os.path.join(self.dv_dir, dv_name),
+                )
+            finally:
+                shutil.rmtree(stage, ignore_errors=True)
             rel_dv = os.path.join("_dv", dv_name)
             adds = [
                 _dc_replace(
@@ -1133,8 +1096,8 @@ class LakehouseTable:
                 )
             out = out.coalesce(max(1, len(candidates)))
             stage = os.path.join(self.tmp_dir, txn_id)
-            out.write.mode("overwrite").parquet(stage)
             try:
+                out.write.mode("overwrite").parquet(stage)
                 adds = self._promote_staged(stage)
             finally:
                 shutil.rmtree(stage, ignore_errors=True)
@@ -1317,28 +1280,28 @@ class LakehouseTable:
                 *self._constraint_guard([source[f.name] for f in fields], source)
             )
         source = source.persist(StorageLevel.MEMORY_AND_DISK)
-        if when_matched is not None:
-            dups = (
-                source.groupBy(key)
-                .agg(F.count(F.lit(1)).alias("n"))
-                .filter(F.col("n") > 1)
-                .limit(1)
-                .count()
-            )
-            if dups:
-                source.unpersist()
-                raise ValueError(
-                    "when_matched merge requires unique source keys "
-                    "(a target row matched multiple source rows)"
-                )
-        bounds = source.agg(
-            F.min(key).alias("lo"), F.max(key).alias("hi"), F.count(F.lit(1)).alias("n")
-        ).collect()[0]
-        if bounds["n"] == 0:
-            source.unpersist()
-            raise ValueError("merge source is empty")
-
         try:
+            if when_matched is not None:
+                dups = (
+                    source.groupBy(key)
+                    .agg(F.count(F.lit(1)).alias("n"))
+                    .filter(F.col("n") > 1)
+                    .limit(1)
+                    .count()
+                )
+                if dups:
+                    raise ValueError(
+                        "when_matched merge requires unique source keys "
+                        "(a target row matched multiple source rows)"
+                    )
+            bounds = source.agg(
+                F.min(key).alias("lo"),
+                F.max(key).alias("hi"),
+                F.count(F.lit(1)).alias("n"),
+            ).collect()[0]
+            if bounds["n"] == 0:
+                raise ValueError("merge source is empty")
+
             for attempt in range(COMMIT_MAX_RETRIES + 1):
                 snap = self.log.snapshot()
                 # Re-resolve the schema PER ATTEMPT: merge rewrites the
@@ -1368,93 +1331,93 @@ class LakehouseTable:
                 dv_adds: list[FileAdd] = []
                 dv_abs: str | None = None
                 stage = os.path.join(self.tmp_dir, txn_id)
-                # dv-aware (and [] returns an empty frame): neither mode
-                # may resurrect already-deleted rows of dv-carrying
-                # files. Positions ride along for the merge-on-read
-                # branch; ``cur`` is the live-row view both modes share.
-                live, src_col, pos_col = self._scan_files(
-                    candidates, schema, with_positions=True
-                )
-                cur = live.drop(src_col, pos_col)
-                src_keys = source.select(key).distinct()
-                if candidates:
-                    if mor:
-                        # Matched target rows become dv entries instead
-                        # of a candidate-file rewrite; their replacement
-                        # rows (source / when_matched output) append as
-                        # fresh files below.
-                        matched_pos = live.join(
-                            src_keys, key, "left_semi"
-                        ).select(
-                            F.col(src_col).alias("src"),
-                            F.col(pos_col).alias("pos"),
-                        )
-                        dv_adds, new_counts, dv_abs = self._write_dv(
-                            matched_pos, candidates, f"{txn_id}-a{attempt}"
-                        )
-                        n_updated = sum(new_counts.values())
-                    else:
-                        n_updated = cur.join(src_keys, key, "left_semi").count()
-                        kept = cur.join(src_keys, key, "left_anti")
-                        kept.coalesce(max(1, len(candidates))).write.mode(
-                            "overwrite"
-                        ).parquet(os.path.join(stage, "kept"))
-                    if when_matched is not None:
-                        matched = cur.alias("target").join(
-                            source.alias("source"),
-                            F.col(f"target.{key}") == F.col(f"source.{key}"),
-                        )
-                        updated = matched.select(
-                            *[
-                                _not_null_guard(
-                                    F.expr(when_matched[f.name]).cast(
-                                        schema[f.name].dataType
-                                    ),
-                                    f,
-                                ).alias(f.name)
-                                if f.name in when_matched
-                                else F.col(f"target.{f.name}").alias(f.name)
-                                for f in fields
-                            ]
-                        )
-                        # when_matched assignments produce NEW values, so
-                        # they pass the same CHECK gate as inserts (the
-                        # source-side guard above cannot cover them).
-                        if self.constraints:
-                            updated = updated.select(
-                                *self._constraint_guard(
-                                    [updated[f.name] for f in fields], updated
-                                )
-                            )
-                        updated.coalesce(max(1, len(candidates))).write.mode(
-                            "overwrite"
-                        ).parquet(os.path.join(stage, "upd"))
-                # WHEN NOT MATCHED rows (or the whole source for replace
-                # semantics), written at natural parallelism — a large
-                # upsert source must not serialize through one task.
-                if when_matched is None:
-                    news = source if insert_unmatched else source.join(
-                        cur, key, "left_semi"
-                    )
-                    # rows_inserted = source rows whose key has no match
-                    # in the target. Counted on the SOURCE side — the
-                    # matched-target count (n_updated) over-counts when
-                    # one source key matches several target rows.
-                    n_inserted = (
-                        bounds["n"] - source.join(cur, key, "left_semi").count()
-                        if insert_unmatched
-                        else 0
-                    )
-                else:
-                    news = (
-                        source.join(cur, key, "left_anti")
-                        if insert_unmatched
-                        else None
-                    )
-                    n_inserted = news.count() if news is not None else 0
-                if news is not None:
-                    news.write.mode("overwrite").parquet(os.path.join(stage, "src"))
                 try:
+                    # dv-aware (and [] returns an empty frame): neither mode
+                    # may resurrect already-deleted rows of dv-carrying
+                    # files. Positions ride along for the merge-on-read
+                    # branch; ``cur`` is the live-row view both modes share.
+                    live, src_col, pos_col = self._scan_files(
+                        candidates, schema, with_positions=True
+                    )
+                    cur = live.drop(src_col, pos_col)
+                    src_keys = source.select(key).distinct()
+                    if candidates:
+                        if mor:
+                            # Matched target rows become dv entries instead
+                            # of a candidate-file rewrite; their replacement
+                            # rows (source / when_matched output) append as
+                            # fresh files below.
+                            matched_pos = live.join(
+                                src_keys, key, "left_semi"
+                            ).select(
+                                F.col(src_col).alias("src"),
+                                F.col(pos_col).alias("pos"),
+                            )
+                            dv_adds, new_counts, dv_abs = self._write_dv(
+                                matched_pos, candidates, f"{txn_id}-a{attempt}"
+                            )
+                            n_updated = sum(new_counts.values())
+                        else:
+                            n_updated = cur.join(src_keys, key, "left_semi").count()
+                            kept = cur.join(src_keys, key, "left_anti")
+                            kept.coalesce(max(1, len(candidates))).write.mode(
+                                "overwrite"
+                            ).parquet(os.path.join(stage, "kept"))
+                        if when_matched is not None:
+                            matched = cur.alias("target").join(
+                                source.alias("source"),
+                                F.col(f"target.{key}") == F.col(f"source.{key}"),
+                            )
+                            updated = matched.select(
+                                *[
+                                    _not_null_guard(
+                                        F.expr(when_matched[f.name]).cast(
+                                            schema[f.name].dataType
+                                        ),
+                                        f,
+                                    ).alias(f.name)
+                                    if f.name in when_matched
+                                    else F.col(f"target.{f.name}").alias(f.name)
+                                    for f in fields
+                                ]
+                            )
+                            # when_matched assignments produce NEW values, so
+                            # they pass the same CHECK gate as inserts (the
+                            # source-side guard above cannot cover them).
+                            if self.constraints:
+                                updated = updated.select(
+                                    *self._constraint_guard(
+                                        [updated[f.name] for f in fields], updated
+                                    )
+                                )
+                            updated.coalesce(max(1, len(candidates))).write.mode(
+                                "overwrite"
+                            ).parquet(os.path.join(stage, "upd"))
+                    # WHEN NOT MATCHED rows (or the whole source for replace
+                    # semantics), written at natural parallelism — a large
+                    # upsert source must not serialize through one task.
+                    if when_matched is None:
+                        news = source if insert_unmatched else source.join(
+                            cur, key, "left_semi"
+                        )
+                        # rows_inserted = source rows whose key has no match
+                        # in the target. Counted on the SOURCE side — the
+                        # matched-target count (n_updated) over-counts when
+                        # one source key matches several target rows.
+                        n_inserted = (
+                            bounds["n"] - source.join(cur, key, "left_semi").count()
+                            if insert_unmatched
+                            else 0
+                        )
+                    else:
+                        news = (
+                            source.join(cur, key, "left_anti")
+                            if insert_unmatched
+                            else None
+                        )
+                        n_inserted = news.count() if news is not None else 0
+                    if news is not None:
+                        news.write.mode("overwrite").parquet(os.path.join(stage, "src"))
                     for sub in ("kept", "upd", "src"):
                         subdir = os.path.join(stage, sub)
                         if os.path.isdir(subdir):
@@ -1546,15 +1509,20 @@ class LakehouseTable:
 
     def _promote_staged(self, stage: str) -> list[FileAdd]:
         """Move staged part files into data/ with reference-style names and
-        harvest footer stats (``table_service.go:455-474``)."""
+        harvest footer stats (``table_service.go:455-474``). A part file
+        whose footer reports 0 rows (Spark writes one when a write's first
+        partition is empty) is deleted, not committed."""
         fields = self.fields
         adds: list[FileAdd] = []
         for i, fname in enumerate(part_files(stage)):
             src = os.path.join(stage, fname)
+            rows, mins, maxs = _footer_stats(src, fields)
+            if rows == 0:
+                os.remove(src)
+                continue
             dst_name = f"part-{i:05d}-{uuid.uuid4()}.parquet"
             dst = os.path.join(self.data_dir, dst_name)
             shutil.move(src, dst)
-            rows, mins, maxs = _footer_stats(dst, fields)
             adds.append(
                 FileAdd(
                     path=os.path.join("data", dst_name),
@@ -1604,14 +1572,32 @@ class LakehouseTable:
         violates, else None. ONE aggregate scan evaluates every
         constraint (post-cast values — the files were written through
         the schema-aligned projection, so semantics match the in-write
-        ``_constraint_guard``). Used when a constraint set changes
-        between a writer's enforcement pass and its OCC commit."""
+        ``_constraint_guard``; TRUE/NULL passes, FALSE fails). Used when a
+        constraint set changes between a writer's enforcement pass and
+        its OCC commit."""
         if not constraints or not adds:
             return None
-        paths = [os.path.join(self.dir, a.path) for a in adds]
-        return constraint_violation_over_files(
-            self.spark, self.spark_schema, paths, constraints
+        names = sorted(constraints)
+        row = (
+            self.spark.read.schema(self.spark_schema)
+            .parquet(*[os.path.join(self.dir, a.path) for a in adds])
+            .agg(
+                *[
+                    F.count(
+                        F.when(
+                            ~F.coalesce(
+                                F.expr(constraints[n]).cast("boolean"),
+                                F.lit(True),
+                            ),
+                            1,
+                        )
+                    ).alias(n)
+                    for n in names
+                ]
+            )
+            .collect()[0]
         )
+        return next((n for n in names if row[n]), None)
 
     def _recheck_constraints(
         self,
@@ -2062,27 +2048,29 @@ class LakehouseTable:
             removes: list[str] = []
             stage = os.path.join(self.tmp_dir, txn)
             schema = to_spark_schema(snap.schema)
-            for gi, group in enumerate(groups):
-                out = os.path.join(stage, f"g{gi}")
-                # dv-aware: compaction is what MATERIALIZES deletion
-                # vectors — the rewrite drops the deleted rows and the
-                # fresh adds carry no dv.
-                df = self._scan_files(group, schema)
-                if cluster_by or zorder_by:
-                    n_out = max(
-                        1,
-                        -(-sum(f.size for f in group) // COMPACT_TARGET_FILE_SIZE),
-                    )
-                    df = _cluster_layout(
-                        df, n_out, cluster_by, zorder_by,
-                        {f.name: f.type for f in snap.schema},
-                    )
-                else:
-                    df = df.coalesce(1)
-                df.write.mode("overwrite").parquet(out)
-                adds.extend(self._promote_staged(out))
-                removes.extend(f.path for f in group)
-            shutil.rmtree(stage, ignore_errors=True)
+            try:
+                for gi, group in enumerate(groups):
+                    out = os.path.join(stage, f"g{gi}")
+                    # dv-aware: compaction is what MATERIALIZES deletion
+                    # vectors — the rewrite drops the deleted rows and the
+                    # fresh adds carry no dv.
+                    df = self._scan_files(group, schema)
+                    if cluster_by or zorder_by:
+                        n_out = max(
+                            1,
+                            -(-sum(f.size for f in group) // COMPACT_TARGET_FILE_SIZE),
+                        )
+                        df = _cluster_layout(
+                            df, n_out, cluster_by, zorder_by,
+                            {f.name: f.type for f in snap.schema},
+                        )
+                    else:
+                        df = df.coalesce(1)
+                    df.write.mode("overwrite").parquet(out)
+                    adds.extend(self._promote_staged(out))
+                    removes.extend(f.path for f in group)
+            finally:
+                shutil.rmtree(stage, ignore_errors=True)
             if cluster_by or zorder_by:
                 adds = _fill_partition_from_stats(adds, cluster_by or zorder_by)
             try:

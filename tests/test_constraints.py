@@ -3,6 +3,8 @@ at create time, analyzed against the schema immediately, enforced inside
 every insert's write pass — TRUE or NULL passes, FALSE fails the whole
 transaction and commits nothing."""
 
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -34,11 +36,17 @@ def test_constraint_enforced_on_insert(lake, spark):
 
     lake.insert("ck", _df(spark, [(1, 5.0, "new"), (2, 1.0, "done")]))
     assert t.read().count() == 2
+    files_before = sorted(os.listdir(t.data_dir))
 
     with pytest.raises(Exception, match="positive_amount"):
         lake.insert("ck", _df(spark, [(3, -1.0, "new")]))
+    # A failed write leaves no stage and no data file behind.
+    assert os.listdir(t.tmp_dir) == []
+    assert sorted(os.listdir(t.data_dir)) == files_before
     with pytest.raises(Exception, match="known_status"):
         lake.insert("ck", _df(spark, [(3, 1.0, "bogus")]))
+    assert os.listdir(t.tmp_dir) == []
+    assert sorted(os.listdir(t.data_dir)) == files_before
     # Failed writes committed nothing — table unchanged, no orphan version.
     assert t.read().count() == 2
     assert t.log.latest_version() == 2
@@ -119,6 +127,19 @@ def test_constraint_enforced_on_merge_source(lake, spark):
         lake.merge("cm", _df(spark, [(3, -4.0, "new")]), key="id")
     t = lake.table("cm")
     assert t.read().count() == 2
+
+
+def test_failed_merge_unpersists_its_source(lake, spark):
+    """A merge whose source fails a CHECK raises before its commit loop;
+    the source it persisted must still be released."""
+    lake.create_table("cmc", SCHEMA, constraints={"pos": "amount > 0"})
+    lake.insert("cmc", _df(spark, [(1, 5.0, "new")]))
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty()
+    with pytest.raises(Exception, match="pos"):
+        lake.merge("cmc", _df(spark, [(3, -4.0, "new")]), key="id")
+    assert cache.isEmpty()
 
 
 def test_add_constraint_post_hoc(lake, spark):

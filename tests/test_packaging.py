@@ -47,8 +47,35 @@ def test_dockerfile_runs_the_server_module():
         df = fh.read()
     assert "mini_lakehouse_control_plane_executor_spark.server" in df
     assert "pyspark==4.1.2" in df  # pinned to the tested runtime
+    assert "duckdb" not in df  # a test-only oracle; the server never imports it
     for port in ("8080", "50051"):
         assert re.search(rf"EXPOSE.*{port}", df)
+
+
+def test_package_never_imports_duckdb():
+    """DuckDB is the tests' oracle engine, not a runtime dependency: no
+    module of the package imports it."""
+    import ast
+
+    pkg = os.path.join(ROOT, "mini_lakehouse_control_plane_executor_spark")
+    offenders = []
+    for dirpath, _, names in os.walk(pkg):
+        for name in names:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, name)
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), path)
+            for node in ast.walk(tree):
+                if isinstance(node, ast.Import):
+                    mods = [a.name for a in node.names]
+                elif isinstance(node, ast.ImportFrom):
+                    mods = [node.module or ""]
+                else:
+                    continue
+                if any(m.split(".")[0] == "duckdb" for m in mods):
+                    offenders.append(f"{os.path.relpath(path, ROOT)}:{node.lineno}")
+    assert offenders == []
 
 
 def test_makefile_demo_target_runs_the_demo_module():

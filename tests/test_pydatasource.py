@@ -223,81 +223,29 @@ def test_cdc_replication_end_to_end(lake, spark, tmp_path):
     assert lake.table("repl_b").read().count() == 36
 
 
-def test_format_write_append_and_overwrite(lake, spark):
-    """df.write.format('minilake'): staged task files -> one OCC commit;
-    append and overwrite both versioned and time-travelable; txn option
-    makes replays idempotent; NOT NULL enforced in the task."""
+def test_format_write_is_refused(lake, spark):
+    """The source is read-only: an append or an overwrite through
+    df.write.format('minilake') fails with an error that names the write
+    path to use, and leaves no version, no data file and no stage."""
+    import os
+
     register(spark)
     lake.create_table("dw", SCHEMA)
-    lake.insert("dw", _mk(spark, 0, 5))  # v2
+    lake.insert("dw", _mk(spark, 0, 5))
     t = lake.table("dw")
-
-    def write(df, mode="append", **opts):
-        w = df.write.format("minilake").option("root", lake.root).option("table", "dw")
-        for k, v in opts.items():
-            w = w.option(k, v)
-        w.mode(mode).save()
-
-    write(_mk(spark, 5, 12))
-    assert sorted(r["id"] for r in t.read().collect()) == list(range(12))
-    v_after_append = t.log.latest_version()
-    # Idempotent replay under an explicit txn id.
-    write(_mk(spark, 100, 105), txn="dsw-once")
-    write(_mk(spark, 100, 105), txn="dsw-once")
-    assert t.read().count() == 17
-    # Overwrite replaces everything in one atomic commit...
-    write(_mk(spark, 200, 203), mode="overwrite")
-    assert sorted(r["id"] for r in t.read().collect()) == [200, 201, 202]
-    # ...and old versions still time-travel.
-    assert t.read(version=v_after_append).count() == 12
-    # NOT NULL enforced inside the task.
-    bad = spark.createDataFrame([(None, "x")], "id long, v string")
-    with pytest.raises(Exception, match="NOT NULL|PYTHON_DATA_SOURCE"):
-        write(bad)
-    assert t.read().count() == 3  # failed write left nothing behind
-    # no orphaned stage dirs
-    import os
-    assert not any(x.endswith("-dsw") for x in os.listdir(t.tmp_dir))
-
-
-def test_format_write_enforces_check_constraints(lake, spark):
-    """The DSv2 writer enforces CHECK constraints at commit time (one
-    aggregate scan over the STAGED files, before promotion): passing rows
-    commit; a violating write fails with nothing committed — no new
-    version, no orphan files in data/."""
-    import os
-
-    from mini_lakehouse_control_plane_executor_spark.table.schema import Field as Fld
-
-    register(spark)
-    lake.create_table(
-        "dwc",
-        [Fld("id", "int64", False)],
-        constraints={"small": "id < 100"},
-    )
-    # Passing rows commit through the format writer.
-    (
-        spark.range(0, 3).select("id")
-        .write.format("minilake")
-        .option("root", lake.root).option("table", "dwc")
-        .mode("append").save()
-    )
-    t = lake.table("dwc")
-    assert t.read().count() == 3
     v_before = t.log.latest_version()
-    files_before = sorted(os.listdir(os.path.join(t.dir, "data")))
-    # Violating rows fail atomically: same version, same files, no stage.
-    with pytest.raises(Exception, match="CHECK constraint 'small'"):
-        (
-            spark.range(98, 103).select("id")
-            .write.format("minilake")
-            .option("root", lake.root).option("table", "dwc")
-            .mode("append").save()
-        )
-    assert t.log.latest_version() == v_before
-    assert sorted(os.listdir(os.path.join(t.dir, "data"))) == files_before
-    assert os.listdir(t.tmp_dir) == []
-    assert t.read().count() == 3
+    files_before = sorted(os.listdir(t.data_dir))
+    for mode in ("append", "overwrite"):
+        with pytest.raises(Exception, match=r"LakehouseSession\.insert"):
+            (
+                _mk(spark, 5, 12).write.format("minilake")
+                .option("root", lake.root).option("table", "dw")
+                .mode(mode).save()
+            )
+        assert t.log.latest_version() == v_before
+        assert sorted(os.listdir(t.data_dir)) == files_before
+        assert os.listdir(t.tmp_dir) == []
+    assert t.read().count() == 5
 
 
 def test_format_reads_shallow_clone(lake, spark):
@@ -318,83 +266,3 @@ def test_format_reads_shallow_clone(lake, spark):
         range(100, 110)
     )
     assert _fmt(spark, lake, "cl_ds_src").count() == 50
-
-
-def test_sessionless_check_shims_match_spark(spark):
-    """The session-less commit worker evaluates CHECKs with DuckDB plus
-    exact-semantics shims for Spark-only scalar functions
-    (`_register_spark_shims`). Cross-validate: same inputs through the
-    real Spark functions and through the shimmed DuckDB connection must
-    agree byte-for-byte — including the soundex edge cases Spark's
-    UTF8String.soundex defines (non-letter first byte returns the input,
-    multi-byte chars reset the run, H/W transparency)."""
-    import duckdb
-
-    from mini_lakehouse_control_plane_executor_spark.sources.pydatasource import (
-        _register_spark_shims,
-    )
-
-    samples = [
-        "Robert", "Rupert", "Tymczak", "Pfister", "Ashcraft", "Honeyman",
-        "hello world", "a", "12abc", "MiXeD CaSe tExT", "O'Brien",
-        "résumé", "Résumé", "HW", "bhhb", "baab", "",
-    ]
-    # `crc32(s)` etc. rely on Spark's implicit string->binary cast —
-    # the exact form the shims support (they UTF-8-encode internally).
-    exprs = [
-        "crc32(s)", "sha1(s)",
-        "sha2(s, 224)", "sha2(s, 256)",
-        "sha2(s, 384)", "sha2(s, 512)",
-        "soundex(s)", "initcap(s)",
-    ]
-    rows = spark.createDataFrame([(s,) for s in samples], "s string")
-    got_spark = [
-        tuple(r) for r in rows.selectExpr(*[f"{e} as c{i}" for i, e in enumerate(exprs)])
-        .collect()
-    ]
-    con = duckdb.connect()
-    _register_spark_shims(con)
-    duck_exprs = [e.replace("(s", "($s") for e in exprs]
-    got_duck = [
-        con.execute("SELECT " + ", ".join(duck_exprs), {"s": s}).fetchone()
-        for s in samples
-    ]
-    assert len(got_spark) == len(got_duck)
-    for s, sp, du in zip(samples, got_spark, got_duck):
-        assert tuple(sp) == tuple(du), f"shim mismatch for {s!r}: {sp} != {du}"
-    assert con.execute("SELECT space(3)").fetchone()[0] == "   "
-    assert con.execute("SELECT sha2('x', 999)").fetchone()[0] is None
-
-
-def test_format_write_check_with_spark_only_function(lake, spark):
-    """End-to-end: a CHECK constraint using a scalar function DuckDB
-    does not have natively (crc32) is still enforced by the format
-    writer's session-less commit — passing rows commit, violating rows
-    abort atomically with nothing staged and nothing promoted."""
-    import os
-    import zlib
-
-    from mini_lakehouse_control_plane_executor_spark.table.schema import Field as Fld
-
-    register(spark)
-    lake.create_table("dwx", [Fld("id", "int64", False), Fld("v", "string", True)])
-    forbidden = zlib.crc32(b"forbidden")
-    lake.table("dwx").add_constraint("not_forbidden", f"crc32(v) <> {forbidden}")
-
-    def write(df):
-        (
-            df.write.format("minilake")
-            .option("root", lake.root).option("table", "dwx")
-            .mode("append").save()
-        )
-
-    write(spark.createDataFrame([(1, "ok"), (2, "fine")], "id long, v string"))
-    t = lake.table("dwx")
-    assert t.read().count() == 2
-    v_before = t.log.latest_version()
-    files_before = sorted(os.listdir(os.path.join(t.dir, "data")))
-    with pytest.raises(Exception, match="not_forbidden"):
-        write(spark.createDataFrame([(3, "forbidden")], "id long, v string"))
-    assert t.log.latest_version() == v_before
-    assert sorted(os.listdir(os.path.join(t.dir, "data"))) == files_before
-    assert os.listdir(t.tmp_dir) == []

@@ -662,13 +662,36 @@ def test_not_null_enforced_on_insert(lake, spark):
     v = lake.insert("nn", ok)  # null in a NULLABLE column is fine
     assert lake.table("nn").read().count() == 2
 
+    t = lake.table("nn")
+    files_before = sorted(os.listdir(t.data_dir))
     bad = spark.createDataFrame([(None, "x")], "k long, v string")
     with pytest.raises(Exception, match="NOT NULL constraint violated"):
         lake.insert("nn", bad)
-    # The failed insert must not have committed anything.
-    t = lake.table("nn")
+    # The failed insert must not have committed anything, nor left its
+    # stage or a data file behind.
     assert t.log.latest_version() == v
     assert t.read().count() == 2
+    assert os.listdir(t.tmp_dir) == []
+    assert sorted(os.listdir(t.data_dir)) == files_before
+
+
+def test_insert_skips_empty_part_files(lake, spark):
+    """Spark writes an empty part file when a write's first partition
+    holds no rows; it is not committed. An insert of no rows at all
+    still commits its version (so its txn id stays idempotent)."""
+    lake.create_table("e0", SCHEMA)
+    lake.insert("e0", _df(spark, 0, 10, partitions=4).filter("k >= 8"))
+    t = lake.table("e0")
+    files = t.snapshot().files
+    assert files and all(f.rows > 0 for f in files)
+    assert t.read().count() == 2
+    assert sorted(os.listdir(t.data_dir)) == sorted(
+        os.path.basename(f.path) for f in files
+    )
+    v = lake.insert("e0", _df(spark, 0, 10).filter("k < 0"), txn_id="empty")
+    assert t.log.latest_version() == v
+    assert t.snapshot().files == files
+    assert lake.insert("e0", _df(spark, 0, 10).filter("k < 0"), txn_id="empty") == v
 
 
 def test_version_diff_cdc(lake, spark):
