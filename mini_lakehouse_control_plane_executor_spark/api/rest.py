@@ -60,6 +60,7 @@ library; this is the thin adapter the reference builds with gorilla/mux.
 
 from __future__ import annotations
 
+import datetime
 import inspect
 import json
 import re
@@ -128,13 +129,59 @@ def _fields_from_api(schema: dict) -> list[Field]:
     ]
 
 
+def _json_date(v):
+    if isinstance(v, str):
+        try:
+            return datetime.date.fromisoformat(v)
+        except ValueError:
+            pass
+    return v
+
+
+def _json_timestamp(v):
+    """An ISO-8601 string as a UTC datetime; one without an offset is
+    read as UTC, the session time zone."""
+    if isinstance(v, str):
+        try:
+            ts = datetime.datetime.fromisoformat(v)
+        except ValueError:
+            return v
+        if ts.tzinfo is None:
+            return ts.replace(tzinfo=datetime.timezone.utc)
+        return ts.astimezone(datetime.timezone.utc)
+    return v
+
+
+def _json_float(v):
+    if isinstance(v, int) and not isinstance(v, bool):
+        try:
+            return float(v)
+        except OverflowError:
+            pass
+    return v
+
+
+# JSON has no date or timestamp value, and Python's json reads 7.0 as the
+# int 7. Per schema type, the Python value PySpark's row verifier accepts
+# for such a JSON value; any other value passes unchanged, so the
+# verifier still rejects it.
+_FROM_JSON = {
+    "date": _json_date,
+    "timestamp": _json_timestamp,
+    "float32": _json_float,
+    "float64": _json_float,
+}
+
+
 def _rows_to_arrow(rows: list, fields: list[Field]) -> "pa.Table":
     """Request rows (JSON objects) -> a ``pa.Table`` in table-schema
-    order, with exactly the acceptance and stored values of
-    ``createDataFrame(<tuples>, schema)``: every row first passes
-    PySpark's own row verifier (the ``verifySchema=True`` check), since
-    Arrow would otherwise coerce silently (``1.5`` into an int column
-    stored as ``1``, ``true`` into a float column as ``1.0``, JSON
+    order. An ISO-8601 string in a date or timestamp column becomes a
+    date or timestamp, and an integer in a float column a float
+    (``_FROM_JSON``); past that, acceptance and stored values are
+    exactly those of ``createDataFrame(<tuples>, schema)``: every row
+    passes PySpark's own row verifier (the ``verifySchema=True`` check),
+    since Arrow would otherwise coerce silently (``1.5`` into an int
+    column stored as ``1``, ``true`` into a float column as ``1.0``, JSON
     numbers into a date column as epoch days). Only a string column
     takes any JSON value; it stores Python ``str()`` of it, with a bare
     boolean lower-cased, as the row path does. A key outside the schema
@@ -145,6 +192,7 @@ def _rows_to_arrow(rows: list, fields: list[Field]) -> "pa.Table":
     names = [f.name for f in fields]
     known = set(names)
     verify = _make_type_verifier(to_spark_schema(fields))
+    convert = [_FROM_JSON.get(f.type) for f in fields]
     tuples = []
     for r in rows:
         if not isinstance(r, dict):
@@ -152,7 +200,7 @@ def _rows_to_arrow(rows: list, fields: list[Field]) -> "pa.Table":
         unknown = sorted(set(r) - known)
         if unknown:
             raise ValueError(f"row key(s) {unknown} not in table schema")
-        row = tuple(r[n] for n in names)
+        row = tuple(c(r[n]) if c else r[n] for n, c in zip(names, convert))
         verify(row)
         tuples.append(row)
     types = arrow_types()

@@ -310,6 +310,15 @@ def part_files(directory: str) -> list[str]:
     )
 
 
+def _remove_dv(dv_abs: str | None) -> None:
+    """Delete a deletion-vector parquet that no commit references."""
+    if dv_abs is not None:
+        try:
+            os.remove(dv_abs)
+        except OSError:
+            pass
+
+
 class LakehouseTable:
     def __init__(self, spark: SparkSession, root: str, name: str):
         self.spark = spark
@@ -1014,10 +1023,7 @@ class LakehouseTable:
                 self._auto_materialize_dvs()
                 return version, sum(new_counts.values())
             except CommitConflictError:
-                try:
-                    os.remove(dv_abs)
-                except OSError:
-                    pass
+                _remove_dv(dv_abs)
                 time.sleep(0.01 * (attempt + 1))
         raise CommitRetriesExhausted(
             f"delete on {self.name!r} lost {COMMIT_MAX_RETRIES + 1} OCC races"
@@ -1179,11 +1185,7 @@ class LakehouseTable:
                 ).parquet(stage)
                 adds = self._promote_staged(stage)
             except BaseException:
-                if dv_abs is not None:
-                    try:
-                        os.remove(dv_abs)
-                    except OSError:
-                        pass
+                _remove_dv(dv_abs)
                 raise
             finally:
                 shutil.rmtree(stage, ignore_errors=True)
@@ -1198,11 +1200,7 @@ class LakehouseTable:
                 # live data files (metadata-only updates) so only the
                 # staged dv parquet itself is removed.
                 self._remove_adds(adds)
-                if dv_abs is not None:
-                    try:
-                        os.remove(dv_abs)
-                    except OSError:
-                        pass
+                _remove_dv(dv_abs)
                 time.sleep(0.01 * (attempt + 1))
         raise CommitRetriesExhausted(
             f"update on {self.name!r} lost {COMMIT_MAX_RETRIES + 1} OCC races"
@@ -1422,6 +1420,14 @@ class LakehouseTable:
                         subdir = os.path.join(stage, sub)
                         if os.path.isdir(subdir):
                             adds.extend(self._promote_staged(subdir))
+                except BaseException:
+                    # A failing write (e.g. a CHECK violation in the
+                    # when_matched output or the inserted rows) must not
+                    # leak the dv parquet or files promoted so far:
+                    # nothing references them yet.
+                    self._remove_adds(adds)
+                    _remove_dv(dv_abs)
+                    raise
                 finally:
                     shutil.rmtree(stage, ignore_errors=True)
                 try:
@@ -1439,11 +1445,7 @@ class LakehouseTable:
                     # Only FRESH files are reclaimed — dv_adds point at
                     # live data files (metadata-only updates).
                     self._remove_adds(adds)
-                    if dv_abs is not None:
-                        try:
-                            os.remove(dv_abs)
-                        except OSError:
-                            pass
+                    _remove_dv(dv_abs)
                     time.sleep(0.01 * (attempt + 1))
             raise CommitRetriesExhausted(
                 f"merge on {self.name!r} lost {COMMIT_MAX_RETRIES + 1} OCC races"

@@ -302,6 +302,33 @@ def test_mor_merge_when_matched(lake, spark):
         assert rows[k] == (f"v{k}", k * 1.5 + 100.0)  # target v kept
 
 
+@pytest.mark.parametrize(
+    "when_matched, new_x",
+    [({"x": "target.x + 100000"}, 0.0), (None, 1e9)],
+    ids=["when_matched_output", "inserted_rows"],
+)
+def test_failed_mor_merge_leaves_no_files(lake, spark, when_matched, new_x):
+    """A merge-on-read merge whose when_matched output or inserted rows
+    fail a CHECK commits nothing and leaves no dv parquet in _dv/ and no
+    stage in _tmp/: the matched rows' dv file is written before those
+    rows are, and nothing references it."""
+    t = _mk(lake, spark, n=10)
+    t.delete("k = 0", mode="mor")  # _dv/ holds one live dv file
+    t.add_constraint("xcap", "x <= 10000")
+    version = t.log.latest_version()
+    dv_files = sorted(os.listdir(t.dv_dir))
+    data_files = sorted(os.listdir(t.data_dir))
+    src = spark.range(5, 15).select(
+        F.col("id").alias("k"), F.lit("s").alias("v"), F.lit(new_x).alias("x")
+    )
+    with pytest.raises(Exception, match="xcap"):
+        t.merge(src, key="k", when_matched=when_matched, mode="mor")
+    assert t.log.latest_version() == version
+    assert os.listdir(t.tmp_dir) == []
+    assert sorted(os.listdir(t.dv_dir)) == dv_files
+    assert sorted(os.listdir(t.data_dir)) == data_files
+
+
 def test_mor_merge_then_compact_materializes(lake, spark):
     t = _mk(lake, spark, n=20)
     src = _df(spark, 10, 30)

@@ -3,6 +3,7 @@
 create table -> insert -> async query -> poll status -> results — plus
 versions/snapshot/compaction/vacuum/drop routes."""
 
+import datetime
 import json
 import time
 import urllib.request
@@ -770,11 +771,21 @@ def _stored(lake, name):
     return {r["k"]: repr(r.asDict()) for r in lake.table(name).read().collect()}
 
 
-def _both(server, lake, spark, op, rows):
+def _both(server, lake, spark, op, rows, ref_rows=None):
     """(REST status, row-list status) of one request, each against its
-    own table."""
+    own table. ``ref_rows`` replaces ``rows`` on the row-list path where
+    a JSON value stands for another Python value."""
     got = _status(server, "POST", f"/tables/mx_rest/{op}", {"rows": rows, "key": "k"})
-    return got, _row_list_status(lake, spark, "mx_ref", op, rows)
+    return got, _row_list_status(lake, spark, "mx_ref", op, ref_rows or rows)
+
+
+def _as_read(typ, v):
+    """The Python value REST reads JSON value ``v`` in a ``typ`` column
+    as: JSON has no integral float, so an int in a float column is that
+    float (these cells were 400s on both paths)."""
+    if typ.startswith("float") and type(v) is int:
+        return float(v)
+    return v
 
 
 def test_rest_rows_type_matrix_matches_row_list_path(server, lake, spark):
@@ -794,20 +805,22 @@ def test_rest_rows_type_matrix_matches_row_list_path(server, lake, spark):
     # Insert: one request per cell.
     status = {}
     for typ, v, row in cells:
-        got, want = _both(server, lake, spark, "insert", [row])
+        ref = row | {f"c_{typ}": _as_read(typ, v)}
+        got, want = _both(server, lake, spark, "insert", [row], [ref])
         assert got == want, ("insert", typ, v, got, want)
         status[typ, json.dumps(v)] = got
     # Merge (new keys, so every accepted row is inserted): each rejected
     # cell alone, then the accepted cells in one request, which
     # succeeds only if every one of its rows is accepted.
-    accepted = []
+    accepted, accepted_ref = [], []
     for typ, v, row in cells:
         row = row | {"k": row["k"] + len(cells)}
         if status[typ, json.dumps(v)] == 200:
             accepted.append(row)
+            accepted_ref.append(row | {f"c_{typ}": _as_read(typ, v)})
         else:
             assert _both(server, lake, spark, "merge", [row]) == (400, 400), (typ, v)
-    assert _both(server, lake, spark, "merge", accepted) == (200, 200)
+    assert _both(server, lake, spark, "merge", accepted, accepted_ref) == (200, 200)
     # Any JSON value into a string column keeps the row path's text.
     texts = [1e20, 0.1, False, 42, {"a": 1}, [1, 2], True]
     rows = [
@@ -820,11 +833,29 @@ def test_rest_rows_type_matrix_matches_row_list_path(server, lake, spark):
         r["c_string"]
         for r in lake.table("mx_rest").read().filter("k >= 1000").orderBy("k").collect()
     ] == ["1e+20", "0.1", "false", "42", "{'a': 1}", "[1, 2]", "true"]
+    # An ISO-8601 string into a date or timestamp column is the date or
+    # UTC instant it names; the row-list path is given that value.
+    utc = datetime.timezone.utc
+    iso = [
+        ("c_date", "2024-02-29", datetime.date(2024, 2, 29)),
+        ("c_timestamp", "2024-02-29T12:34:56Z", datetime.datetime(2024, 2, 29, 12, 34, 56, tzinfo=utc)),
+        ("c_timestamp", "2024-02-29T14:34:56.5+02:00",
+         datetime.datetime(2024, 2, 29, 12, 34, 56, 500000, tzinfo=utc)),
+        ("c_timestamp", "2024-02-29 12:00", datetime.datetime(2024, 2, 29, 12, tzinfo=utc)),
+    ]
+    for op, base in (("insert", 2000), ("merge", 3000)):
+        rows = [
+            {f.name: None for f in fields} | {"k": base + i, col: v}
+            for i, (col, v, _) in enumerate(iso)
+        ]
+        refs = [row | {col: want} for row, (col, _, want) in zip(rows, iso)]
+        assert _both(server, lake, spark, op, rows, refs) == (200, 200)
+    assert _stored(lake, "mx_rest") == _stored(lake, "mx_ref")
     # Arrow would coerce these silently; they stay 400s.
     for typ, v in [("int32", 1.5), ("int64", 1.5), ("date", 7), ("timestamp", 7),
                    ("date", 1.5), ("float32", True), ("float64", True)]:
         assert status[typ, json.dumps(v)] == 400, (typ, v)
-    assert sum(s == 200 for s in status.values()) == len(accepted) == 21
+    assert sum(s == 200 for s in status.values()) == len(accepted) == 25
 
 
 @pytest.mark.parametrize("op", ["insert", "merge"])

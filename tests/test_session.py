@@ -1,11 +1,18 @@
 """The SparkSession factory must not leak global state into the caller's
 process: no ``sys.path`` entries and no ``PYTHONPATH`` rewrite (which
-every Spark Python worker would inherit)."""
+every Spark Python worker would inherit). Its trim of the session's
+Hadoop conf must hold after every I/O path the package uses."""
 
+import json
 import os
+import subprocess
 import sys
 
 from mini_lakehouse_control_plane_executor_spark import session
+from mini_lakehouse_control_plane_executor_spark.table.catalog import LakehouseSession
+from mini_lakehouse_control_plane_executor_spark.table.schema import Field
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_get_spark_leaves_pythonpath_and_sys_path_alone(spark, monkeypatch):
@@ -32,3 +39,85 @@ def test_default_driver_heap_fits_the_machine(spark, monkeypatch):
     assert session._default_driver_mem() == "49152m"  # 128 GiB machine
     if "SPARK_GRAFT_DRIVER_MEM" not in os.environ:
         assert spark.conf.get("spark.driver.memory") == want
+
+
+def run_every_io_path(spark, root):
+    """Write and read back through each I/O path the package uses."""
+    df = spark.range(20).selectExpr("id", "cast(id as string) s")
+    for fmt in ("parquet", "csv", "json", "orc"):
+        df.write.format(fmt).save(f"{root}/{fmt}")
+        assert spark.read.format(fmt).load(f"{root}/{fmt}").count() == 20
+    df.select("s").write.text(f"{root}/text")
+    assert spark.read.text(f"{root}/text").count() == 20
+    assert spark.sparkContext.textFile(f"{root}/text").count() == 20
+    # A streaming checkpoint goes through Hadoop's FileContext.
+    query = (
+        spark.readStream.schema(df.schema).json(f"{root}/json")
+        .writeStream.format("parquet")
+        .option("checkpointLocation", f"{root}/checkpoint")
+        .trigger(availableNow=True)
+        .start(f"{root}/stream")
+    )
+    query.awaitTermination()
+    assert spark.read.parquet(f"{root}/stream").count() == 20
+    lake = LakehouseSession(spark, f"{root}/lake")
+    lake.create_table("t", [Field("id", "int64"), Field("s", "string")])
+    lake.insert("t", df)
+    assert lake.table("t").read().count() == 20
+
+
+def unused_default_keys(conf):
+    """Keys of a Hadoop conf whose only sources are the trimmed resources."""
+    keys = []
+    for entry in conf.iterator():
+        sources = set(conf.getPropertySources(entry.getKey()) or ())
+        if sources and sources <= session.UNUSED_DEFAULT_RESOURCES:
+            keys.append(entry.getKey())
+    return keys
+
+
+_TRIM_PROBE = """
+import json, sys
+from mini_lakehouse_control_plane_executor_spark.session import get_spark
+from tests.test_session import run_every_io_path, unused_default_keys
+spark = get_spark("trim", cpus=1, extra_conf={"spark.hadoop.mapreduce.job.reduces": "7"})
+run_every_io_path(spark, sys.argv[1])
+conf = spark._jsparkSession.sessionState().newHadoopConf()
+print(json.dumps({
+    "unused": unused_default_keys(conf),
+    "size": conf.size(),
+    "values": [conf.get(k) for k in
+               ("mapreduce.job.reduces", "mapreduce.task.timeout", "mapreduce.job.maps")],
+}))
+spark.stop()
+"""
+
+
+def test_hadoop_conf_stays_trimmed_after_every_io_path(tmp_path):
+    """In a fresh session, no yarn-default.xml or mapred-default.xml key
+    is left in a query's Hadoop conf after every I/O path has run. A path
+    that first loads a Hadoop class adding a default resource reloads
+    every live conf from its resources (``Configuration.addDefaultResource``)
+    and would silently undo the trim. The mapreduce.* values a deployment
+    sets through ``extra_conf`` or ``SPARK_GRAFT_CONF_spark__hadoop__*``
+    stay; one that only mapred-default.xml sets is gone. A fresh JVM,
+    because ``get_spark`` on a running session does not rebuild its
+    Hadoop conf and trims it again."""
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_DRIVER_MEM="512m",
+        SPARK_GRAFT_CONF_spark__hadoop__mapreduce__task__timeout="1234",
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", _TRIM_PROBE, str(tmp_path)],
+        cwd=ROOT,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out["unused"] == []
+    assert out["size"] < 500  # 1,112 keys untrimmed
+    assert out["values"] == ["7", "1234", None]
