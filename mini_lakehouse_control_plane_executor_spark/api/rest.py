@@ -71,6 +71,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from pyspark.errors import PySparkException
 
 from mini_lakehouse_control_plane_executor_spark.table.catalog import LakehouseSession
+from mini_lakehouse_control_plane_executor_spark.table.log import CommitRetriesExhausted
 from mini_lakehouse_control_plane_executor_spark.table.schema import (
     Field,
     SchemaError,
@@ -603,7 +604,8 @@ class LakehouseRestServer:
                 zorder_by=zorder_by,
                 where=where,
             )
-        except (RuntimeError, ValueError) as exc:  # in progress / bad column
+        # In progress / bad column / lost every OCC race to other writers.
+        except (RuntimeError, ValueError, CommitRetriesExhausted) as exc:
             return 200, {"success": False, "error": str(exc)}
         if version is None:
             return 200, {"success": False, "error": "nothing to compact"}

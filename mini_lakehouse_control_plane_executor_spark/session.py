@@ -128,20 +128,18 @@ def get_spark(
             "RocksDBStateStoreProvider",
         )
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
     # Deployment-specific overrides without code edits: every
     # SPARK_GRAFT_CONF_<key> env var (key with '.' encoded as '__',
     # e.g. SPARK_GRAFT_CONF_spark__sql__shuffle__partitions=512) is
     # applied LAST, so cluster operators can retune any scale-dependent
     # knob above (shuffle partitions, broadcast threshold, codec …)
     # per environment while the local defaults stay bench-comparable.
+    overrides = dict(extra_conf or {})
     for env_k, env_v in os.environ.items():
         if env_k.startswith("SPARK_GRAFT_CONF_"):
-            builder = builder.config(
-                env_k[len("SPARK_GRAFT_CONF_"):].replace("__", "."), env_v
-            )
+            overrides[env_k[len("SPARK_GRAFT_CONF_"):].replace("__", ".")] = env_v
+    for k, v in overrides.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     # Every query's conf (sessionState().newHadoopConf()) is a copy of
@@ -151,4 +149,12 @@ def get_spark(
     shared_conf = spark._jsparkSession.sharedState().hadoopConf()
     _trim_hadoop_conf(spark, spark._jsc.hadoopConfiguration())
     _trim_hadoop_conf(spark, shared_conf)
+    # A running session takes a builder's spark.hadoop.* setting as a
+    # runtime SQL conf under its raw key; only a new context copies it
+    # into the Hadoop conf. Set those keys here so they also apply when
+    # the session already existed.
+    for k, v in overrides.items():
+        if k.startswith("spark.hadoop."):
+            for conf in (spark._jsc.hadoopConfiguration(), shared_conf):
+                conf.set(k[len("spark.hadoop."):], v)
     return spark

@@ -19,6 +19,14 @@ Spark-first differences from the reference:
   and starts no listing job, whatever the file count (the session's
   ``parallelPartitionDiscovery.threshold``, ``session.get_spark``);
 - compaction rewrite is real (coalesced re-write), not simulated.
+
+Every write commits through one OCC loop, ``LakehouseTable._occ``: each
+attempt plans against one fresh snapshot and commits against that
+snapshot's version (``transaction_manager.go:124-233``: ≤3 retries with
+backoff, re-plan, then ``CommitRetriesExhausted``). The loop owns the
+cleanup: when an attempt loses its race or raises, the data files and
+the deletion-vector file it promoted are removed, and every attempt's
+``_tmp/<txn>/`` stage is removed when it ends.
 """
 
 from __future__ import annotations
@@ -29,6 +37,8 @@ import re
 import shutil
 import time
 import uuid
+from dataclasses import dataclass, field as dc_field, replace as dc_replace
+from typing import Callable
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -119,8 +129,6 @@ def _fill_partition_from_stats(adds: list, cluster_by: list[str]) -> list:
     (FileInfo parity — ``proto/metadata.proto:94-113``): a file whose
     min == max for a clustered column is exactly a partition of that
     value, with no directory-layout commitment."""
-    from dataclasses import replace as dc_replace
-
     return [
         dc_replace(
             a,
@@ -310,13 +318,68 @@ def part_files(directory: str) -> list[str]:
     )
 
 
-def _remove_dv(dv_abs: str | None) -> None:
-    """Delete a deletion-vector parquet that no commit references."""
-    if dv_abs is not None:
-        try:
-            os.remove(dv_abs)
-        except OSError:
-            pass
+def _with_checks(df: DataFrame, fields: list[Field], checks: dict[str, str]) -> DataFrame:
+    """``df`` (columns aligned to ``fields``) with CHECK enforcement
+    folded into its first column, so it cannot be pruned away: any row
+    where a constraint evaluates FALSE (NULL passes, SQL CHECK
+    semantics) raises inside the write pass — the ``_not_null_guard``
+    discipline."""
+    if not checks:
+        return df
+    first = df[fields[0].name]
+    dtype = to_spark_schema(fields)[0].dataType
+    for cname in sorted(checks):
+        violated = ~F.coalesce(F.expr(checks[cname]).cast("boolean"), F.lit(True))
+        first = F.when(
+            violated,
+            F.raise_error(
+                F.lit(f"CHECK constraint {cname!r} violated: ({checks[cname]})")
+            ).cast(dtype),
+        ).otherwise(first)
+    return df.select(first.alias(fields[0].name), *[df[f.name] for f in fields[1:]])
+
+
+@dataclass(frozen=True)
+class _Commit:
+    """What one OCC attempt commits (``LakehouseTable._occ``)."""
+
+    adds: list[FileAdd] = dc_field(default_factory=list)
+    removes: list[str] = dc_field(default_factory=list)
+    schema: list[Field] | None = None  # None: the snapshot's schema
+    constraints: dict[str, str] | None = None  # None: CHECK set unchanged
+    # The CHECK set the commit's new rows were written under; the loop
+    # validates them against any CHECK the snapshot adds to it. None:
+    # the commit writes no new rows.
+    checked: dict[str, str] | None = None
+    info: object = None  # handed back to the caller with the version
+
+
+class _Attempt:
+    """One try of an OCC write: its stage ``_tmp/<txn>/`` and every file
+    it has made, which ``LakehouseTable._occ`` removes unless the try
+    commits."""
+
+    def __init__(self, table: "LakehouseTable", txn: str):
+        self.stage = os.path.join(table.tmp_dir, txn)
+        self.files: list[FileAdd] = []  # promoted into data/
+        self.dv: str | None = None  # absolute path of the dv parquet written
+        self._table = table
+
+    def write(self, df: DataFrame, sub: str, fields: list[Field]) -> list[FileAdd]:
+        """Write ``df`` under the stage and promote its files into data/."""
+        out = os.path.join(self.stage, sub)
+        df.write.mode("overwrite").parquet(out)
+        adds = self._table._promote_staged(out, fields)
+        self.files += adds
+        return adds
+
+    def discard(self) -> None:
+        self._table._remove_adds(self.files)
+        if self.dv is not None:
+            try:
+                os.remove(self.dv)
+            except OSError:
+                pass
 
 
 class LakehouseTable:
@@ -377,9 +440,12 @@ class LakehouseTable:
 
     @property
     def constraints(self) -> dict[str, str]:
-        snap_c = self.log.snapshot().constraints
-        if snap_c:
-            return dict(snap_c)
+        return self._checks(self.log.snapshot())
+
+    def _checks(self, snap: Snapshot) -> dict[str, str]:
+        """The CHECK set in force at ``snap``."""
+        if snap.constraints:
+            return dict(snap.constraints)
         # Legacy sidecar fallback: tables created before constraints were
         # versioned in the log kept them in _constraints.json.
         path = os.path.join(self.dir, "_constraints.json")
@@ -396,9 +462,9 @@ class LakehouseTable:
         CAS as data writes, which closes the race with a concurrent
         insert: either the insert commits first (its rows are covered by
         this validation scan, which retries on conflict against the
-        fresh snapshot) or this commit lands first (the insert's own
-        commit loop re-checks the snapshot's constraint set and
-        validates its staged files before committing)."""
+        fresh snapshot) or this commit lands first (the writer's commit
+        loop re-checks its new rows against the snapshot's CHECK set
+        before committing)."""
         if not re.fullmatch(r"[A-Za-z0-9_]+", cname):
             raise ValueError(f"invalid constraint name {cname!r}")
         try:
@@ -406,16 +472,14 @@ class LakehouseTable:
         except Exception as exc:
             raise ValueError(f"constraint {cname!r} does not parse: {exc}") from exc
         violating = ~F.coalesce(F.expr(expr).cast("boolean"), F.lit(True))
-        txn = f"add-constraint-{cname}-{uuid.uuid4()}"
-        last: Exception | None = None
-        for attempt in range(COMMIT_MAX_RETRIES + 1):
-            snap = self.log.snapshot()
-            current = self.constraints
+
+        def plan(snap: Snapshot, a: _Attempt) -> _Commit:
+            current = self._checks(snap)
             if cname in current:
                 raise ValueError(f"constraint {cname!r} already exists")
             try:
                 n_bad = (
-                    self.read(version=snap.version)
+                    self._scan_files(snap.files, to_spark_schema(snap.schema))
                     .filter(violating)
                     .limit(1)
                     .count()
@@ -430,25 +494,12 @@ class LakehouseTable:
                     f"cannot add constraint {cname!r}: existing rows "
                     f"violate ({expr})"
                 )
-            try:
-                self.log.commit(
-                    snap.version,
-                    txn,
-                    snap.schema,
-                    constraints={**current, cname: expr},
-                )
-                self._retire_legacy_sidecar()
-                return
-            except CommitConflictError as exc:
-                # A data write landed between our validation snapshot and
-                # the commit: re-validate against the fresh snapshot so
-                # the new rows are covered, then try again.
-                last = exc
-                time.sleep(0.01 * (attempt + 1))
-        raise CommitRetriesExhausted(
-            f"add_constraint {cname!r} on {self.name!r} lost "
-            f"{COMMIT_MAX_RETRIES + 1} OCC races"
-        ) from last
+            return _Commit(constraints={**current, cname: expr})
+
+        self._occ(
+            f"add_constraint {cname!r}", f"add-constraint-{cname}-{uuid.uuid4()}", plan
+        )
+        self._retire_legacy_sidecar()
 
     def drop_constraint(self, cname: str) -> None:
         """Delta ``ALTER TABLE DROP CONSTRAINT``: publish the shrunken
@@ -456,27 +507,21 @@ class LakehouseTable:
         ``add_constraint``), so the drop is time-travelable — a RESTORE
         to an earlier version brings the constraint back. Raises
         KeyError for an unknown name."""
-        txn = f"drop-constraint-{cname}-{uuid.uuid4()}"
-        last: Exception | None = None
-        for attempt in range(COMMIT_MAX_RETRIES + 1):
-            snap = self.log.snapshot()
-            current = self.constraints
+
+        def plan(snap: Snapshot, a: _Attempt) -> _Commit:
+            current = self._checks(snap)
             if cname not in current:
                 raise KeyError(f"no such constraint: {cname!r}")
-            remaining = {n: e for n, e in current.items() if n != cname}
-            try:
-                self.log.commit(
-                    snap.version, txn, snap.schema, constraints=remaining
-                )
-                self._retire_legacy_sidecar()
-                return
-            except CommitConflictError as exc:
-                last = exc
-                time.sleep(0.01 * (attempt + 1))
-        raise CommitRetriesExhausted(
-            f"drop_constraint {cname!r} on {self.name!r} lost "
-            f"{COMMIT_MAX_RETRIES + 1} OCC races"
-        ) from last
+            return _Commit(
+                constraints={n: e for n, e in current.items() if n != cname}
+            )
+
+        self._occ(
+            f"drop_constraint {cname!r}",
+            f"drop-constraint-{cname}-{uuid.uuid4()}",
+            plan,
+        )
+        self._retire_legacy_sidecar()
 
     def add_column(self, field: Field) -> int:
         """Single-column convenience over ``add_columns`` (the additive
@@ -492,17 +537,15 @@ class LakehouseTable:
         versions still sees it. Refuses to orphan a CHECK constraint
         that references the column, and refuses to drop the last
         column."""
-        txn = f"drop-column-{name}-{uuid.uuid4()}"
-        last: Exception | None = None
-        for attempt in range(COMMIT_MAX_RETRIES + 1):
-            snap = self.log.snapshot()
+
+        def plan(snap: Snapshot, a: _Attempt) -> _Commit:
             if not any(f.name == name for f in snap.schema):
                 raise KeyError(f"no such column: {name!r}")
             new_schema = [f for f in snap.schema if f.name != name]
             if not new_schema:
                 raise SchemaError("cannot drop the last column")
             probe = self.spark.createDataFrame([], to_spark_schema(new_schema))
-            for cname, expr in self.constraints.items():
+            for cname, expr in self._checks(snap).items():
                 try:
                     probe.filter(F.expr(expr).cast("boolean")).schema
                 except Exception:
@@ -511,15 +554,11 @@ class LakehouseTable:
                         f"{cname!r} references it ({expr}); drop the "
                         "constraint first"
                     )
-            try:
-                return self.log.commit(snap.version, txn, new_schema)
-            except CommitConflictError as exc:
-                last = exc
-                time.sleep(0.01 * (attempt + 1))
-        raise CommitRetriesExhausted(
-            f"drop_column {name!r} on {self.name!r} lost "
-            f"{COMMIT_MAX_RETRIES + 1} OCC races"
-        ) from last
+            return _Commit(schema=new_schema)
+
+        return self._occ(
+            f"drop_column {name!r}", f"drop-column-{name}-{uuid.uuid4()}", plan
+        )[0]
 
     def _retire_legacy_sidecar(self) -> None:
         """After a constraint commit, the log owns the full set; a
@@ -529,31 +568,6 @@ class LakehouseTable:
             os.remove(os.path.join(self.dir, "_constraints.json"))
         except FileNotFoundError:
             pass
-
-    def _constraint_guard(self, cols: list, df: DataFrame) -> list:
-        """Fold CHECK enforcement into the first projected column so it
-        cannot be pruned away: any row where a constraint evaluates
-        FALSE (NULL passes, SQL CHECK semantics) raises inside the write
-        pass — the `_not_null_guard` discipline."""
-        constraints = self.constraints
-        if not constraints:
-            return cols
-        first = cols[0]
-        dtype = to_spark_schema(self.fields)[0].dataType
-        for cname in sorted(constraints):
-            violated = ~F.coalesce(
-                F.expr(constraints[cname]).cast("boolean"), F.lit(True)
-            )
-            first = F.when(
-                violated,
-                F.raise_error(
-                    F.lit(
-                        f"CHECK constraint {cname!r} violated: "
-                        f"({constraints[cname]})"
-                    )
-                ).cast(dtype),
-            ).otherwise(first)
-        return [first.alias(self.fields[0].name), *cols[1:]]
 
     def exists(self) -> bool:
         return self.log.latest_version() > 0
@@ -672,7 +686,8 @@ class LakehouseTable:
         if prior is not None:
             return prior
 
-        fields = self.fields
+        snap = self.log.snapshot()
+        fields = snap.schema
         # Delta write semantics for EXTRA dataframe columns: error by
         # default (silently dropping data is never correct), evolve the
         # schema first when ``merge_schema=True`` (Delta's
@@ -691,7 +706,8 @@ class LakehouseTable:
                 for f in from_spark_schema(df.select(*extra).schema)
             ]
             self.add_columns(new_fields, txn_id=f"{txn_id}-mergeschema")
-            fields = self.fields
+            snap = self.log.snapshot()
+            fields = snap.schema
         schema = to_spark_schema(fields)
         _validate_cluster_args(fields, cluster_by, zorder_by)
         # A driver-local frame (LocalRelation: pandas/Arrow input, REST
@@ -716,14 +732,11 @@ class LakehouseTable:
         )
         # CHECK constraints ride a second projection over the ALIGNED
         # (post-cast) columns — Delta semantics: constraints see final
-        # values; CollapseProject folds both into one pass. The set
-        # enforced here is captured so the commit loop can detect a
-        # racing add_constraint and re-validate the staged files.
-        enforced = self.constraints
-        if enforced:
-            df = df.select(
-                *self._constraint_guard([df[f.name] for f in fields], df)
-            )
+        # values; CollapseProject folds both into one pass. The files are
+        # staged once, so the commit loop re-validates them against any
+        # CHECK a racing add_constraint commits before this insert does.
+        enforced = self._checks(snap)
+        df = _with_checks(df, fields, enforced)
         if cluster_by or zorder_by:
             # Range-partition (not hash): gives each output file a
             # CONTIGUOUS slice of the cluster-key space, the layout that
@@ -745,49 +758,23 @@ class LakehouseTable:
         stage = os.path.join(self.tmp_dir, txn_id)
         try:
             df.write.mode("overwrite").parquet(stage)
-            adds = self._promote_staged(stage)
+            adds = self._promote_staged(stage, fields)
         finally:
             shutil.rmtree(stage, ignore_errors=True)
         if cluster_by or zorder_by:
             adds = _fill_partition_from_stats(adds, cluster_by or zorder_by)
-        try:
-            if mode == "append":
-                return self._commit_with_retry(
-                    txn_id, adds=adds, removes=[], enforced_constraints=enforced
-                )
-            last: Exception | None = None
-            for attempt in range(COMMIT_MAX_RETRIES + 1):
-                snap = self.log.snapshot()
-                self._recheck_constraints(adds, enforced, snap.constraints)
-                try:
-                    # Commit the SNAPSHOT schema, not the entry-time
-                    # field list: a concurrent add_column landing before
-                    # a retry would otherwise be silently reverted by
-                    # this commit's latest-schema-wins replay (the
-                    # delete/update/compact loops already do this). The
-                    # staged files simply lack the concurrent column and
-                    # read as NULL under the committed schema.
-                    return self.log.commit(
-                        snap.version,
-                        txn_id,
-                        snap.schema,
-                        adds,
-                        [f.path for f in snap.files],
-                    )
-                except CommitConflictError as exc:
-                    last = exc
-                    time.sleep(0.01 * (attempt + 1))
-            raise CommitRetriesExhausted(
-                f"insert overwrite on {self.name!r} lost "
-                f"{COMMIT_MAX_RETRIES + 1} OCC races"
-            ) from last
-        except BaseException:
-            # Terminal commit failure: the promoted files were never made
-            # visible by any log entry — reclaim them rather than leaking
-            # orphans into data/ (reference cleans per-attempt staging,
-            # ``table_service.go:477-494``).
-            self._remove_adds(adds)
-            raise
+
+        def plan(snap: Snapshot, a: _Attempt) -> _Commit:
+            # Committed under the SNAPSHOT schema, not the entry-time
+            # field list: a concurrent add_column landing before a retry
+            # would otherwise be reverted by latest-schema-wins replay.
+            # The staged files simply lack the concurrent column and read
+            # as NULL under the committed schema. An overwrite removes
+            # every file visible at this attempt's snapshot.
+            removes = [f.path for f in snap.files] if mode == "overwrite" else []
+            return _Commit(adds, removes, checked=enforced)
+
+        return self._occ(f"insert {mode}", txn_id, plan, staged=adds)[0]
 
     def delete(
         self,
@@ -818,71 +805,151 @@ class LakehouseTable:
         The reference stubs DeleteTable and has no row deletes
         (``rest_api.go:676-687``); this is beyond-reference surface.
         """
+        return self._rewrite_matches("delete", filter_str, None, txn_id, mode)
+
+    def update(
+        self,
+        filter_str: str,
+        assignments: dict[str, str],
+        txn_id: str | None = None,
+        mode: str = "copy-on-write",
+    ) -> tuple[int | None, int]:
+        """UPDATE: rows matching ``filter_str`` get each column in
+        ``assignments`` set to the given SQL expression (evaluated
+        against the pre-update row); all other rows — and all other
+        files — carry over unchanged. Returns
+        (new_version | None, rows_updated). Same OCC-retry, idempotency,
+        and time-travel behavior as ``delete``.
+
+        ``mode='copy-on-write'`` (default): files whose min/max stats
+        admit matches are fully rewritten with the assignments applied.
+
+        ``mode='merge-on-read'`` (Delta's DV UPDATE dataflow): the
+        matched (file, position) pairs are committed as a deletion
+        vector over the old rows and the REWRITTEN rows append as fresh
+        files — one OCC commit, cost O(matched rows), not O(touched
+        bytes). Row-level results are identical (pinned by the model
+        test's mode coin-flip); compaction later materializes the dvs.
+        Completes the DV write-path triple next to ``delete`` and
+        ``merge``."""
+        return self._rewrite_matches("update", filter_str, assignments, txn_id, mode)
+
+    def _rewrite_matches(
+        self,
+        op: str,
+        filter_str: str,
+        assignments: dict[str, str] | None,
+        txn_id: str | None,
+        mode: str,
+    ) -> tuple[int | None, int]:
+        """The DELETE/UPDATE body: a delete is an update with no
+        assignments (``None``). Matches are computed on the dv-APPLIED
+        scan, so a row already deleted by a deletion vector is neither
+        resurrected by a rewrite nor counted again.
+
+        Copy-on-write rewrites every candidate file (the files whose
+        min/max stats admit matches): without the matched rows for a
+        delete, with the assignments applied to them for an update. The
+        rewrite materializes the files' deletion vectors.
+
+        Merge-on-read writes the matched (file, position) pairs as ONE
+        new dv, unioned with the affected files' existing dv positions,
+        and re-commits those files with the new dv pointer attached
+        (log.commit allows re-adding a path whose dv changes); an update
+        also appends the rewritten rows as fresh files, in the same
+        commit."""
         from mini_lakehouse_control_plane_executor_spark.functions.filters import parse_filter, prune_files
 
         if mode not in ("copy-on-write", "cow", "merge-on-read", "mor"):
-            raise ValueError(f"unknown delete mode {mode!r}")
+            raise ValueError(f"unknown {op} mode {mode!r}")
+        mor = mode in ("merge-on-read", "mor")
         pred = parse_filter(filter_str)
-        txn_id = txn_id or f"delete-{uuid.uuid4()}"
+        txn_id = txn_id or f"{op}-{uuid.uuid4()}"
         prior = self.log.find_txn(txn_id)
         if prior is not None:
             return prior, 0
-        if mode in ("merge-on-read", "mor"):
-            return self._delete_mor(pred, filter_str, txn_id)
 
-        for attempt in range(COMMIT_MAX_RETRIES + 1):
-            snap = self.log.snapshot()
+        def plan(snap: Snapshot, a: _Attempt) -> _Commit | None:
+            unknown = set(assignments or ()) - {f.name for f in snap.schema}
+            if unknown:
+                raise ValueError(f"UPDATE of unknown column(s): {sorted(unknown)}")
             candidates = prune_files(snap.files, filter_str, snap.schema)
             if not candidates:
-                return None, 0
+                return None
             schema = to_spark_schema(snap.schema)
-            # Deletion vectors of candidate files apply here too: a
-            # copy-on-write rewrite of a dv-carrying file must not
-            # resurrect its already-deleted rows (and the rewrite
-            # materializes the dv — the new add carries none).
+            checks = self._checks(snap)
+            n_out = max(1, len(candidates))
+
+            def assigned(df: DataFrame) -> DataFrame:
+                # Rewritten rows pass the same CHECK gate as insert; the
+                # untouched rows trivially satisfy it (they already did).
+                return _with_checks(
+                    df.select(
+                        *[
+                            F.when(pred, F.expr(assignments[f.name]))
+                            .otherwise(F.col(f.name))
+                            .cast(schema[f.name].dataType)
+                            .alias(f.name)
+                            if f.name in assignments
+                            else F.col(f.name)
+                            for f in snap.schema
+                        ]
+                    ),
+                    snap.schema,
+                    checks,
+                )
+
+            if mor:
+                live, src_col, pos_col = self._scan_files(
+                    candidates, schema, with_positions=True
+                )
+                matched = live.filter(pred)
+                dv_adds, n_match = self._write_dv(
+                    a,
+                    matched.select(
+                        F.col(src_col).alias("src"), F.col(pos_col).alias("pos")
+                    ),
+                    candidates,
+                )
+                if not n_match:
+                    return None
+                adds = []
+                if assignments is not None:
+                    adds = a.write(assigned(matched).coalesce(n_out), "rows", snap.schema)
+                return _Commit(adds + dv_adds, checked=checks, info=n_match)
             src = self._scan_files(candidates, schema)
             n_match = src.filter(pred).count()
             if n_match == 0:
-                return None, 0
-            stage = os.path.join(self.tmp_dir, txn_id)
-            # SQL DELETE semantics: a row is deleted only when the predicate
-            # is TRUE. ``~pred`` alone would also drop NULL-evaluating rows
-            # (e.g. ``DELETE WHERE x > 5`` must keep rows with x IS NULL).
-            keep = src.filter(~F.coalesce(pred, F.lit(False))).coalesce(
-                max(1, len(candidates))
+                return None
+            if assignments is None:
+                # SQL DELETE semantics: a row is deleted only when the
+                # predicate is TRUE. ``~pred`` alone would also drop
+                # NULL-evaluating rows (``DELETE WHERE x > 5`` must keep
+                # rows with x IS NULL).
+                out = src.filter(~F.coalesce(pred, F.lit(False)))
+            else:
+                out = assigned(src)
+            adds = a.write(out.coalesce(n_out), "rows", snap.schema)
+            return _Commit(
+                adds, [f.path for f in candidates], checked=checks, info=n_match
             )
-            try:
-                keep.write.mode("overwrite").parquet(stage)
-                adds = self._promote_staged(stage)
-            finally:
-                shutil.rmtree(stage, ignore_errors=True)
-            try:
-                version = self.log.commit(
-                    snap.version, txn_id, snap.schema, adds,
-                    [f.path for f in candidates],
-                )
-                return version, n_match
-            except CommitConflictError:
-                # Concurrent commit: drop our rewrite and re-plan against
-                # the fresh snapshot (same loop as compaction).
-                self._remove_adds(adds)
-                time.sleep(0.01 * (attempt + 1))
-        raise CommitRetriesExhausted(
-            f"delete on {self.name!r} lost {COMMIT_MAX_RETRIES + 1} OCC races"
-        )
+
+        version, n_match = self._occ(op, txn_id, plan)
+        if version is None:
+            return None, 0
+        if mor:
+            self._auto_materialize_dvs()
+        return version, n_match
 
     def _write_dv(
-        self, matches: DataFrame, candidates: list[FileAdd], tag: str
-    ) -> tuple[list[FileAdd], dict[str, int], str | None]:
+        self, a: _Attempt, matches: DataFrame, candidates: list[FileAdd]
+    ) -> tuple[list[FileAdd], int]:
         """Write ONE new deletion-vector parquet carrying ``matches``
         (NEW deletions, as (src=basename, pos) over LIVE rows of
         ``candidates``) unioned with the affected files' existing dv
-        positions (the new dv supersedes the old). Returns
-        (dv-updated FileAdds, per-file new-deletion counts, abs dv path
-        to remove on OCC-conflict cleanup); ([], {}, None) when nothing
-        matched."""
-        from dataclasses import replace as _dc_replace
-
+        positions (the new dv supersedes the old), recorded on ``a``.
+        Returns the dv-updated FileAdds and the number of new deletions;
+        ([], 0) when nothing matched."""
         matches = matches.persist()
         try:
             new_counts = {
@@ -892,34 +959,28 @@ class LakehouseTable:
                 .collect()
             }  # bounded by |candidate files|
             if not new_counts:
-                return [], {}, None
+                return [], 0
             by_name = {os.path.basename(f.path): f for f in candidates}
             affected = [by_name[s] for s in sorted(new_counts)]
             dv_df = matches
             carry = [f for f in affected if f.dv_path]
             if carry:
                 dv_df = dv_df.unionByName(self._dv_rows(carry))
-            stage = os.path.join(self.tmp_dir, f"dv-{tag}")
-            dv_name = f"dv-{uuid.uuid4()}.parquet"
-            try:
-                dv_df.coalesce(1).write.mode("overwrite").parquet(stage)
-                os.makedirs(self.dv_dir, exist_ok=True)
-                shutil.move(
-                    os.path.join(stage, part_files(stage)[0]),
-                    os.path.join(self.dv_dir, dv_name),
-                )
-            finally:
-                shutil.rmtree(stage, ignore_errors=True)
-            rel_dv = os.path.join("_dv", dv_name)
+            stage = os.path.join(a.stage, "dv")
+            dv_df.coalesce(1).write.mode("overwrite").parquet(stage)
+            os.makedirs(self.dv_dir, exist_ok=True)
+            rel_dv = os.path.join("_dv", f"dv-{uuid.uuid4()}.parquet")
+            a.dv = self._abs(rel_dv)
+            shutil.move(os.path.join(stage, part_files(stage)[0]), a.dv)
             adds = [
-                _dc_replace(
+                dc_replace(
                     f,
                     dv_path=rel_dv,
                     dv_rows=f.dv_rows + new_counts[os.path.basename(f.path)],
                 )
                 for f in affected
             ]
-            return adds, new_counts, os.path.join(self.dv_dir, dv_name)
+            return adds, sum(new_counts.values())
         finally:
             matches.unpersist()
 
@@ -956,255 +1017,20 @@ class LakehouseTable:
 
     def _auto_materialize_dvs(self) -> int | None:
         """Post-MoR-commit maintenance pass: rewrite (dv-applied) every
-        flagged file, clearing its dv — its own OCC commit, retried like
-        compaction's. BEST-EFFORT by design: losing every retry leaves
+        flagged file, clearing its dv — its own OCC commit, through the
+        compaction plan. BEST-EFFORT by design: losing every retry leaves
         the files flagged (the next MoR commit or compaction pass picks
         them up) and never fails the DML that triggered the pass.
         Returns the commit version, or None when nothing was flagged or
         every retry lost."""
-        for attempt in range(COMMIT_MAX_RETRIES + 1):
-            snap = self.log.snapshot()
-            flagged = self._dv_flagged(snap)
-            if not flagged:
-                return None
-            txn = f"dvmat-{uuid.uuid4()}"
-            schema = to_spark_schema(snap.schema)
-            stage = os.path.join(self.tmp_dir, txn)
-            adds: list[FileAdd] = []
-            removes: list[str] = []
-            try:
-                for gi, f in enumerate(flagged):
-                    out = os.path.join(stage, f"g{gi}")
-                    self._scan_files([f], schema).coalesce(1).write.mode(
-                        "overwrite"
-                    ).parquet(out)
-                    adds.extend(self._promote_staged(out))
-                    removes.append(f.path)
-            finally:
-                shutil.rmtree(stage, ignore_errors=True)
-            try:
-                return self.log.commit(snap.version, txn, snap.schema, adds, removes)
-            except CommitConflictError:
-                self._remove_adds(adds)
-                time.sleep(0.01 * (attempt + 1))
-        return None
-
-    def _delete_mor(
-        self, pred, filter_str: str, txn_id: str
-    ) -> tuple[int | None, int]:
-        """Merge-on-read DELETE body: compute matching live row
-        positions, union them with the affected files' existing dv
-        positions into ONE new dv parquet, and commit the affected
-        FileAdds with the new dv pointer (adds-only — log.commit allows
-        re-adding an existing path when it swaps the dv). Matches are
-        computed on the dv-APPLIED scan, so re-deleting an
-        already-deleted row can never double-count."""
-        from mini_lakehouse_control_plane_executor_spark.functions.filters import prune_files
-
-        for attempt in range(COMMIT_MAX_RETRIES + 1):
-            snap = self.log.snapshot()
-            candidates = prune_files(snap.files, filter_str, snap.schema)
-            if not candidates:
-                return None, 0
-            schema = to_spark_schema(snap.schema)
-            live, src_col, pos_col = self._scan_files(
-                candidates, schema, with_positions=True
-            )
-            matches = live.filter(pred).select(
-                F.col(src_col).alias("src"), F.col(pos_col).alias("pos")
-            )
-            adds, new_counts, dv_abs = self._write_dv(
-                matches, candidates, f"{txn_id}-a{attempt}"
-            )
-            if not new_counts:
-                return None, 0
-            try:
-                version = self.log.commit(snap.version, txn_id, snap.schema, adds, [])
-                self._auto_materialize_dvs()
-                return version, sum(new_counts.values())
-            except CommitConflictError:
-                _remove_dv(dv_abs)
-                time.sleep(0.01 * (attempt + 1))
-        raise CommitRetriesExhausted(
-            f"delete on {self.name!r} lost {COMMIT_MAX_RETRIES + 1} OCC races"
-        )
-
-    def update(
-        self,
-        filter_str: str,
-        assignments: dict[str, str],
-        txn_id: str | None = None,
-        mode: str = "copy-on-write",
-    ) -> tuple[int | None, int]:
-        """UPDATE: rows matching ``filter_str`` get each column in
-        ``assignments`` set to the given SQL expression (evaluated
-        against the pre-update row); all other rows — and all other
-        files — carry over unchanged. Returns
-        (new_version | None, rows_updated). Same OCC-retry, idempotency,
-        and time-travel behavior as ``delete``.
-
-        ``mode='copy-on-write'`` (default): files whose min/max stats
-        admit matches are fully rewritten with the assignments applied.
-
-        ``mode='merge-on-read'`` (Delta's DV UPDATE dataflow): the
-        matched (file, position) pairs are committed as a deletion
-        vector over the old rows and the REWRITTEN rows append as fresh
-        files — one OCC commit, cost O(matched rows), not O(touched
-        bytes). Row-level results are identical (pinned by the model
-        test's mode coin-flip); compaction later materializes the dvs.
-        Completes the DV write-path triple next to ``delete`` and
-        ``merge``."""
-        from mini_lakehouse_control_plane_executor_spark.functions.filters import parse_filter, prune_files
-
-        if mode not in ("copy-on-write", "cow", "merge-on-read", "mor"):
-            raise ValueError(f"unknown update mode {mode!r}")
-        pred = parse_filter(filter_str)
-        txn_id = txn_id or f"update-{uuid.uuid4()}"
-        prior = self.log.find_txn(txn_id)
-        if prior is not None:
-            return prior, 0
-        unknown = set(assignments) - {f.name for f in self.fields}
-        if unknown:
-            raise ValueError(f"UPDATE of unknown column(s): {sorted(unknown)}")
-        if mode in ("merge-on-read", "mor"):
-            return self._update_mor(pred, filter_str, assignments, txn_id)
-
-        for attempt in range(COMMIT_MAX_RETRIES + 1):
-            snap = self.log.snapshot()
-            candidates = prune_files(snap.files, filter_str, snap.schema)
-            if not candidates:
-                return None, 0
-            schema = to_spark_schema(snap.schema)
-            # dv-aware: the rewrite must not resurrect deleted rows, and
-            # it materializes any dv on the touched files.
-            src = self._scan_files(candidates, schema)
-            n_match = src.filter(pred).count()
-            if n_match == 0:
-                return None, 0
-            out = src.select(
-                *[
-                    F.when(pred, F.expr(assignments[f.name]))
-                    .otherwise(F.col(f.name))
-                    .cast(schema[f.name].dataType)
-                    .alias(f.name)
-                    if f.name in assignments
-                    else F.col(f.name)
-                    for f in snap.schema
-                ]
-            )
-            # Rewritten rows pass the same CHECK gate as insert; the
-            # untouched rows trivially satisfy it (they already did).
-            if self.constraints:
-                out = out.select(
-                    *self._constraint_guard(
-                        [out[f.name] for f in snap.schema], out
-                    )
-                )
-            out = out.coalesce(max(1, len(candidates)))
-            stage = os.path.join(self.tmp_dir, txn_id)
-            try:
-                out.write.mode("overwrite").parquet(stage)
-                adds = self._promote_staged(stage)
-            finally:
-                shutil.rmtree(stage, ignore_errors=True)
-            try:
-                version = self.log.commit(
-                    snap.version, txn_id, snap.schema, adds,
-                    [f.path for f in candidates],
-                )
-                return version, n_match
-            except CommitConflictError:
-                self._remove_adds(adds)
-                time.sleep(0.01 * (attempt + 1))
-        raise CommitRetriesExhausted(
-            f"update on {self.name!r} lost {COMMIT_MAX_RETRIES + 1} OCC races"
-        )
-
-    def _update_mor(
-        self,
-        pred,
-        filter_str: str,
-        assignments: dict[str, str],
-        txn_id: str,
-    ) -> tuple[int | None, int]:
-        """Merge-on-read UPDATE body (Delta's DV UPDATE): the matched
-        live positions become deletion-vector entries over the old
-        files, and the rewritten rows (assignments applied) append as
-        fresh files — both in ONE OCC commit, so readers see the swap
-        atomically. Matches are computed on the dv-APPLIED scan, so a
-        previously MoR-deleted row can never be resurrected as an
-        'updated' copy. Same re-plan-per-attempt loop as
-        ``_delete_mor``; on conflict the fresh files AND the staged dv
-        are both reclaimed before the retry."""
-        from mini_lakehouse_control_plane_executor_spark.functions.filters import prune_files
-
-        for attempt in range(COMMIT_MAX_RETRIES + 1):
-            snap = self.log.snapshot()
-            candidates = prune_files(snap.files, filter_str, snap.schema)
-            if not candidates:
-                return None, 0
-            schema = to_spark_schema(snap.schema)
-            live, src_col, pos_col = self._scan_files(
-                candidates, schema, with_positions=True
-            )
-            matched = live.filter(pred)
-            out = matched.select(
-                *[
-                    F.expr(assignments[f.name])
-                    .cast(schema[f.name].dataType)
-                    .alias(f.name)
-                    if f.name in assignments
-                    else F.col(f.name)
-                    for f in snap.schema
-                ]
-            )
-            # Rewritten rows pass the same CHECK gate as insert; the
-            # dv'd old rows need none (they are being removed).
-            if self.constraints:
-                out = out.select(
-                    *self._constraint_guard(
-                        [out[f.name] for f in snap.schema], out
-                    )
-                )
-            dv_adds, new_counts, dv_abs = self._write_dv(
-                matched.select(
-                    F.col(src_col).alias("src"), F.col(pos_col).alias("pos")
-                ),
-                candidates,
-                f"{txn_id}-a{attempt}",
-            )
-            if not new_counts:
-                return None, 0
-            stage = os.path.join(self.tmp_dir, txn_id)
-            try:
-                # A failing rewrite (e.g. a CHECK-constraint violation
-                # raised while materializing ``out``) must not leak the
-                # already-written dv parquet — nothing referenced it yet.
-                out.coalesce(max(1, len(candidates))).write.mode(
-                    "overwrite"
-                ).parquet(stage)
-                adds = self._promote_staged(stage)
-            except BaseException:
-                _remove_dv(dv_abs)
-                raise
-            finally:
-                shutil.rmtree(stage, ignore_errors=True)
-            try:
-                version = self.log.commit(
-                    snap.version, txn_id, snap.schema, adds + dv_adds, []
-                )
-                self._auto_materialize_dvs()
-                return version, sum(new_counts.values())
-            except CommitConflictError:
-                # Fresh rewritten files are reclaimed; dv_adds point at
-                # live data files (metadata-only updates) so only the
-                # staged dv parquet itself is removed.
-                self._remove_adds(adds)
-                _remove_dv(dv_abs)
-                time.sleep(0.01 * (attempt + 1))
-        raise CommitRetriesExhausted(
-            f"update on {self.name!r} lost {COMMIT_MAX_RETRIES + 1} OCC races"
-        )
+        try:
+            return self._occ(
+                "dv materialization",
+                f"dvmat-{uuid.uuid4()}",
+                self._rewrite_plan(lambda snap: [[f] for f in self._dv_flagged(snap)]),
+            )[0]
+        except CommitRetriesExhausted:
+            return None
 
     def merge(
         self,
@@ -1256,13 +1082,13 @@ class LakehouseTable:
             return prior, 0, 0
 
         fields = self.fields
-        schema = to_spark_schema(fields)
         if key not in {f.name for f in fields}:
             raise ValueError(f"merge key {key!r} not in table schema")
         if when_matched:
             unknown = set(when_matched) - {f.name for f in fields}
             if unknown:
                 raise ValueError(f"when_matched unknown column(s): {sorted(unknown)}")
+        schema = to_spark_schema(fields)
         source = source.select(
             *[
                 _not_null_guard(
@@ -1270,14 +1096,7 @@ class LakehouseTable:
                 ).alias(f.name)
                 for f in fields
             ]
-        )
-        # CHECK constraints gate merge-inserted/updated rows the same
-        # way insert's write pass does (post-cast values).
-        if self.constraints:
-            source = source.select(
-                *self._constraint_guard([source[f.name] for f in fields], source)
-            )
-        source = source.persist(StorageLevel.MEMORY_AND_DISK)
+        ).persist(StorageLevel.MEMORY_AND_DISK)
         try:
             if when_matched is not None:
                 dups = (
@@ -1300,158 +1119,128 @@ class LakehouseTable:
             if bounds["n"] == 0:
                 raise ValueError("merge source is empty")
 
-            for attempt in range(COMMIT_MAX_RETRIES + 1):
-                snap = self.log.snapshot()
-                # Re-resolve the schema PER ATTEMPT: merge rewrites the
-                # candidate files, so rewriting through the entry-time
-                # schema after a concurrent add_column would physically
-                # drop the new column's values from every rewritten file
-                # and the commit would revert the schema via
-                # latest-schema-wins replay. The source frame stays
-                # aligned to the entry-time columns (a concurrent
-                # column reads as NULL for merge-written rows — the
-                # insert-overwrite semantics); target-side columns pass
-                # through the rewrite intact.
+            def _overlaps(f: FileAdd) -> bool:
+                mn, mx = f.min_values.get(key), f.max_values.get(key)
+                if mn is None or mx is None:
+                    return True  # no stats: stay conservative
+                try:
+                    return not (mx < bounds["lo"] or mn > bounds["hi"])
+                except TypeError:
+                    return True
+
+            def plan(snap: Snapshot, a: _Attempt) -> _Commit:
+                # The schema and the CHECK set are this attempt's: merge
+                # rewrites the candidate files, so rewriting through the
+                # entry-time schema after a concurrent add_column would
+                # physically drop the new column's values from every
+                # rewritten file and the commit would revert the schema
+                # via latest-schema-wins replay; and a CHECK committed
+                # while merge retries must gate the rows it writes. The
+                # source rows are re-aligned to this schema: a
+                # concurrent column reads NULL in merge-written rows.
                 fields = snap.schema
                 schema = to_spark_schema(fields)
-
-                def _overlaps(f: FileAdd) -> bool:
-                    mn, mx = f.min_values.get(key), f.max_values.get(key)
-                    if mn is None or mx is None:
-                        return True  # no stats: stay conservative
-                    try:
-                        return not (mx < bounds["lo"] or mn > bounds["hi"])
-                    except TypeError:
-                        return True
+                checks = self._checks(snap)
+                news_src = _with_checks(
+                    source.select(
+                        *[
+                            F.col(f.name)
+                            if f.name in source.columns
+                            else F.lit(None).cast(schema[f.name].dataType).alias(f.name)
+                            for f in fields
+                        ]
+                    ),
+                    fields,
+                    checks,
+                )
                 candidates = [f for f in snap.files if _overlaps(f)]
+                n_out = max(1, len(candidates))
                 n_updated = 0
                 adds: list[FileAdd] = []
                 dv_adds: list[FileAdd] = []
-                dv_abs: str | None = None
-                stage = os.path.join(self.tmp_dir, txn_id)
-                try:
-                    # dv-aware (and [] returns an empty frame): neither mode
-                    # may resurrect already-deleted rows of dv-carrying
-                    # files. Positions ride along for the merge-on-read
-                    # branch; ``cur`` is the live-row view both modes share.
-                    live, src_col, pos_col = self._scan_files(
-                        candidates, schema, with_positions=True
-                    )
-                    cur = live.drop(src_col, pos_col)
-                    src_keys = source.select(key).distinct()
-                    if candidates:
-                        if mor:
-                            # Matched target rows become dv entries instead
-                            # of a candidate-file rewrite; their replacement
-                            # rows (source / when_matched output) append as
-                            # fresh files below.
-                            matched_pos = live.join(
-                                src_keys, key, "left_semi"
-                            ).select(
-                                F.col(src_col).alias("src"),
-                                F.col(pos_col).alias("pos"),
-                            )
-                            dv_adds, new_counts, dv_abs = self._write_dv(
-                                matched_pos, candidates, f"{txn_id}-a{attempt}"
-                            )
-                            n_updated = sum(new_counts.values())
-                        else:
-                            n_updated = cur.join(src_keys, key, "left_semi").count()
-                            kept = cur.join(src_keys, key, "left_anti")
-                            kept.coalesce(max(1, len(candidates))).write.mode(
-                                "overwrite"
-                            ).parquet(os.path.join(stage, "kept"))
-                        if when_matched is not None:
-                            matched = cur.alias("target").join(
-                                source.alias("source"),
-                                F.col(f"target.{key}") == F.col(f"source.{key}"),
-                            )
-                            updated = matched.select(
-                                *[
-                                    _not_null_guard(
-                                        F.expr(when_matched[f.name]).cast(
-                                            schema[f.name].dataType
-                                        ),
-                                        f,
-                                    ).alias(f.name)
-                                    if f.name in when_matched
-                                    else F.col(f"target.{f.name}").alias(f.name)
-                                    for f in fields
-                                ]
-                            )
-                            # when_matched assignments produce NEW values, so
-                            # they pass the same CHECK gate as inserts (the
-                            # source-side guard above cannot cover them).
-                            if self.constraints:
-                                updated = updated.select(
-                                    *self._constraint_guard(
-                                        [updated[f.name] for f in fields], updated
-                                    )
-                                )
-                            updated.coalesce(max(1, len(candidates))).write.mode(
-                                "overwrite"
-                            ).parquet(os.path.join(stage, "upd"))
-                    # WHEN NOT MATCHED rows (or the whole source for replace
-                    # semantics), written at natural parallelism — a large
-                    # upsert source must not serialize through one task.
-                    if when_matched is None:
-                        news = source if insert_unmatched else source.join(
-                            cur, key, "left_semi"
+                # dv-aware (and [] returns an empty frame): neither mode
+                # may resurrect already-deleted rows of dv-carrying
+                # files. Positions ride along for the merge-on-read
+                # branch; ``cur`` is the live-row view both modes share.
+                live, src_col, pos_col = self._scan_files(
+                    candidates, schema, with_positions=True
+                )
+                cur = live.drop(src_col, pos_col)
+                src_keys = source.select(key).distinct()
+                if candidates:
+                    if mor:
+                        # Matched target rows become dv entries instead
+                        # of a candidate-file rewrite; their replacement
+                        # rows (source / when_matched output) append as
+                        # fresh files below.
+                        matched_pos = live.join(src_keys, key, "left_semi").select(
+                            F.col(src_col).alias("src"), F.col(pos_col).alias("pos")
                         )
-                        # rows_inserted = source rows whose key has no match
-                        # in the target. Counted on the SOURCE side — the
-                        # matched-target count (n_updated) over-counts when
-                        # one source key matches several target rows.
-                        n_inserted = (
-                            bounds["n"] - source.join(cur, key, "left_semi").count()
-                            if insert_unmatched
-                            else 0
-                        )
+                        dv_adds, n_updated = self._write_dv(a, matched_pos, candidates)
                     else:
-                        news = (
-                            source.join(cur, key, "left_anti")
-                            if insert_unmatched
-                            else None
+                        n_updated = cur.join(src_keys, key, "left_semi").count()
+                        kept = cur.join(src_keys, key, "left_anti")
+                        adds += a.write(kept.coalesce(n_out), "kept", fields)
+                    if when_matched is not None:
+                        matched = cur.alias("target").join(
+                            source.alias("source"),
+                            F.col(f"target.{key}") == F.col(f"source.{key}"),
                         )
-                        n_inserted = news.count() if news is not None else 0
-                    if news is not None:
-                        news.write.mode("overwrite").parquet(os.path.join(stage, "src"))
-                    for sub in ("kept", "upd", "src"):
-                        subdir = os.path.join(stage, sub)
-                        if os.path.isdir(subdir):
-                            adds.extend(self._promote_staged(subdir))
-                except BaseException:
-                    # A failing write (e.g. a CHECK violation in the
-                    # when_matched output or the inserted rows) must not
-                    # leak the dv parquet or files promoted so far:
-                    # nothing references them yet.
-                    self._remove_adds(adds)
-                    _remove_dv(dv_abs)
-                    raise
-                finally:
-                    shutil.rmtree(stage, ignore_errors=True)
-                try:
-                    version = self.log.commit(
-                        snap.version,
-                        txn_id,
-                        fields,
-                        adds + dv_adds,
-                        [] if mor else [f.path for f in candidates],
+                        updated = matched.select(
+                            *[
+                                _not_null_guard(
+                                    F.expr(when_matched[f.name]).cast(
+                                        schema[f.name].dataType
+                                    ),
+                                    f,
+                                ).alias(f.name)
+                                if f.name in when_matched
+                                else F.col(f"target.{f.name}").alias(f.name)
+                                for f in fields
+                            ]
+                        )
+                        # when_matched assignments produce NEW values, so
+                        # they pass the same CHECK gate as inserts.
+                        updated = _with_checks(updated, fields, checks)
+                        adds += a.write(updated.coalesce(n_out), "upd", fields)
+                # WHEN NOT MATCHED rows (or the whole source for replace
+                # semantics), written at natural parallelism — a large
+                # upsert source must not serialize through one task.
+                if when_matched is None:
+                    news = news_src if insert_unmatched else news_src.join(
+                        cur, key, "left_semi"
                     )
-                    if mor and dv_adds:
-                        self._auto_materialize_dvs()
-                    return version, n_updated, n_inserted
-                except CommitConflictError:
-                    # Only FRESH files are reclaimed — dv_adds point at
-                    # live data files (metadata-only updates).
-                    self._remove_adds(adds)
-                    _remove_dv(dv_abs)
-                    time.sleep(0.01 * (attempt + 1))
-            raise CommitRetriesExhausted(
-                f"merge on {self.name!r} lost {COMMIT_MAX_RETRIES + 1} OCC races"
-            )
+                    # rows_inserted = source rows whose key has no match
+                    # in the target. Counted on the SOURCE side — the
+                    # matched-target count (n_updated) over-counts when
+                    # one source key matches several target rows.
+                    n_inserted = (
+                        bounds["n"] - source.join(cur, key, "left_semi").count()
+                        if insert_unmatched
+                        else 0
+                    )
+                else:
+                    news = (
+                        news_src.join(cur, key, "left_anti")
+                        if insert_unmatched
+                        else None
+                    )
+                    n_inserted = news.count() if news is not None else 0
+                if news is not None:
+                    adds += a.write(news, "src", fields)
+                return _Commit(
+                    adds + dv_adds,
+                    [] if mor else [f.path for f in candidates],
+                    checked=checks,
+                    info=(n_updated, n_inserted),
+                )
+
+            version, (n_updated, n_inserted) = self._occ("merge", txn_id, plan)
         finally:
             source.unpersist()
+        if mor and n_updated:
+            self._auto_materialize_dvs()
+        return version, n_updated, n_inserted
 
     def add_columns(self, new_fields: list[Field], txn_id: str | None = None) -> int:
         """Additive schema evolution: append nullable columns. Existing
@@ -1468,30 +1257,23 @@ class LakehouseTable:
                 raise SchemaError(
                     f"new column {f.name!r} must be nullable (existing rows have no value)"
                 )
-        last: Exception | None = None
-        for attempt in range(COMMIT_MAX_RETRIES + 1):
-            # ONE snapshot per attempt: schema and commit base must come
-            # from the same log read. Reading self.fields and then
-            # latest_version() separately lets a concurrent schema commit
-            # land between the two — base == latest, so the commit
-            # succeeds with a merge computed from the STALE schema,
-            # silently reverting the winner's column via latest-schema-
-            # wins replay. Racing an identical column name still raises.
-            snap = self.log.snapshot()
+
+        def plan(snap: Snapshot, a: _Attempt) -> _Commit:
+            # Schema and commit base come from the attempt's ONE
+            # snapshot: reading self.fields and the latest version
+            # separately would let a concurrent schema commit land
+            # between the two, and this commit would silently revert the
+            # winner's column via latest-schema-wins replay. Racing an
+            # identical column name still raises.
             names = {f.name for f in snap.schema}
             for f in new_fields:
                 if f.name in names:
                     raise SchemaError(f"column {f.name!r} already exists")
             merged = list(snap.schema) + list(new_fields)
             validate_schema(merged)
-            try:
-                return self.log.commit(snap.version, txn_id, merged)
-            except CommitConflictError as exc:
-                last = exc
-                time.sleep(0.01 * (attempt + 1))
-        raise CommitRetriesExhausted(
-            f"add_columns on {self.name!r} lost {COMMIT_MAX_RETRIES + 1} OCC races"
-        ) from last
+            return _Commit(schema=merged)
+
+        return self._occ("add_columns", txn_id, plan)[0]
 
     def insert_path(
         self, path: str, fmt: str = "parquet", txn_id: str | None = None, **options
@@ -1509,12 +1291,11 @@ class LakehouseTable:
             df = reader.options(**options).parquet(path)
         return self.insert(df, txn_id=txn_id)
 
-    def _promote_staged(self, stage: str) -> list[FileAdd]:
+    def _promote_staged(self, stage: str, fields: list[Field]) -> list[FileAdd]:
         """Move staged part files into data/ with reference-style names and
-        harvest footer stats (``table_service.go:455-474``). A part file
-        whose footer reports 0 rows (Spark writes one when a write's first
-        partition is empty) is deleted, not committed."""
-        fields = self.fields
+        harvest footer stats of ``fields`` (``table_service.go:455-474``).
+        A part file whose footer reports 0 rows (Spark writes one when a
+        write's first partition is empty) is deleted, not committed."""
         adds: list[FileAdd] = []
         for i, fname in enumerate(part_files(stage)):
             src = os.path.join(stage, fname)
@@ -1568,20 +1349,18 @@ class LakehouseTable:
                 pass
 
     def _violated_constraint(
-        self, adds: list[FileAdd], constraints: dict[str, str]
+        self, adds: list[FileAdd], constraints: dict[str, str], fields: list[Field]
     ) -> str | None:
         """Name of the first CHECK constraint any row in ``adds``
         violates, else None. ONE aggregate scan evaluates every
         constraint (post-cast values — the files were written through
         the schema-aligned projection, so semantics match the in-write
-        ``_constraint_guard``; TRUE/NULL passes, FALSE fails). Used when a
-        constraint set changes between a writer's enforcement pass and
-        its OCC commit."""
+        ``_with_checks``; TRUE/NULL passes, FALSE fails)."""
         if not constraints or not adds:
             return None
         names = sorted(constraints)
         row = (
-            self.spark.read.schema(self.spark_schema)
+            self.spark.read.schema(to_spark_schema(fields))
             .parquet(*[os.path.join(self.dir, a.path) for a in adds])
             .agg(
                 *[
@@ -1602,51 +1381,84 @@ class LakehouseTable:
         return next((n for n in names if row[n]), None)
 
     def _recheck_constraints(
-        self,
-        adds: list[FileAdd],
-        enforced: dict[str, str],
-        current: dict[str, str],
+        self, adds: list[FileAdd], enforced: dict[str, str], snap: Snapshot
     ) -> None:
-        """If CHECKs changed since this write's enforcement pass (a
-        racing ``add_constraint`` won the OCC), validate the staged adds
-        against the constraints it introduced before committing."""
-        delta = {
-            n: e for n, e in current.items() if enforced.get(n) != e
-        }
-        bad = self._violated_constraint(adds, delta)
+        """If ``snap``'s CHECK set differs from the one ``adds`` were
+        written under (a racing ``add_constraint`` won the OCC),
+        validate them against the constraints it introduced before
+        committing."""
+        current = self._checks(snap)
+        delta = {n: e for n, e in current.items() if enforced.get(n) != e}
+        bad = self._violated_constraint(adds, delta, snap.schema)
         if bad:
             raise ValueError(
                 f"CHECK constraint {bad!r} (added concurrently) violated "
                 f"by this write: ({current[bad]})"
             )
 
-    def _commit_with_retry(
+    def _occ(
         self,
-        txn_id: str,
-        adds: list[FileAdd],
-        removes: list[str],
-        enforced_constraints: dict[str, str] | None = None,
-    ) -> int:
-        """OCC commit, refreshing base_version on conflict, ≤3 retries
-        (``transaction_manager.go:124-233``)."""
+        op: str,
+        txn: str,
+        plan: Callable[[Snapshot, _Attempt], _Commit | None],
+        staged: list[FileAdd] = (),
+    ) -> tuple[int | None, object]:
+        """The OCC commit loop every table write goes through
+        (``transaction_manager.go:124-233``). Each attempt takes ONE
+        snapshot and hands it to ``plan``, which stages the attempt's
+        files and returns what to commit, or None for "nothing to do";
+        the commit is made against that snapshot's version and (unless
+        the plan names another) its schema, after the new rows are
+        re-checked against any CHECK the plan did not enforce.
+
+        An attempt that loses the race, or raises in its plan or its
+        commit, is undone: the data files and the dv file it promoted
+        are removed (``_Attempt.discard``); every attempt's
+        ``_tmp/<txn>/`` stage is removed once it ends. A lost race backs
+        off ``0.01 * (attempt + 1)`` s and re-plans; after
+        COMMIT_MAX_RETRIES retries the write raises
+        CommitRetriesExhausted. ``staged``: files written once before
+        the loop and committed by every attempt (an insert's), removed
+        only when the write fails for good.
+
+        Returns (version, the plan's ``info``), or (None, None) when the
+        plan had nothing to do."""
         last: Exception | None = None
-        for attempt in range(COMMIT_MAX_RETRIES + 1):
+        for n in range(COMMIT_MAX_RETRIES + 1):
             snap = self.log.snapshot()
-            base = snap.version
-            if enforced_constraints is not None:
-                self._recheck_constraints(
-                    adds, enforced_constraints, snap.constraints
-                )
+            a = _Attempt(self, txn)
             try:
-                return self.log.commit(base, txn_id, self.fields, adds, removes)
+                c = plan(snap, a)
+                if c is None:
+                    return None, None
+                if c.checked is not None:
+                    self._recheck_constraints([*a.files, *staged], c.checked, snap)
+                extra = {} if c.constraints is None else {"constraints": c.constraints}
+                version = self.log.commit(
+                    snap.version,
+                    txn,
+                    snap.schema if c.schema is None else c.schema,
+                    c.adds,
+                    c.removes,
+                    **extra,
+                )
+                return version, c.info
             except CommitConflictError as exc:
+                a.discard()
                 last = exc
-                time.sleep(0.01 * (attempt + 1))
-        # Typed exhaustion (not the last bare conflict) — the same error
-        # contract as overwrite/delete/update/merge, so callers can tell
-        # one lost race from running out of retries.
+            except BaseException:
+                # A commit that failed after its entry landed (say, in
+                # the checkpoint write) owns its files.
+                if self.log.find_txn(txn) is None:
+                    a.discard()
+                    self._remove_adds(staged)
+                raise
+            finally:
+                shutil.rmtree(a.stage, ignore_errors=True)
+            time.sleep(0.01 * (n + 1))
+        self._remove_adds(staged)
         raise CommitRetriesExhausted(
-            f"commit on {self.name!r} lost {COMMIT_MAX_RETRIES + 1} OCC races"
+            f"{op} on {self.name!r} lost {COMMIT_MAX_RETRIES + 1} OCC races"
         ) from last
 
     # -- read path -----------------------------------------------------
@@ -2000,7 +1812,8 @@ class LakehouseTable:
         on OCC conflict re-plan from the fresh snapshot and retry ≤3
         (``compaction_service.go:336-496,712-820``). Old versions remain
         readable (property 30, ``design.md:401-403``). Returns the new
-        version, or None if nothing to compact.
+        version, or None if nothing to compact; raises
+        CommitRetriesExhausted when every attempt loses its race.
 
         ``cluster_by`` switches to CLUSTERED compaction (Delta's
         ``OPTIMIZE ... ZORDER BY`` analogue for linear keys): ALL
@@ -2029,60 +1842,60 @@ class LakehouseTable:
             prune_files,
         )
 
-        _validate_cluster_args(self.fields, cluster_by, zorder_by)
-        for _ in range(COMMIT_MAX_RETRIES + 1):
-            snap = self.log.snapshot()
+        def groups(snap: Snapshot) -> list[list[FileAdd]]:
+            _validate_cluster_args(snap.schema, cluster_by, zorder_by)
             pool = list(snap.files)
             if where:
                 pool = prune_files(pool, where, snap.schema)
             if cluster_by or zorder_by:
-                groups = [pool] if pool else []
-            else:
-                groups = self.compaction_candidates(snap, files=pool)
+                return [pool] if pool else []
+            return self.compaction_candidates(snap, files=pool)
+
+        # A caller-supplied txn id (the session's compaction run id, so
+        # log/status/commit lines correlate) names every attempt: a lost
+        # attempt never registered it.
+        return self._occ(
+            "compact",
+            txn_id or f"compact-{uuid.uuid4()}",
+            self._rewrite_plan(groups, cluster_by, zorder_by),
+        )[0]
+
+    def _rewrite_plan(
+        self,
+        groups_of: Callable[[Snapshot], list[list[FileAdd]]],
+        cluster_by: list[str] | None = None,
+        zorder_by: list[str] | None = None,
+    ) -> Callable[[Snapshot, _Attempt], _Commit | None]:
+        """Plan that rewrites each file group ``groups_of(snap)`` names
+        into fresh files (one per group, or the clustered layout) and
+        removes the group's files; nothing to do when it names none.
+        The scan is dv-aware: the rewrite drops deleted rows and its
+        files carry no dv, which is what materializes deletion vectors."""
+
+        def plan(snap: Snapshot, a: _Attempt) -> _Commit | None:
+            groups = groups_of(snap)
             if not groups:
                 return None
-            # Caller-supplied txn id (the session's compaction run id,
-            # so log/status/commit lines correlate) is safe to REUSE
-            # across OCC retries: a conflicted attempt never registered
-            # the txn, and its staging dir was already swept.
-            txn = txn_id or f"compact-{uuid.uuid4()}"
-            adds: list[FileAdd] = []
-            removes: list[str] = []
-            stage = os.path.join(self.tmp_dir, txn)
             schema = to_spark_schema(snap.schema)
-            try:
-                for gi, group in enumerate(groups):
-                    out = os.path.join(stage, f"g{gi}")
-                    # dv-aware: compaction is what MATERIALIZES deletion
-                    # vectors — the rewrite drops the deleted rows and the
-                    # fresh adds carry no dv.
-                    df = self._scan_files(group, schema)
-                    if cluster_by or zorder_by:
-                        n_out = max(
-                            1,
-                            -(-sum(f.size for f in group) // COMPACT_TARGET_FILE_SIZE),
-                        )
-                        df = _cluster_layout(
-                            df, n_out, cluster_by, zorder_by,
-                            {f.name: f.type for f in snap.schema},
-                        )
-                    else:
-                        df = df.coalesce(1)
-                    df.write.mode("overwrite").parquet(out)
-                    adds.extend(self._promote_staged(out))
-                    removes.extend(f.path for f in group)
-            finally:
-                shutil.rmtree(stage, ignore_errors=True)
+            adds: list[FileAdd] = []
+            for gi, group in enumerate(groups):
+                df = self._scan_files(group, schema)
+                if cluster_by or zorder_by:
+                    n_out = max(
+                        1, -(-sum(f.size for f in group) // COMPACT_TARGET_FILE_SIZE)
+                    )
+                    df = _cluster_layout(
+                        df, n_out, cluster_by, zorder_by,
+                        {f.name: f.type for f in snap.schema},
+                    )
+                else:
+                    df = df.coalesce(1)
+                adds += a.write(df, f"g{gi}", snap.schema)
             if cluster_by or zorder_by:
                 adds = _fill_partition_from_stats(adds, cluster_by or zorder_by)
-            try:
-                return self.log.commit(snap.version, txn, snap.schema, adds, removes)
-            except CommitConflictError:
-                # Another writer advanced the table: drop our rewrite
-                # output and re-plan against the new snapshot.
-                self._remove_adds(adds)
-                continue
-        return None
+            return _Commit(adds, [f.path for g in groups for f in g])
+
+        return plan
 
     def restore(self, version: int, txn_id: str | None = None) -> int:
         """Delta-style RESTORE TABLE ... TO VERSION AS OF: make the
@@ -2112,36 +1925,20 @@ class LakehouseTable:
                 f"version {version} is no longer restorable: "
                 f"{len(missing)} data file(s) vacuumed (e.g. {missing[0]!r})"
             )
-        last: Exception | None = None
-        for attempt in range(COMMIT_MAX_RETRIES + 1):
-            cur = self.log.snapshot()
-            cur_paths = {f.path for f in cur.files}
-            tgt_paths = {f.path for f in target.files}
+
+        def plan(snap: Snapshot, a: _Attempt) -> _Commit:
             # Diff on the (path, dv) PAIR: a file whose deletion vector
             # changed since the target version must be re-added with the
             # target's dv pointer (possibly none — that UNDOES a
             # merge-on-read delete), which log.commit allows for
-            # dv-changing re-adds.
-            cur_keys = {(f.path, f.dv_path) for f in cur.files}
-            adds = [
-                f for f in target.files if (f.path, f.dv_path) not in cur_keys
-            ]
-            removes = sorted(cur_paths - tgt_paths)
-            try:
-                # Constraints restore with the data (Delta versions CHECK
-                # constraints in the log; so do we).
-                return self.log.commit(
-                    cur.version,
-                    txn,
-                    target.schema,
-                    adds,
-                    removes,
-                    constraints=dict(target.constraints),
-                )
-            except CommitConflictError as exc:
-                last = exc
-                time.sleep(0.01 * (attempt + 1))
-        raise CommitRetriesExhausted(
-            f"restore of {self.name!r} to v{version} lost "
-            f"{COMMIT_MAX_RETRIES + 1} OCC races"
-        ) from last
+            # dv-changing re-adds. Constraints restore with the data
+            # (Delta versions CHECK constraints in the log; so do we).
+            cur_keys = {(f.path, f.dv_path) for f in snap.files}
+            return _Commit(
+                [f for f in target.files if (f.path, f.dv_path) not in cur_keys],
+                sorted(set(snap.file_paths) - set(target.file_paths)),
+                schema=target.schema,
+                constraints=dict(target.constraints),
+            )
+
+        return self._occ(f"restore to v{version}", txn, plan)[0]

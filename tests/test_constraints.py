@@ -4,6 +4,7 @@ every insert's write pass — TRUE or NULL passes, FALSE fails the whole
 transaction and commits nothing."""
 
 import os
+from dataclasses import replace
 
 import pytest
 
@@ -260,18 +261,54 @@ def test_commit_recheck_catches_racing_add_constraint(lake, spark):
     lake.insert("crc", _df(spark, [(1, -5.0, "new")]))
     t = lake.table("crc")
     snap = t.snapshot()
+
+    def at(current):
+        return replace(snap, constraints=current)
+
     # Directly exercise the commit-time recheck against the staged adds.
     with pytest.raises(ValueError, match="added concurrently"):
         t._recheck_constraints(
-            snap.files, enforced={}, current={"pos": "amount > 0"}
+            snap.files, enforced={}, snap=at({"pos": "amount > 0"})
         )
     # No change to the enforced set -> no scan, no error.
-    t._recheck_constraints(snap.files, enforced={}, current={})
+    t._recheck_constraints(snap.files, enforced={}, snap=at({}))
     t._recheck_constraints(
         snap.files,
         enforced={"neg": "amount < 0"},
-        current={"neg": "amount < 0"},
+        snap=at({"neg": "amount < 0"}),
     )
+
+
+def test_merge_honours_check_added_while_it_retries(lake, spark, monkeypatch):
+    """A CHECK committed between a merge's plan and its commit gates the
+    merge's retry: the retried merge must not commit a row that CHECK
+    rejects, and the files its two attempts wrote are removed."""
+    lake.create_table("mrc", SCHEMA)
+    lake.insert("mrc", _df(spark, [(1, 5.0, "new")]))
+    t = lake.table("mrc")
+    version = t.log.latest_version()
+    data_files = sorted(os.listdir(t.data_dir))
+    real_commit = t.log.commit
+    raced = {"done": False}
+
+    def racing_commit(base_version, txn_id, schema, adds=None, removes=None, **kw):
+        # The merge's first commit: a concurrent add_constraint wins the
+        # version first, so the merge's CAS loses and it retries.
+        if txn_id.startswith("merge-race") and not raced["done"]:
+            raced["done"] = True
+            t.add_constraint("nonneg", "amount >= 0")
+        return real_commit(base_version, txn_id, schema, adds, removes, **kw)
+
+    monkeypatch.setattr(t.log, "commit", racing_commit)
+    with pytest.raises(Exception, match="nonneg"):
+        t.merge(_df(spark, [(3, -5.0, "new")]), key="id", txn_id="merge-race-1")
+    monkeypatch.setattr(t.log, "commit", real_commit)
+    assert raced["done"]
+    assert t.log.latest_version() == version + 1  # only the constraint
+    assert t.constraints == {"nonneg": "amount >= 0"}
+    assert sorted((r.id, r.amount) for r in t.read().collect()) == [(1, 5.0)]
+    assert sorted(os.listdir(t.data_dir)) == data_files
+    assert os.listdir(t.tmp_dir) == []
 
 
 def test_commit_timestamps_monotone(lake, spark, tmp_path):

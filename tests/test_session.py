@@ -41,6 +41,29 @@ def test_default_driver_heap_fits_the_machine(spark, monkeypatch):
         assert spark.conf.get("spark.driver.memory") == want
 
 
+def test_hadoop_settings_reach_a_running_session(spark, monkeypatch):
+    """``spark.hadoop.*`` settings from ``extra_conf`` and from
+    ``SPARK_GRAFT_CONF_*`` land in the Hadoop conf of every query even
+    when ``get_spark`` returns an already running session."""
+    monkeypatch.setenv("SPARK_GRAFT_CONF_spark__hadoop__minilake__probe__env", "8")
+    got = session.get_spark(
+        "mini_lakehouse_tests",
+        cpus=8,
+        shuffle_partitions=8,
+        extra_conf={"spark.hadoop.minilake.probe.extra": "7"},
+    )
+    try:
+        assert got is spark
+        conf = spark._jsparkSession.sessionState().newHadoopConf()
+        assert conf.get("minilake.probe.extra") == "7"
+        assert conf.get("minilake.probe.env") == "8"
+    finally:
+        for key in ("minilake.probe.extra", "minilake.probe.env"):
+            spark.conf.unset(f"spark.hadoop.{key}")
+            spark._jsc.hadoopConfiguration().unset(key)
+            spark._jsparkSession.sharedState().hadoopConf().unset(key)
+
+
 def run_every_io_path(spark, root):
     """Write and read back through each I/O path the package uses."""
     df = spark.range(20).selectExpr("id", "cast(id as string) s")

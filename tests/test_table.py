@@ -318,8 +318,12 @@ def test_delete_keeps_null_predicate_rows(lake, spark):
 
 
 def test_retries_exhausted_is_typed_error(lake, spark, monkeypatch):
-    """After losing every OCC retry, delete/update/merge raise
-    CommitRetriesExhausted (a CommitConflictError), not a TypeError."""
+    """After losing every OCC retry, every table write raises
+    CommitRetriesExhausted (a CommitConflictError) naming its operation,
+    not a TypeError, and compaction does not pass it off as "nothing to
+    compact" (None)."""
+    import os
+
     import pytest
 
     from mini_lakehouse_control_plane_executor_spark.table.log import (
@@ -330,8 +334,11 @@ def test_retries_exhausted_is_typed_error(lake, spark, monkeypatch):
     lake.create_table("occ", SCHEMA)
     t = lake.table("occ")
     t.insert(_df(spark, 0, 20))
+    t.add_constraint("k_pos", "k >= 0")
+    version = t.log.latest_version()
+    data_files = sorted(os.listdir(t.data_dir))
 
-    def always_conflict(base, txn_id, schema, adds=None, removes=None):
+    def always_conflict(base, txn_id, schema, adds=None, removes=None, **kw):
         raise CommitConflictError(base, base + 1)
 
     monkeypatch.setattr(t.log, "commit", always_conflict)
@@ -341,8 +348,63 @@ def test_retries_exhausted_is_typed_error(lake, spark, monkeypatch):
         t.update("k < 5", {"v": "'z'"})
     with pytest.raises(CommitRetriesExhausted, match="merge"):
         t.merge(_df(spark, 0, 5), "k")
+    with pytest.raises(CommitRetriesExhausted, match="compact"):
+        t.compact(cluster_by=["k"])
+    with pytest.raises(CommitRetriesExhausted, match="restore"):
+        t.restore(2)
+    with pytest.raises(CommitRetriesExhausted, match="add_columns"):
+        t.add_columns([Field("note", "string", True)])
+    with pytest.raises(CommitRetriesExhausted, match="drop_column"):
+        t.drop_column("x")
+    with pytest.raises(CommitRetriesExhausted, match="add_constraint"):
+        t.add_constraint("k_small", "k < 100")
+    with pytest.raises(CommitRetriesExhausted, match="drop_constraint"):
+        t.drop_constraint("k_pos")
+    with pytest.raises(CommitRetriesExhausted, match="insert overwrite"):
+        t.insert(_df(spark, 20, 25), mode="overwrite")
     with pytest.raises(CommitConflictError):  # subclass relationship holds
         t.insert(_df(spark, 20, 25))
+    assert t.log.latest_version() == version
+    assert sorted(os.listdir(t.data_dir)) == data_files
+    assert os.listdir(t.tmp_dir) == []
+
+
+def test_failed_compaction_leaves_data_clean(lake, spark, monkeypatch):
+    """A compaction whose second group fails to rewrite raises, commits
+    nothing, and leaves no promoted file of its first group in data/."""
+    import os
+
+    import pytest
+
+    lake.create_table("cfail", SCHEMA)
+    t = lake.table("cfail")
+    for i in range(4):
+        t.insert(_df(spark, i * 10, i * 10 + 10).coalesce(1))
+    sizes = [f.size for f in t.snapshot().files]
+    assert len(sizes) == 4 and 3 * min(sizes) > 2 * max(sizes)
+    # Two files fit a group, three do not: two groups of two.
+    monkeypatch.setattr(table_mod, "COMPACT_TARGET_FILE_SIZE", 2 * max(sizes))
+    assert [len(g) for g in t.compaction_candidates(t.snapshot())] == [2, 2]
+    version = t.log.latest_version()
+    data_files = sorted(os.listdir(t.data_dir))
+    real_scan = t._scan_files
+    scans = []
+
+    def failing_scan(files, schema, **kw):
+        scans.append(files)
+        if len(scans) == 2:
+            raise RuntimeError("second group's scan failed")
+        return real_scan(files, schema, **kw)
+
+    monkeypatch.setattr(t, "_scan_files", failing_scan)
+    with pytest.raises(RuntimeError, match="second group"):
+        t.compact()
+    monkeypatch.setattr(t, "_scan_files", real_scan)
+    assert len(scans) == 2
+    assert t.log.latest_version() == version
+    assert sorted(os.listdir(t.data_dir)) == data_files
+    assert os.listdir(t.tmp_dir) == []
+    assert t.read().count() == 40
 
 
 def test_merge_source_parallel_write(lake, spark):
