@@ -332,15 +332,22 @@ def topk_orders(spark, sf_dir):
     "q1_pricing_summary",
     oracle="""
     SELECT l_returnflag, l_linestatus,
-           CAST(round(sum(l_quantity), 2) AS DOUBLE) AS sum_qty,
-           CAST(round(sum(l_extendedprice), 2) AS DOUBLE) AS sum_base_price,
-           CAST(round(sum(l_extendedprice * (1 - l_discount)), 2) AS DOUBLE) AS sum_disc_price,
-           CAST(round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2) AS DOUBLE) AS sum_charge,
+           CAST(round(sum(qty), 2) AS DOUBLE) AS sum_qty,
+           CAST(round(sum(price), 2) AS DOUBLE) AS sum_base_price,
+           CAST(round(sum(price * (1 - disc)), 2) AS DOUBLE) AS sum_disc_price,
+           CAST(round(sum(price * (1 - disc) * (1 + tax)), 2) AS DOUBLE) AS sum_charge,
            CAST(round(avg(l_quantity), 4) AS DOUBLE) AS avg_qty,
            CAST(round(avg(l_extendedprice), 4) AS DOUBLE) AS avg_price,
            CAST(round(avg(l_discount), 6) AS DOUBLE) AS avg_disc,
            count(*) AS count_order
-    FROM lineitem
+    FROM (
+        SELECT *,
+               CAST(l_quantity AS DECIMAL(15,2)) AS qty,
+               CAST(l_extendedprice AS DECIMAL(15,2)) AS price,
+               CAST(l_discount AS DECIMAL(15,2)) AS disc,
+               CAST(l_tax AS DECIMAL(15,2)) AS tax
+        FROM lineitem
+    )
     WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
     GROUP BY l_returnflag, l_linestatus
     ORDER BY l_returnflag, l_linestatus
@@ -349,17 +356,28 @@ def topk_orders(spark, sf_dir):
 def q1_pricing_summary(spark, sf_dir):
     """TPC-H Q1: the flagship scan→filter→wide-agg pipeline. Aggregates
     over expressions (the reference's aspirational-but-unimplemented SQL,
-    golden_query_test.go:123-132) are native here."""
+    golden_query_test.go:123-132) are native here.
+
+    The money sums are exact: a double sum can land on either side of a
+    half cent depending on summation order, and the two engines round
+    such a double differently."""
     li = _load(spark, sf_dir, "lineitem")
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+
+    def money(c):
+        return F.col(c).cast("decimal(15,2)")
+
+    def sum_money(e):
+        return F.round(F.sum(e), 2).cast("double")
+
+    disc_price = money("l_extendedprice") * (1 - money("l_discount"))
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(disc_price), 2).alias("sum_disc_price"),
-            F.round(F.sum(disc_price * (1 + F.col("l_tax"))), 2).alias("sum_charge"),
+            sum_money(money("l_quantity")).alias("sum_qty"),
+            sum_money(money("l_extendedprice")).alias("sum_base_price"),
+            sum_money(disc_price).alias("sum_disc_price"),
+            sum_money(disc_price * (1 + money("l_tax"))).alias("sum_charge"),
             F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
             F.round(F.avg("l_extendedprice"), 4).alias("avg_price"),
             F.round(F.avg("l_discount"), 6).alias("avg_disc"),

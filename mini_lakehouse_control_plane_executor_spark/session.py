@@ -13,12 +13,31 @@ file, and at start-up it holds 1,112 keys: 520 come only from
 only from ``mapred-default.xml``, whose values repeat Hadoop's in-code
 defaults (except the cloud committer factories,
 ``mapreduce.outputcommitter.factory.scheme.*``, which only
-spark-hadoop-cloud's ``PathOutputCommitProtocol`` reads). Those 714 keys
-are unset from the two session-wide confs that every task's conf is
-copied from, leaving 398 keys per query: 39 KB serialized instead of
-114 KB. Keys with any other source stay: ``core-default.xml``, values
+spark-hadoop-cloud's ``PathOutputCommitProtocol`` reads). Of the 357
+keys that come only from ``core-default.xml``, 240 configure
+filesystems and services a ``local[N]`` session never starts: the
+clients of other filesystems (S3A, Azure, ADL, FTP, viewfs), Hadoop's
+IPC/RPC, HA, HTTP, registry, ZooKeeper, SSL and metrics services, and
+SequenceFile/MapFile/TFile and erasure-coding I/O (``UNUSED_CORE_PREFIXES``).
+All those keys are unset from the two session-wide confs that every
+task's conf is copied from, leaving 158 keys per query: 18 KB
+serialized instead of 114 KB. Keys with any other source stay, and so do
+the core-default.xml keys the local filesystem and Spark read:
+``fs.AbstractFileSystem.*`` (FileContext, used by streaming
+checkpoints), ``file.*``, ``fs.defaultFS``, the umask and trash keys,
+the ``io.compression``/buffer keys and ``hadoop.security.*``. Values
 Spark sets, ``spark.hadoop.*`` settings (also through ``extra_conf`` and
-``SPARK_GRAFT_CONF_spark__hadoop__*``), and any ``*-site.xml``.
+``SPARK_GRAFT_CONF_spark__hadoop__*``) and any ``*-site.xml`` stay too,
+whatever their family.
+
+The JVM's cached ``file:`` FileSystem, which every local-mode task
+shares, writes no ``.crc`` checksum sidecars. The transaction log, not
+the file system, is the commit point, and a write's staged sidecars were
+never promoted into ``data/``: they cost a ``chmod`` fork each without
+native Hadoop libraries, a rename by the output committer and a delete.
+``get_spark`` turns them off on every call, so a cached FileSystem
+rebuilt after ``FileSystem.closeAll()`` gets the setting again. Reads
+still verify any ``.crc`` that exists.
 """
 
 from __future__ import annotations
@@ -51,19 +70,44 @@ def _default_driver_mem() -> str:
 # Hadoop conf (see the module docstring).
 UNUSED_DEFAULT_RESOURCES = frozenset({"yarn-default.xml", "mapred-default.xml"})
 
+# Key families of core-default.xml that configure filesystems and
+# services a local[N] session never uses; a key in them is unset only
+# when core-default.xml is its only source.
+UNUSED_CORE_PREFIXES = (
+    # other filesystems' clients
+    "fs.s3a.", "fs.azure.", "fs.abfs", "fs.wasb", "fs.adl.", "adl.",
+    "fs.ftp.", "ftp.", "fs.viewfs.",
+    # Hadoop services
+    "ipc.", "rpc.", "ha.", "hadoop.http.", "hadoop.registry.", "hadoop.zk.",
+    "hadoop.ssl.", "hadoop.prometheus.", "hadoop.caller.", "hadoop.rpc.",
+    "nfs.", "net.topology.",
+    # SequenceFile/MapFile/TFile and erasure-coding I/O
+    "io.seqfile.", "seq.io.", "io.map.", "io.mapfile.", "tfile.",
+    "io.erasurecode.",
+)
+
+
+def unused_key(name: str, sources: set[str]) -> bool:
+    """Whether the trim unsets the key ``name`` with these ``sources``."""
+    if not sources:
+        return False
+    if sources <= UNUSED_DEFAULT_RESOURCES:
+        return True
+    return sources == {"core-default.xml"} and name.startswith(UNUSED_CORE_PREFIXES)
+
 
 def _trim_hadoop_conf(spark: SparkSession, conf) -> None:
-    """Unset every key of the Hadoop ``Configuration`` ``conf`` whose
-    only sources are ``UNUSED_DEFAULT_RESOURCES``.
+    """Unset every key of the Hadoop ``Configuration`` ``conf`` that
+    ``unused_key`` names.
 
     Keys and their sources are read in one ``writeXml`` round trip; a
     py4j call per key to read them took 0.26 s per conf."""
     out = spark._jvm.java.io.StringWriter()
     conf.writeXml(out)
     for prop in ET.fromstring(out.toString()).iter("property"):
-        sources = {e.text for e in prop.iter("source")}
-        if sources and sources <= UNUSED_DEFAULT_RESOURCES:
-            conf.unset(prop.findtext("name"))
+        name = prop.findtext("name")
+        if unused_key(name, {e.text for e in prop.iter("source")}):
+            conf.unset(name)
 
 
 def get_spark(
@@ -157,4 +201,9 @@ def get_spark(
         if k.startswith("spark.hadoop."):
             for conf in (spark._jsc.hadoopConfiguration(), shared_conf):
                 conf.set(k[len("spark.hadoop."):], v)
+    # Set on every call: FileSystem.closeAll() drops the cached
+    # instance, and its replacement writes checksums again.
+    spark._jvm.org.apache.hadoop.fs.FileSystem.getLocal(
+        spark._jsc.hadoopConfiguration()
+    ).setWriteChecksum(False)
     return spark

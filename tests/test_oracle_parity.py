@@ -144,6 +144,48 @@ def test_sequence_packing_global_baseline(spark, duck):
     )
 
 
+def test_q1_money_sums_round_the_exact_sum(spark, tmp_path):
+    """q1's money sums round the exact decimal sum, in Spark and in the
+    oracle. This group's exact ``sum_disc_price`` is a half cent,
+    371.32 * 0.9 + 203.63 * 0.9 = 517.455, but the sum of the two
+    doubles is 517.4549999999999: rounding that gives 517.45 in both
+    engines, while the exact sum rounds to 517.46. Whether a double sum
+    lands above or below the half depends on summation order, so on
+    real data the engines disagreed."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ship = datetime.datetime(1998, 1, 1)
+    pq.write_table(
+        pa.table({
+            "l_quantity": [1.0, 2.0],
+            "l_extendedprice": [371.32, 203.63],
+            "l_discount": [0.10, 0.10],
+            "l_tax": [0.0, 0.0],
+            "l_returnflag": ["N", "N"],
+            "l_linestatus": ["F", "F"],
+            "l_shipdate": pa.array([ship, ship], pa.timestamp("us")),
+        }),
+        tmp_path / "lineitem.parquet",
+    )
+    got = qlib.q1_pricing_summary(spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW lineitem AS SELECT * FROM read_parquet('{tmp_path}/lineitem.parquet')"
+    )
+    want = con.execute(ORACLES["q1_pricing_summary"]).fetchdf()
+    con.close()
+    for side in (got, want):
+        assert side["sum_disc_price"].tolist() == [517.46]
+        assert side["sum_charge"].tolist() == [517.46]
+    pd.testing.assert_frame_equal(
+        _normalize(got), _normalize(want),
+        check_dtype=False, check_exact=False, rtol=0, atol=1e-9,
+    )
+
+
 def test_readme_query_count_matches_registry():
     """The README's advertised query count must track the registry
     mechanically — it has drifted twice (175->176 took two manual

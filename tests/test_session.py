@@ -9,6 +9,7 @@ import subprocess
 import sys
 
 from mini_lakehouse_control_plane_executor_spark import session
+from mini_lakehouse_control_plane_executor_spark.plans.query import SimpleQuery
 from mini_lakehouse_control_plane_executor_spark.table.catalog import LakehouseSession
 from mini_lakehouse_control_plane_executor_spark.table.schema import Field
 
@@ -87,14 +88,26 @@ def run_every_io_path(spark, root):
     lake.create_table("t", [Field("id", "int64"), Field("s", "string")])
     lake.insert("t", df)
     assert lake.table("t").read().count() == 20
+    job_id = lake.submit_async(SimpleQuery(table_name="t"))
+    assert len(lake.job_result(job_id)) == 20
+
+
+def crc_files(root):
+    """Checksum sidecars anywhere under ``root``."""
+    return sorted(
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _, files in os.walk(root)
+        for f in files
+        if f.endswith(".crc")
+    )
 
 
 def unused_default_keys(conf):
-    """Keys of a Hadoop conf whose only sources are the trimmed resources."""
+    """Keys of a Hadoop conf that the trim should have unset."""
     keys = []
     for entry in conf.iterator():
         sources = set(conf.getPropertySources(entry.getKey()) or ())
-        if sources and sources <= session.UNUSED_DEFAULT_RESOURCES:
+        if session.unused_key(entry.getKey(), sources):
             keys.append(entry.getKey())
     return keys
 
@@ -102,30 +115,57 @@ def unused_default_keys(conf):
 _TRIM_PROBE = """
 import json, sys
 from mini_lakehouse_control_plane_executor_spark.session import get_spark
-from tests.test_session import run_every_io_path, unused_default_keys
-spark = get_spark("trim", cpus=1, extra_conf={"spark.hadoop.mapreduce.job.reduces": "7"})
-run_every_io_path(spark, sys.argv[1])
+from tests.test_session import crc_files, run_every_io_path, unused_default_keys
+root = sys.argv[1]
+spark = get_spark("trim", cpus=1, extra_conf={
+    "spark.hadoop.mapreduce.job.reduces": "7",
+    "spark.hadoop.fs.s3a.connection.maximum": "77",
+})
+run_every_io_path(spark, root + "/io")
 conf = spark._jsparkSession.sessionState().newHadoopConf()
-print(json.dumps({
+report = {
     "unused": unused_default_keys(conf),
     "size": conf.size(),
     "values": [conf.get(k) for k in
-               ("mapreduce.job.reduces", "mapreduce.task.timeout", "mapreduce.job.maps")],
-}))
+               ("mapreduce.job.reduces", "mapreduce.task.timeout", "mapreduce.job.maps",
+                "fs.s3a.connection.maximum", "fs.AbstractFileSystem.file.impl")],
+    "dropped": [conf.get(k) for k in
+                ("fs.s3a.impl", "ipc.client.connect.timeout", "hadoop.http.staticuser.user",
+                 "io.seqfile.compress.blocksize")],
+    # Streaming checkpoints and the file sink's _spark_metadata log are
+    # written through FileContext, whose ChecksumFs always writes them.
+    "crc": [p for p in crc_files(root + "/io")
+            if not p.startswith(("checkpoint/", "stream/_spark_metadata/"))],
+}
+# A FileSystem rebuilt after closeAll() writes checksums again until
+# the next get_spark call.
+df = spark.range(5)
+spark._jvm.org.apache.hadoop.fs.FileSystem.closeAll()
+df.write.parquet(root + "/closed")
+get_spark("trim", cpus=1)
+df.write.parquet(root + "/reopened")
+report["crc_after_close"] = [bool(crc_files(root + d)) for d in ("/closed", "/reopened")]
+print(json.dumps(report))
 spark.stop()
 """
 
 
 def test_hadoop_conf_stays_trimmed_after_every_io_path(tmp_path):
-    """In a fresh session, no yarn-default.xml or mapred-default.xml key
-    is left in a query's Hadoop conf after every I/O path has run. A path
-    that first loads a Hadoop class adding a default resource reloads
-    every live conf from its resources (``Configuration.addDefaultResource``)
-    and would silently undo the trim. The mapreduce.* values a deployment
-    sets through ``extra_conf`` or ``SPARK_GRAFT_CONF_spark__hadoop__*``
-    stay; one that only mapred-default.xml sets is gone. A fresh JVM,
-    because ``get_spark`` on a running session does not rebuild its
-    Hadoop conf and trims it again."""
+    """In a fresh session, no key the trim unsets (yarn-default.xml,
+    mapred-default.xml, and core-default.xml's unused filesystem, service
+    and SequenceFile families) is left in a query's Hadoop conf after
+    every I/O path has run. A path that first loads a Hadoop class adding
+    a default resource reloads every live conf from its resources
+    (``Configuration.addDefaultResource``) and would silently undo the
+    trim. The values a deployment sets through ``extra_conf`` or
+    ``SPARK_GRAFT_CONF_spark__hadoop__*`` stay, in a dropped family too;
+    one that only a trimmed resource sets is gone; FileContext's
+    ``fs.AbstractFileSystem.file.impl`` stays. No FileSystem write of
+    those paths (batch outputs, stream data files, the table's ``data/``,
+    an async job's ``results/<id>/``) leaves a ``.crc`` sidecar, and a
+    second ``get_spark`` turns checksum writing off again on a
+    FileSystem rebuilt after ``closeAll()``. A fresh JVM, because ``get_spark`` on a running session does not
+    rebuild its Hadoop conf and trims it again."""
     env = dict(
         os.environ,
         SPARK_GRAFT_DRIVER_MEM="512m",
@@ -142,5 +182,8 @@ def test_hadoop_conf_stays_trimmed_after_every_io_path(tmp_path):
     assert proc.returncode == 0, proc.stderr[-2000:]
     out = json.loads(proc.stdout.strip().splitlines()[-1])
     assert out["unused"] == []
-    assert out["size"] < 500  # 1,112 keys untrimmed
-    assert out["values"] == ["7", "1234", None]
+    assert out["dropped"] == [None] * 4
+    assert out["size"] < 200  # 1,112 keys untrimmed
+    assert out["values"] == ["7", "1234", None, "77", "org.apache.hadoop.fs.local.LocalFs"]
+    assert out["crc"] == []
+    assert out["crc_after_close"] == [True, False]
