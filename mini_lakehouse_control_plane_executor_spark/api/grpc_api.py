@@ -19,7 +19,9 @@ Layering:
 - **Messages** are plain dataclasses mirroring ``metadata.proto``
   field-for-field, with proto3 semantics: every field has a zero
   default, an empty ``error`` string means success, and unknown wire
-  fields are ignored on parse.
+  fields are ignored on parse. Their one JSON codec is the
+  ``_Message`` base class (``to_json``/``from_json``, proto3's JSON
+  rules); their one binary codec is ``api.protowire``.
 - **``MetadataServicer``** is transport-agnostic: each RPC takes a
   request message and returns a response message, errors reported IN
   the response (the reference's convention — its handlers never raise
@@ -38,7 +40,9 @@ Layering:
 
 from __future__ import annotations
 
+import dataclasses
 import json
+import typing
 from dataclasses import dataclass, field as dc_field
 
 from mini_lakehouse_control_plane_executor_spark.api import protowire
@@ -61,47 +65,57 @@ SERVICE_NAME = "metadata.MetadataService"  # proto/metadata.proto:3,8
 # ---------------------------------------------------------------------------
 
 
+class _Message:
+    """proto3's JSON mapping, shared by every message dataclass below.
+
+    ``to_json`` emits every field in declaration order, nested messages
+    as dicts. ``from_json`` parses leniently, as proto3 does: a key that
+    is missing, ``null`` or zero-valued keeps the field default, unknown
+    keys are ignored, nested messages (and lists of them) recurse, and
+    scalars are coerced to the declared type."""
+
+    def to_json(self) -> dict:
+        return dataclasses.asdict(self)
+
+    @classmethod
+    def from_json(cls, d: dict):
+        hints = typing.get_type_hints(cls)
+        return cls(**{
+            f.name: _from_json_value(hints[f.name], d[f.name])
+            for f in dataclasses.fields(cls)
+            if d.get(f.name)
+        })
+
+
+def _from_json_value(tp, v):
+    if typing.get_origin(tp) is list:
+        (item,) = typing.get_args(tp)
+        return [_from_json_value(item, x) for x in v]
+    if issubclass(tp, _Message):
+        return tp.from_json(v)
+    return tp(v)
+
+
 @dataclass
-class Field:
+class Field(_Message):
     name: str = ""
     type: str = ""
     nullable: bool = False
 
-    def to_json(self) -> dict:
-        return {"name": self.name, "type": self.type, "nullable": self.nullable}
-
-    @staticmethod
-    def from_json(d: dict) -> "Field":
-        return Field(d.get("name", ""), d.get("type", ""), bool(d.get("nullable", False)))
-
 
 @dataclass
-class Schema:
+class Schema(_Message):
     fields: list[Field] = dc_field(default_factory=list)
 
-    def to_json(self) -> dict:
-        return {"fields": [f.to_json() for f in self.fields]}
-
-    @staticmethod
-    def from_json(d: dict) -> "Schema":
-        return Schema([Field.from_json(f) for f in d.get("fields") or []])
-
 
 @dataclass
-class FileStats:
+class FileStats(_Message):
     min_values: dict = dc_field(default_factory=dict)
     max_values: dict = dc_field(default_factory=dict)
 
-    def to_json(self) -> dict:
-        return {"min_values": self.min_values, "max_values": self.max_values}
-
-    @staticmethod
-    def from_json(d: dict) -> "FileStats":
-        return FileStats(d.get("min_values") or {}, d.get("max_values") or {})
-
 
 @dataclass
-class FileInfo:
+class FileInfo(_Message):
     """``FileInfo`` and ``FileAdd`` share one shape in the proto
     (``metadata.proto:94-113``); one dataclass serves both."""
 
@@ -111,238 +125,94 @@ class FileInfo:
     partition: dict = dc_field(default_factory=dict)
     stats: FileStats = dc_field(default_factory=FileStats)
 
-    def to_json(self) -> dict:
-        return {
-            "path": self.path,
-            "rows": self.rows,
-            "size": self.size,
-            "partition": self.partition,
-            "stats": self.stats.to_json(),
-        }
-
-    @staticmethod
-    def from_json(d: dict) -> "FileInfo":
-        return FileInfo(
-            path=d.get("path", ""),
-            rows=int(d.get("rows", 0)),
-            size=int(d.get("size", 0)),
-            partition=d.get("partition") or {},
-            stats=FileStats.from_json(d.get("stats") or {}),
-        )
-
 
 @dataclass
-class FileRemove:
+class FileRemove(_Message):
     path: str = ""
 
-    def to_json(self) -> dict:
-        return {"path": self.path}
-
-    @staticmethod
-    def from_json(d: dict) -> "FileRemove":
-        return FileRemove(d.get("path", ""))
-
 
 @dataclass
-class CreateTableRequest:
+class CreateTableRequest(_Message):
     table_name: str = ""
     schema: Schema = dc_field(default_factory=Schema)
 
-    @staticmethod
-    def from_json(d: dict) -> "CreateTableRequest":
-        return CreateTableRequest(
-            d.get("table_name", ""), Schema.from_json(d.get("schema") or {})
-        )
-
-    def to_json(self) -> dict:
-        return {"table_name": self.table_name, "schema": self.schema.to_json()}
-
 
 @dataclass
-class CreateTableResponse:
+class CreateTableResponse(_Message):
     success: bool = False
     error: str = ""
 
-    def to_json(self) -> dict:
-        return {"success": self.success, "error": self.error}
-
-    @staticmethod
-    def from_json(d: dict) -> "CreateTableResponse":
-        return CreateTableResponse(bool(d.get("success", False)), d.get("error", ""))
-
 
 @dataclass
-class GetLatestVersionRequest:
+class GetLatestVersionRequest(_Message):
     table_name: str = ""
 
-    @staticmethod
-    def from_json(d: dict) -> "GetLatestVersionRequest":
-        return GetLatestVersionRequest(d.get("table_name", ""))
-
-    def to_json(self) -> dict:
-        return {"table_name": self.table_name}
-
 
 @dataclass
-class GetLatestVersionResponse:
+class GetLatestVersionResponse(_Message):
     version: int = 0
     error: str = ""
 
-    def to_json(self) -> dict:
-        return {"version": self.version, "error": self.error}
-
-    @staticmethod
-    def from_json(d: dict) -> "GetLatestVersionResponse":
-        return GetLatestVersionResponse(int(d.get("version", 0)), d.get("error", ""))
-
 
 @dataclass
-class GetSnapshotRequest:
+class GetSnapshotRequest(_Message):
     table_name: str = ""
     version: int = 0  # proto3 zero value -> latest (reference: log.py:233)
 
-    @staticmethod
-    def from_json(d: dict) -> "GetSnapshotRequest":
-        return GetSnapshotRequest(d.get("table_name", ""), int(d.get("version", 0)))
-
-    def to_json(self) -> dict:
-        return {"table_name": self.table_name, "version": self.version}
-
 
 @dataclass
-class GetSnapshotResponse:
+class GetSnapshotResponse(_Message):
     files: list[FileInfo] = dc_field(default_factory=list)
     schema: Schema = dc_field(default_factory=Schema)
     error: str = ""
 
-    def to_json(self) -> dict:
-        return {
-            "files": [f.to_json() for f in self.files],
-            "schema": self.schema.to_json(),
-            "error": self.error,
-        }
-
-    @staticmethod
-    def from_json(d: dict) -> "GetSnapshotResponse":
-        return GetSnapshotResponse(
-            [FileInfo.from_json(f) for f in d.get("files") or []],
-            Schema.from_json(d.get("schema") or {}),
-            d.get("error", ""),
-        )
-
 
 @dataclass
-class CommitRequest:
+class CommitRequest(_Message):
     table_name: str = ""
     base_version: int = 0
     txn_id: str = ""
     adds: list[FileInfo] = dc_field(default_factory=list)
     removes: list[FileRemove] = dc_field(default_factory=list)
 
-    @staticmethod
-    def from_json(d: dict) -> "CommitRequest":
-        return CommitRequest(
-            table_name=d.get("table_name", ""),
-            base_version=int(d.get("base_version", 0)),
-            txn_id=d.get("txn_id", ""),
-            adds=[FileInfo.from_json(a) for a in d.get("adds") or []],
-            removes=[FileRemove.from_json(r) for r in d.get("removes") or []],
-        )
-
-    def to_json(self) -> dict:
-        return {
-            "table_name": self.table_name,
-            "base_version": self.base_version,
-            "txn_id": self.txn_id,
-            "adds": [a.to_json() for a in self.adds],
-            "removes": [r.to_json() for r in self.removes],
-        }
-
 
 @dataclass
-class CommitResponse:
+class CommitResponse(_Message):
     new_version: int = 0
     error: str = ""
 
-    def to_json(self) -> dict:
-        return {"new_version": self.new_version, "error": self.error}
-
-    @staticmethod
-    def from_json(d: dict) -> "CommitResponse":
-        return CommitResponse(int(d.get("new_version", 0)), d.get("error", ""))
-
 
 @dataclass
-class ListVersionsRequest:
+class ListVersionsRequest(_Message):
     table_name: str = ""
 
-    @staticmethod
-    def from_json(d: dict) -> "ListVersionsRequest":
-        return ListVersionsRequest(d.get("table_name", ""))
-
-    def to_json(self) -> dict:
-        return {"table_name": self.table_name}
-
 
 @dataclass
-class ListVersionsResponse:
+class ListVersionsResponse(_Message):
     versions: list[int] = dc_field(default_factory=list)
     error: str = ""
 
-    def to_json(self) -> dict:
-        return {"versions": self.versions, "error": self.error}
 
-    @staticmethod
-    def from_json(d: dict) -> "ListVersionsResponse":
-        return ListVersionsResponse(
-            [int(v) for v in d.get("versions") or []], d.get("error", "")
-        )
+@dataclass
+class LeaderRequest(_Message):
+    pass
 
 
 @dataclass
-class LeaderRequest:
-    @staticmethod
-    def from_json(d: dict) -> "LeaderRequest":
-        return LeaderRequest()
-
-    def to_json(self) -> dict:
-        return {}
-
-
-@dataclass
-class LeaderResponse:
+class LeaderResponse(_Message):
     leader_id: str = ""
     leader_address: str = ""
 
-    def to_json(self) -> dict:
-        return {"leader_id": self.leader_id, "leader_address": self.leader_address}
 
-    @staticmethod
-    def from_json(d: dict) -> "LeaderResponse":
-        return LeaderResponse(d.get("leader_id", ""), d.get("leader_address", ""))
+@dataclass
+class HealthRequest(_Message):
+    pass
 
 
 @dataclass
-class HealthRequest:
-    @staticmethod
-    def from_json(d: dict) -> "HealthRequest":
-        return HealthRequest()
-
-    def to_json(self) -> dict:
-        return {}
-
-
-@dataclass
-class HealthResponse:
+class HealthResponse(_Message):
     healthy: bool = False
     status: str = ""
-
-    def to_json(self) -> dict:
-        return {"healthy": self.healthy, "status": self.status}
-
-    @staticmethod
-    def from_json(d: dict) -> "HealthResponse":
-        return HealthResponse(bool(d.get("healthy", False)), d.get("status", ""))
 
 
 # ---------------------------------------------------------------------------
@@ -631,81 +501,37 @@ QUERY_SERVICE_NAME = "coordinator.QueryExecutionService"
 
 
 @dataclass
-class AggregateSpec:
+class AggregateSpec(_Message):
     function: str = ""
     column: str = ""
     alias: str = ""
 
-    @staticmethod
-    def from_json(d: dict) -> "AggregateSpec":
-        return AggregateSpec(
-            d.get("function", ""), d.get("column", ""), d.get("alias", "")
-        )
-
-    def to_json(self) -> dict:
-        return {"function": self.function, "column": self.column, "alias": self.alias}
-
 
 @dataclass
-class ExecuteQueryRequest:
+class ExecuteQueryRequest(_Message):
     """``SimpleQuery`` (``query_planner.go:93-100``): version 0 = latest."""
 
     table_name: str = ""
     filter: str = ""
-    group_by: list = dc_field(default_factory=list)
-    aggregates: list = dc_field(default_factory=list)
-    projection: list = dc_field(default_factory=list)
+    group_by: list[str] = dc_field(default_factory=list)
+    aggregates: list[AggregateSpec] = dc_field(default_factory=list)
+    projection: list[str] = dc_field(default_factory=list)
     version: int = 0
-
-    @staticmethod
-    def from_json(d: dict) -> "ExecuteQueryRequest":
-        return ExecuteQueryRequest(
-            table_name=d.get("table_name", ""),
-            filter=d.get("filter", ""),
-            group_by=list(d.get("group_by") or []),
-            aggregates=[AggregateSpec.from_json(a) for a in d.get("aggregates") or []],
-            projection=list(d.get("projection") or []),
-            version=int(d.get("version") or 0),
-        )
-
-    def to_json(self) -> dict:
-        return {
-            "table_name": self.table_name,
-            "filter": self.filter,
-            "group_by": list(self.group_by),
-            "aggregates": [a.to_json() for a in self.aggregates],
-            "projection": list(self.projection),
-            "version": self.version,
-        }
 
 
 @dataclass
-class ExecuteQueryResponse:
+class ExecuteQueryResponse(_Message):
     job_id: str = ""
     error: str = ""
 
-    def to_json(self) -> dict:
-        return {"job_id": self.job_id, "error": self.error}
-
-    @staticmethod
-    def from_json(d: dict) -> "ExecuteQueryResponse":
-        return ExecuteQueryResponse(d.get("job_id", ""), d.get("error", ""))
-
 
 @dataclass
-class GetQueryStatusRequest:
+class GetQueryStatusRequest(_Message):
     job_id: str = ""
 
-    @staticmethod
-    def from_json(d: dict) -> "GetQueryStatusRequest":
-        return GetQueryStatusRequest(d.get("job_id", ""))
-
-    def to_json(self) -> dict:
-        return {"job_id": self.job_id}
-
 
 @dataclass
-class GetQueryStatusResponse:
+class GetQueryStatusResponse(_Message):
     """``QueryStatus`` (``task_scheduler.go:377-385``) + proto3-style error."""
 
     job_id: str = ""
@@ -716,72 +542,26 @@ class GetQueryStatusResponse:
     running_tasks: int = 0
     error: str = ""
 
-    def to_json(self) -> dict:
-        return {
-            "job_id": self.job_id,
-            "status": self.status,
-            "total_tasks": self.total_tasks,
-            "completed_tasks": self.completed_tasks,
-            "failed_tasks": self.failed_tasks,
-            "running_tasks": self.running_tasks,
-            "error": self.error,
-        }
-
-    @staticmethod
-    def from_json(d: dict) -> "GetQueryStatusResponse":
-        return GetQueryStatusResponse(
-            job_id=d.get("job_id", ""),
-            status=d.get("status", ""),
-            total_tasks=int(d.get("total_tasks", 0)),
-            completed_tasks=int(d.get("completed_tasks", 0)),
-            failed_tasks=int(d.get("failed_tasks", 0)),
-            running_tasks=int(d.get("running_tasks", 0)),
-            error=d.get("error", ""),
-        )
-
 
 @dataclass
-class CancelQueryRequest:
+class CancelQueryRequest(_Message):
     job_id: str = ""
 
-    @staticmethod
-    def from_json(d: dict) -> "CancelQueryRequest":
-        return CancelQueryRequest(d.get("job_id", ""))
-
-    def to_json(self) -> dict:
-        return {"job_id": self.job_id}
-
 
 @dataclass
-class CancelQueryResponse:
+class CancelQueryResponse(_Message):
     cancelled: bool = False
     error: str = ""
 
-    def to_json(self) -> dict:
-        return {"cancelled": self.cancelled, "error": self.error}
-
-    @staticmethod
-    def from_json(d: dict) -> "CancelQueryResponse":
-        return CancelQueryResponse(bool(d.get("cancelled", False)), d.get("error", ""))
-
 
 @dataclass
-class WaitForQueryRequest:
+class WaitForQueryRequest(_Message):
     job_id: str = ""
     timeout_ms: int = 0  # 0 = default (300s)
 
-    @staticmethod
-    def from_json(d: dict) -> "WaitForQueryRequest":
-        return WaitForQueryRequest(
-            d.get("job_id", ""), int(d.get("timeout_ms", 0))
-        )
-
-    def to_json(self) -> dict:
-        return {"job_id": self.job_id, "timeout_ms": self.timeout_ms}
-
 
 @dataclass
-class QueryMetricsMsg:
+class QueryMetricsMsg(_Message):
     """``QueryMetrics`` (``grpc_service.go:268-275``). The reference
     leaves retried/bytes/rows as zero TODOs (``:224-226``); we fill
     bytes/rows from the pinned-snapshot plan — a documented superset."""
@@ -793,30 +573,9 @@ class QueryMetricsMsg:
     bytes_processed: int = 0
     rows_processed: int = 0
 
-    def to_json(self) -> dict:
-        return {
-            "duration_ms": self.duration_ms,
-            "total_tasks": self.total_tasks,
-            "failed_tasks": self.failed_tasks,
-            "retried_tasks": self.retried_tasks,
-            "bytes_processed": self.bytes_processed,
-            "rows_processed": self.rows_processed,
-        }
-
-    @staticmethod
-    def from_json(d: dict) -> "QueryMetricsMsg":
-        return QueryMetricsMsg(
-            duration_ms=int(d.get("duration_ms", 0)),
-            total_tasks=int(d.get("total_tasks", 0)),
-            failed_tasks=int(d.get("failed_tasks", 0)),
-            retried_tasks=int(d.get("retried_tasks", 0)),
-            bytes_processed=int(d.get("bytes_processed", 0)),
-            rows_processed=int(d.get("rows_processed", 0)),
-        )
-
 
 @dataclass
-class QueryResultMsg:
+class QueryResultMsg(_Message):
     """``QueryResult`` (``grpc_service.go:259-265``): the reference
     returns the result *path*; rows stay in storage."""
 
@@ -826,28 +585,9 @@ class QueryResultMsg:
     result_path: str = ""
     metrics: QueryMetricsMsg = dc_field(default_factory=QueryMetricsMsg)
 
-    def to_json(self) -> dict:
-        return {
-            "job_id": self.job_id,
-            "success": self.success,
-            "error": self.error,
-            "result_path": self.result_path,
-            "metrics": self.metrics.to_json(),
-        }
-
-    @staticmethod
-    def from_json(d: dict) -> "QueryResultMsg":
-        return QueryResultMsg(
-            job_id=d.get("job_id", ""),
-            success=bool(d.get("success", False)),
-            error=d.get("error", ""),
-            result_path=d.get("result_path", ""),
-            metrics=QueryMetricsMsg.from_json(d.get("metrics") or {}),
-        )
-
 
 @dataclass
-class InsertDataRequest:
+class InsertDataRequest(_Message):
     """``TableService.InsertData`` (``table_service.go:121-244``;
     REST ``rest_api.go:289-325``): load external files, append-commit."""
 
@@ -856,35 +596,11 @@ class InsertDataRequest:
     format: str = "parquet"
     txn_id: str = ""
 
-    @staticmethod
-    def from_json(d: dict) -> "InsertDataRequest":
-        return InsertDataRequest(
-            table_name=d.get("table_name", ""),
-            data_path=d.get("data_path", ""),
-            format=d.get("format", "parquet") or "parquet",
-            txn_id=d.get("txn_id", ""),
-        )
-
-    def to_json(self) -> dict:
-        return {
-            "table_name": self.table_name,
-            "data_path": self.data_path,
-            "format": self.format,
-            "txn_id": self.txn_id,
-        }
-
 
 @dataclass
-class InsertDataResponse:
+class InsertDataResponse(_Message):
     version: int = 0
     error: str = ""
-
-    def to_json(self) -> dict:
-        return {"version": self.version, "error": self.error}
-
-    @staticmethod
-    def from_json(d: dict) -> "InsertDataResponse":
-        return InsertDataResponse(int(d.get("version", 0)), d.get("error", ""))
 
 
 class QueryExecutionServicer:

@@ -1,3 +1,3 @@
-from mini_lakehouse_control_plane_executor_spark.plans.query import Aggregate, SimpleQuery, plan_query
+from mini_lakehouse_control_plane_executor_spark.plans.query import Aggregate, SimpleQuery
 
-__all__ = ["Aggregate", "SimpleQuery", "plan_query"]
+__all__ = ["Aggregate", "SimpleQuery"]

@@ -112,10 +112,3 @@ def apply_query(df: DataFrame, q: SimpleQuery) -> DataFrame:
         df = df.limit(q.limit)
     return df
 
-
-def plan_query(resolve, q: SimpleQuery) -> DataFrame:
-    """``resolve(table_name, version, filter)`` → snapshot DataFrame; then
-    apply the query. ``filter`` is passed so the resolver can do
-    stats-based file pruning before the scan."""
-    df = resolve(q.table_name, q.version, q.filter)
-    return apply_query(df, q)

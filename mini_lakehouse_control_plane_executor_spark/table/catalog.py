@@ -477,15 +477,12 @@ class LakehouseSession:
 
     # -- queries -------------------------------------------------------
 
-    def _resolve(self, table_name: str, version: int | None, filter_str: str | None) -> DataFrame:
-        return self.table(table_name).read(version=version, prune_filter=filter_str)
-
     def query(self, q: SimpleQuery | dict) -> DataFrame:
         """The reference's POST /queries path: snapshot-isolated structured
         query (version pinned once at plan time)."""
         if isinstance(q, dict):
             q = SimpleQuery.from_json(q)
-        df = self._resolve(q.table_name, q.version, q.filter)
+        df = self.table(q.table_name).read(version=q.version, prune_filter=q.filter)
         return apply_query(df, q)
 
     def sql(self, statement: str, versions: dict[str, int] | None = None) -> DataFrame:

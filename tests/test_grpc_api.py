@@ -5,12 +5,16 @@ directly (transport-agnostic); the grpc.Server binding runs only when
 grpcio is installed, same semantics either way."""
 
 import glob
+import json
 import os
 import shutil
+import sys
+import types
 
 import pytest
 
 from mini_lakehouse_control_plane_executor_spark.api import grpc_api as g
+from mini_lakehouse_control_plane_executor_spark.api import protowire as pw
 from mini_lakehouse_control_plane_executor_spark.table.schema import Field
 
 SCHEMA_MSG = g.Schema(
@@ -129,53 +133,162 @@ def test_leader_and_health_rpc(svc):
     assert health.healthy and health.status == "healthy"
 
 
-def test_message_json_roundtrip():
-    """Every RPC's request/response survives the JSON wire codec —
-    the serialization serve() puts on the socket."""
-    samples = {
-        "CreateTable": (
-            g.CreateTableRequest("t", SCHEMA_MSG),
-            g.CreateTableResponse(True, ""),
+METADATA_SAMPLES = {
+    "CreateTable": (
+        g.CreateTableRequest("t", SCHEMA_MSG),
+        g.CreateTableResponse(True, ""),
+    ),
+    "GetLatestVersion": (
+        g.GetLatestVersionRequest("t"),
+        g.GetLatestVersionResponse(7, ""),
+    ),
+    "GetSnapshot": (
+        g.GetSnapshotRequest("t", 3),
+        g.GetSnapshotResponse(
+            [g.FileInfo("data/a.parquet", 10, 100, {"p": "1"},
+                        g.FileStats({"id": "0"}, {"id": "9"}))],
+            SCHEMA_MSG,
+            "",
         ),
-        "GetLatestVersion": (
-            g.GetLatestVersionRequest("t"),
-            g.GetLatestVersionResponse(7, ""),
+    ),
+    "Commit": (
+        g.CommitRequest(
+            "t", 3, "txn-1",
+            adds=[g.FileInfo("data/b.parquet", 5, 50)],
+            removes=[g.FileRemove("data/a.parquet")],
         ),
-        "GetSnapshot": (
-            g.GetSnapshotRequest("t", 3),
-            g.GetSnapshotResponse(
-                [g.FileInfo("data/a.parquet", 10, 100, {"p": "1"},
-                            g.FileStats({"id": 0}, {"id": 9}))],
-                SCHEMA_MSG,
-                "",
-            ),
-        ),
-        "Commit": (
-            g.CommitRequest(
-                "t", 3, "txn-1",
-                adds=[g.FileInfo("data/b.parquet", 5, 50)],
-                removes=[g.FileRemove("data/a.parquet")],
-            ),
-            g.CommitResponse(4, ""),
-        ),
-        "ListVersions": (
-            g.ListVersionsRequest("t"),
-            g.ListVersionsResponse([1, 2, 3], ""),
-        ),
-        "Leader": (g.LeaderRequest(), g.LeaderResponse("n1", "addr")),
-        "Health": (g.HealthRequest(), g.HealthResponse(True, "healthy")),
-    }
-    assert set(samples) == set(g.RPCS)  # exhaustive over the service
-    import json
+        g.CommitResponse(4, ""),
+    ),
+    "ListVersions": (
+        g.ListVersionsRequest("t"),
+        g.ListVersionsResponse([1, 2, 3], ""),
+    ),
+    "Leader": (g.LeaderRequest(), g.LeaderResponse("n1", "addr")),
+    "Health": (g.HealthRequest(), g.HealthResponse(True, "healthy")),
+}
 
-    for name, (req, resp) in samples.items():
-        req_cls, resp_cls = g.RPCS[name]
+QUERY_SAMPLES = {
+    "ExecuteQuery": (
+        g.ExecuteQueryRequest(
+            "t", "amount > 30", ["grp"],
+            [g.AggregateSpec("sum", "amount", "total"),
+             g.AggregateSpec("count", "*", "")],
+            ["grp"], 2,
+        ),
+        g.ExecuteQueryResponse("job-1", ""),
+    ),
+    "GetQueryStatus": (
+        g.GetQueryStatusRequest("job-1"),
+        g.GetQueryStatusResponse("job-1", "RUNNING", 4, 1, 0, 3, ""),
+    ),
+    "CancelQuery": (
+        g.CancelQueryRequest("job-1"),
+        g.CancelQueryResponse(True, ""),
+    ),
+    "WaitForQueryCompletion": (
+        g.WaitForQueryRequest("job-1", 500),
+        g.QueryResultMsg(
+            "job-1", True, "", "/results/job-1",
+            g.QueryMetricsMsg(12, 4, 0, 0, 2048, 100),
+        ),
+    ),
+    "InsertData": (
+        g.InsertDataRequest("t", "/ext/load", "csv", "load-1"),
+        g.InsertDataResponse(5, ""),
+    ),
+}
+
+# What a client of each service puts on the socket: proto3 bytes for
+# MetadataService, JSON for QueryExecutionService (see serve()).
+CLIENT_CODECS = {
+    g.SERVICE_NAME: (pw.encode, pw.decode),
+    g.QUERY_SERVICE_NAME: (
+        lambda msg: json.dumps(msg.to_json()).encode(),
+        lambda cls, b: cls.from_json(json.loads(b)),
+    ),
+}
+
+
+def _client(channel, service, rpcs):
+    """``call(method, req)`` over a grpc channel with the client codec."""
+    serialize, deserialize = CLIENT_CODECS[service]
+
+    def call(method, req):
+        resp_cls = rpcs[method][1]
+        fn = channel.unary_unary(
+            f"/{service}/{method}",
+            request_serializer=serialize,
+            response_deserializer=lambda b: deserialize(resp_cls, b),
+        )
+        return fn(req)
+
+    return call
+
+
+def test_message_json_roundtrip():
+    """Every request/response of both services survives the JSON codec
+    (what serve() puts on the socket for QueryExecutionService), with
+    proto3's lenient parse: unknown keys ignored, missing, null and
+    zero-valued keys keep the field default."""
+    assert set(METADATA_SAMPLES) == set(g.RPCS)  # exhaustive over the services
+    assert set(QUERY_SAMPLES) == set(g.QUERY_RPCS)
+    rpcs = {**g.RPCS, **g.QUERY_RPCS}
+    for name, (req, resp) in {**METADATA_SAMPLES, **QUERY_SAMPLES}.items():
+        req_cls, resp_cls = rpcs[name]
         assert req_cls.from_json(json.loads(json.dumps(req.to_json()))) == req
         assert resp_cls.from_json(json.loads(json.dumps(resp.to_json()))) == resp
-        # proto3 leniency: unknown fields ignored, missing fields default.
         assert req_cls.from_json({**req.to_json(), "_unknown": 1}) == req
-        req_cls.from_json({})
-        resp_cls.from_json({})
+        assert req_cls.from_json({}) == req_cls()
+        assert resp_cls.from_json({}) == resp_cls()
+
+    req, _ = QUERY_SAMPLES["ExecuteQuery"]
+    d = req.to_json()
+    assert d["aggregates"][0] == {"function": "sum", "column": "amount", "alias": "total"}
+    assert g.ExecuteQueryRequest.from_json(d).aggregates == req.aggregates
+    _, result = QUERY_SAMPLES["WaitForQueryCompletion"]
+    assert g.QueryResultMsg.from_json(result.to_json()).metrics == result.metrics
+    assert g.InsertDataRequest.from_json({"format": ""}).format == "parquet"
+    assert g.FileInfo.from_json({"path": "a", "rows": None}) == g.FileInfo("a")
+    assert g.ExecuteQueryRequest.from_json({"version": None}).version == 0
+
+
+def test_serve_codecs_match_clients(monkeypatch):
+    """serve() without a socket: a stub ``grpc`` module captures the
+    request/response codecs serve() registers per service, and each
+    must agree with that service's client codec in CLIENT_CODECS."""
+    registered = {}
+
+    class _Server:
+        def add_generic_rpc_handlers(self, services):
+            registered.update(services)
+
+        def add_insecure_port(self, _address):
+            return 0
+
+        def start(self):
+            pass
+
+    stub = types.ModuleType("grpc")
+    stub.server = lambda _executor: _Server()
+    stub.unary_unary_rpc_method_handler = (
+        lambda _fn, request_deserializer, response_serializer:
+        (request_deserializer, response_serializer)
+    )
+    stub.method_handlers_generic_handler = lambda service, handlers: (service, handlers)
+    monkeypatch.setitem(sys.modules, "grpc", stub)
+    g.serve(None)
+
+    for service, samples in (
+        (g.SERVICE_NAME, METADATA_SAMPLES),
+        (g.QUERY_SERVICE_NAME, QUERY_SAMPLES),
+    ):
+        serialize, deserialize = CLIENT_CODECS[service]
+        handlers = registered[service]
+        assert set(handlers) == set(samples)
+        for method, (req, resp) in samples.items():
+            server_decode, server_encode = handlers[method]
+            assert server_decode(serialize(req)) == req
+            assert deserialize(type(resp), server_encode(resp)) == resp
 
 
 def test_grpc_transport_end_to_end(lake, spark):
@@ -186,17 +299,7 @@ def test_grpc_transport_end_to_end(lake, spark):
     server, port = g.serve(lake)
     try:
         channel = grpc.insecure_channel(f"127.0.0.1:{port}")
-        import json
-
-        def call(method, req):
-            req_cls, resp_cls = g.RPCS[method]
-            fn = channel.unary_unary(
-                f"/{g.SERVICE_NAME}/{method}",
-                request_serializer=lambda r: json.dumps(r.to_json()).encode(),
-                response_deserializer=lambda b: resp_cls.from_json(json.loads(b)),
-            )
-            return fn(req)
-
+        call = _client(channel, g.SERVICE_NAME, g.RPCS)
         assert call("Health", g.HealthRequest()).healthy
         assert call("CreateTable", g.CreateTableRequest("gw", SCHEMA_MSG)).success
         t = lake.table("gw")
@@ -344,19 +447,8 @@ def test_query_service_transport_end_to_end(lake, spark):
     name = _seeded_table(lake, spark, "qwire")
     server, port = g.serve(lake)
     try:
-        import json
-
         channel = grpc.insecure_channel(f"127.0.0.1:{port}")
-
-        def call(method, req):
-            req_cls, resp_cls = g.QUERY_RPCS[method]
-            fn = channel.unary_unary(
-                f"/{g.QUERY_SERVICE_NAME}/{method}",
-                request_serializer=lambda r: json.dumps(r.to_json()).encode(),
-                response_deserializer=lambda b: resp_cls.from_json(json.loads(b)),
-            )
-            return fn(req)
-
+        call = _client(channel, g.QUERY_SERVICE_NAME, g.QUERY_RPCS)
         resp = call(
             "ExecuteQuery",
             g.ExecuteQueryRequest(

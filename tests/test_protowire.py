@@ -8,6 +8,8 @@ request/response shape. When grpcio IS present, tests/test_grpc_api.py
 additionally drives these bytes over a real grpc.Server.
 """
 
+import dataclasses
+
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -149,11 +151,18 @@ def test_roundtrip(msg):
 
 def test_every_rpc_message_registered():
     """Each of the seven MetadataService RPCs encodes/decodes through
-    protowire — the wire contract covers the whole service surface."""
+    protowire — the wire contract covers the whole service surface —
+    and every registered descriptor names exactly its dataclass's
+    fields, nested messages included: a field missing from the
+    descriptor would travel over JSON but vanish on the proto wire."""
     for name, (req_cls, resp_cls) in g.RPCS.items():
         for cls in (req_cls, resp_cls):
             m = cls()
             assert pw.decode(cls, pw.encode(m)) == m, (name, cls)
+    for cls in (g.Field, g.Schema, g.FileStats, g.FileInfo, g.FileRemove):
+        assert cls in pw._DESCRIPTORS, cls
+    for cls, desc in pw._DESCRIPTORS.items():
+        assert set(desc) == {f.name for f in dataclasses.fields(cls)}, cls
 
 
 def test_servicer_over_wire_bytes(lake):
