@@ -108,9 +108,10 @@ def prune_files(files, filter_str: str, schema=None):
     terms' prunes — sound because a file with no rows matching one term
     has no rows matching the conjunction).
 
-    Keeps any file whose [min,max] range for the filtered column could
-    contain matching rows (conservative: files with no stats are kept,
-    and any predicate shape not recognized prunes nothing). The
+    Reads reach it through ``Snapshot.scan``. Keeps any file whose
+    [min,max] range for the filtered column could contain matching
+    rows (conservative: files with no stats are kept, and any predicate
+    shape not recognized prunes nothing). The
     reference models these stats but never prunes
     (``pkg/coordinator/query_planner.go:249-255``); at 100 TB pruning is
     mandatory, and this mirrors what Delta data skipping does.
@@ -122,8 +123,6 @@ def prune_files(files, filter_str: str, schema=None):
     time-typed columns are never pruned (strings vs time stats are not
     comparable soundly).
     """
-    import re as _re
-
     types = {f.name: f.type for f in schema} if schema else {}
     cmp = parse_comparison(filter_str)
     if cmp is not None:

@@ -30,13 +30,15 @@ Spark sets, ``spark.hadoop.*`` settings (also through ``extra_conf`` and
 ``SPARK_GRAFT_CONF_spark__hadoop__*``) and any ``*-site.xml`` stay too,
 whatever their family.
 
-The JVM's cached ``file:`` FileSystem, which every local-mode task
-shares, writes no ``.crc`` checksum sidecars. The transaction log, not
-the file system, is the commit point, and a write's staged sidecars were
-never promoted into ``data/``: they cost a ``chmod`` fork each without
-native Hadoop libraries, a rename by the output committer and a delete.
-``get_spark`` turns them off on every call, so a cached FileSystem
-rebuilt after ``FileSystem.closeAll()`` gets the setting again. Reads
+No local write leaves a ``.crc`` checksum sidecar. The transaction log,
+not the file system, is the commit point; a sidecar costs a ``chmod``
+fork without native Hadoop libraries, a rename by the output committer
+and a delete. ``get_spark`` turns checksum writing off, on every call,
+on the JVM's cached ``file:`` FileSystem, which every local-mode task
+shares (one rebuilt after ``FileSystem.closeAll()`` writes them again
+until the next call). FileContext, which streaming checkpoints and the
+file sink's ``_spark_metadata`` log use, gets ``RawLocalFs`` for
+``file:`` in place of the checksumming ``LocalFs``. FileSystem reads
 still verify any ``.crc`` that exists.
 """
 
@@ -157,6 +159,11 @@ def get_spark(
             str(2**31 - 1),
         )
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # No .crc from FileContext writes (see the module docstring).
+        .config(
+            "spark.hadoop.fs.AbstractFileSystem.file.impl",
+            "org.apache.hadoop.fs.local.RawLocalFs",
+        )
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()),

@@ -21,9 +21,11 @@ source don't resolve — use format reads + temp views for SQL.) It also demonst
 contract in Spark-4-native form: one input partition per snapshot file
 (``query_planner.go:141-160`` fans one map task per file), resolution
 pinned at PLAN time (snapshot isolation — a concurrent commit cannot
-change what a running query sees), and min/max-stats file pruning
-applied to the reference's filter grammar (which the reference models
-but never uses — ``query_planner.go:249-255``).
+change what a running query sees), and the pushed filters' file pruning
+done by ``Snapshot.scan``, the one file-selection step of every
+snapshot read (min/max stats, which the reference models but never
+uses — ``query_planner.go:249-255``). A table with no commit is an
+error here, not an empty frame.
 
 Executor-side reads return pyarrow ``RecordBatch``es (the API's
 vectorized path), so the Python worker streams Arrow, not pickled rows.
@@ -35,8 +37,13 @@ which stages, promotes and commits once with Spark-evaluated constraints.
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -49,8 +56,9 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
     SimpleDataSourceStreamReader,
 )
+from pyspark.sql.types import LongType, StructField
 
-from mini_lakehouse_control_plane_executor_spark.table.log import TransactionLog
+from mini_lakehouse_control_plane_executor_spark.table.log import Snapshot, TransactionLog
 from mini_lakehouse_control_plane_executor_spark.table.schema import (
     arrow_types,
     to_spark_schema,
@@ -103,8 +111,6 @@ def _filter_to_grammar(f: Filter) -> str | None:
 
 class _MinilakeReader(DataSourceReader):
     def __init__(self, options):
-        import os
-
         opts = {str(k).lower(): v for k, v in dict(options).items()}
         root = opts.get("root")
         # `table` is accepted for reader-API use; SQL DDL callers can use
@@ -121,22 +127,23 @@ class _MinilakeReader(DataSourceReader):
         # before any task runs — concurrent commits cannot change what
         # this query sees (snapshot_isolation.go:57-123 semantics).
         snap = TransactionLog(table_dir).snapshot(version)
+        if snap.version == 0:
+            raise ValueError(f"no such table: {table}")
+        # The reader is pickled to every task: it keeps the version,
+        # schema and file list, not the snapshot.
+        self._version = snap.version
         self._schema_fields = snap.schema
-        self._files = list(snap.files)
+        self._files = snap.files
         self._table_dir = table_dir
 
     def pushFilters(self, filters):
         """Advisory pushdown: supported comparisons prune whole FILES via
-        the log's min/max stats (the pruning the reference models but
-        never performs); every filter is still returned so Spark
-        re-applies them row-level — pruning can only drop files that
-        cannot match, never rows that should."""
-        from mini_lakehouse_control_plane_executor_spark.functions.filters import prune_files
-
-        for f in filters:
-            g = _filter_to_grammar(f)
-            if g is not None:
-                self._files = prune_files(self._files, g, self._schema_fields)
+        the log's min/max stats (``Snapshot.scan``, the pruning the
+        reference models but never performs); every filter is still
+        returned so Spark re-applies them row-level — pruning can only
+        drop files that cannot match, never rows that should."""
+        terms = [g for g in map(_filter_to_grammar, filters) if g is not None]
+        self._files = Snapshot(self._version, self._schema_fields, self._files).scan(*terms)
         return filters  # none fully handled: Spark evaluates them too
 
     def partitions(self):
@@ -148,17 +155,10 @@ class _MinilakeReader(DataSourceReader):
         return [_FilePartition(f.path, f.dv_path) for f in self._files]
 
     def read(self, partition: _FilePartition):
-        import os
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
         pa_types = arrow_types()
         fields = self._schema_fields
-        deleted: set[int] = set()
+        deleted = ()
         if partition.dv_path:
-            import pyarrow.compute as pc
-
             dvt = pq.read_table(
                 os.path.join(self._table_dir, partition.dv_path),
                 columns=["src", "pos"],
@@ -166,7 +166,7 @@ class _MinilakeReader(DataSourceReader):
             mask = pc.equal(
                 dvt.column("src"), os.path.basename(partition.path)
             )
-            deleted = set(dvt.filter(mask).column("pos").to_pylist())
+            deleted = dvt.filter(mask).column("pos").to_numpy()
         offset = 0
         pf = pq.ParquetFile(os.path.join(self._table_dir, partition.path))
         present = [f.name for f in fields if f.name in pf.schema_arrow.names]
@@ -180,12 +180,12 @@ class _MinilakeReader(DataSourceReader):
                 for f in fields
             ]
             out = pa.RecordBatch.from_arrays(arrays, [f.name for f in fields])
-            if deleted:
-                keep = [
-                    i for i in range(out.num_rows) if offset + i not in deleted
-                ]
-                if len(keep) < out.num_rows:
-                    out = out.take(pa.array(keep, type=pa.int64()))
+            if len(deleted):
+                keep = np.isin(
+                    np.arange(offset, offset + out.num_rows), deleted, invert=True
+                )
+                if not keep.all():
+                    out = out.filter(pa.array(keep))
             offset += batch.num_rows
             yield out
 
@@ -252,8 +252,6 @@ class _MinilakeStreamReader(SimpleDataSourceStreamReader):
     """
 
     def __init__(self, options):
-        import os
-
         root = options.get("root")
         table = options.get("table")
         if not root or not table:
@@ -263,7 +261,10 @@ class _MinilakeStreamReader(SimpleDataSourceStreamReader):
         self._ignore_changes = str(
             options.get("ignoreChanges", "false")
         ).lower() == "true"
-        self._fields = TransactionLog(self._table_dir).snapshot().schema
+        snap = TransactionLog(self._table_dir).snapshot()
+        if snap.version == 0:
+            raise ValueError(f"no such table: {table}")
+        self._fields = snap.schema
 
     def initialOffset(self) -> dict:
         return {"version": self._starting}
@@ -288,10 +289,6 @@ class _MinilakeStreamReader(SimpleDataSourceStreamReader):
         return iter(list(self._iter_rows(v0, v1)))
 
     def _iter_rows(self, v0: int, v1: int):
-        import os
-
-        import pyarrow.parquet as pq
-
         log = TransactionLog(self._table_dir)
         names = [f.name for f in self._fields]
         # The live path set is seeded from ONE snapshot at the range
@@ -344,15 +341,7 @@ class MinilakeStreamDataSource(DataSource):
         return "minilake-stream"
 
     def schema(self):
-        import os
-
-        from pyspark.sql.types import LongType, StructField
-
-        root, table = self.options.get("root"), self.options.get("table")
-        if not root or not table:
-            raise ValueError("minilake-stream requires 'root' and 'table' options")
-        snap = TransactionLog(os.path.join(root, "tables", table)).snapshot()
-        base = to_spark_schema(snap.schema)
+        base = to_spark_schema(_MinilakeStreamReader(self.options)._fields)
         return base.add(StructField("_commit_version", LongType(), False))
 
     def simpleStreamReader(self, schema):

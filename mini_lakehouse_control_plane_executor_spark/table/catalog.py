@@ -10,7 +10,6 @@ Job tracking (ids + status + row metrics) mirrors
 
 from __future__ import annotations
 
-import dataclasses
 import os
 import shutil
 import threading
@@ -27,7 +26,12 @@ from pyspark.sql.types import StructType
 from mini_lakehouse_control_plane_executor_spark.observability import log as _slog
 from mini_lakehouse_control_plane_executor_spark.observability import span as _span
 from mini_lakehouse_control_plane_executor_spark.plans.query import SimpleQuery, apply_query
-from mini_lakehouse_control_plane_executor_spark.table.schema import Field
+from mini_lakehouse_control_plane_executor_spark.table.schema import (
+    Field,
+    SchemaError,
+    to_spark_schema,
+    validate_table_name,
+)
 from mini_lakehouse_control_plane_executor_spark.table import table as table_module
 from mini_lakehouse_control_plane_executor_spark.table.table import LakehouseTable
 
@@ -257,6 +261,12 @@ class LakehouseSession:
         # state (see TransactionLog) persists across calls.
         t = self._tables.get(name)
         if t is None:
+            # Names come from request bodies: one that is not a table
+            # name ("../x") names no table and must not reach a path.
+            try:
+                validate_table_name(name)
+            except SchemaError:
+                raise KeyError(f"no such table: {name}") from None
             t = LakehouseTable(self.spark, self.root, name)
             if not t.exists():
                 raise KeyError(f"no such table: {name}")
@@ -482,8 +492,7 @@ class LakehouseSession:
         query (version pinned once at plan time)."""
         if isinstance(q, dict):
             q = SimpleQuery.from_json(q)
-        df = self.table(q.table_name).read(version=q.version, prune_filter=q.filter)
-        return apply_query(df, q)
+        return self._plan(q, {})
 
     def sql(self, statement: str, versions: dict[str, int] | None = None) -> DataFrame:
         """Real SQL over snapshot views (the reference's POST /query
@@ -540,23 +549,22 @@ class LakehouseSession:
 
     # -- jobs ----------------------------------------------------------
 
-    def _pin_snapshot(self, q: SimpleQuery) -> tuple[SimpleQuery, dict]:
-        """Resolve the query's snapshot once: return the query pinned to
-        that version, and the input metrics of the files it will scan
-        there after stats-based pruning. A commit landing later changes
-        neither."""
-        snap = self.table(q.table_name).snapshot(q.version)
-        files = snap.files
-        if q.filter:
-            from mini_lakehouse_control_plane_executor_spark.functions.filters import prune_files
-
-            files = prune_files(files, q.filter, snap.schema)
-        return dataclasses.replace(q, version=snap.version), {
-            "input_files": len(files),
-            "input_bytes": sum(f.size for f in files),
+    def _plan(self, q: SimpleQuery, metrics: dict) -> DataFrame:
+        """Plan ``q`` against one snapshot, resolved here once: the
+        ``apply_query`` frame over the files ``Snapshot.scan`` keeps for
+        the query's filter. ``metrics`` gets those files' input metrics
+        first, so a query that fails to plan still reports what it would
+        have read. A commit landing later changes neither."""
+        t = self.table(q.table_name)
+        snap = t.snapshot(q.version)
+        files = snap.scan(q.filter)
+        metrics.update(
+            input_files=len(files),
+            input_bytes=sum(f.size for f in files),
             # live rows: physical minus deletion-vector'd
-            "input_rows": sum(f.rows - f.dv_rows for f in files),
-        }
+            input_rows=sum(f.rows - f.dv_rows for f in files),
+        )
+        return apply_query(t._scan_files(files, to_spark_schema(snap.schema)), q)
 
     def submit(self, q: SimpleQuery | dict) -> tuple[str, DataFrame]:
         """Synchronous job-tracked planning: returns (job_id, result df).
@@ -569,9 +577,7 @@ class LakehouseSession:
         with self._jobs_mu:
             self._jobs[job_id] = info
         try:
-            q, scan_metrics = self._pin_snapshot(q)
-            info.metrics.update(scan_metrics)
-            df = self.query(q)
+            df = self._plan(q, info.metrics)
             info.status = "COMPLETED"
             return job_id, df
         except Exception as exc:
@@ -621,9 +627,7 @@ class LakehouseSession:
             # cancel_job's cancelJobGroup covers the whole execution,
             # not just the result write.
             sc.setJobGroup(job_id, f"lakehouse-job-{job_id}")
-            q, scan_metrics = self._pin_snapshot(q)
-            info.metrics.update(scan_metrics)
-            df = self.query(q)
+            df = self._plan(q, info.metrics)
             # File-backed result sink: rows go to parquet at executor
             # parallelism and NEVER materialize on the driver; the row
             # count (footers) and a bounded preview are read back from

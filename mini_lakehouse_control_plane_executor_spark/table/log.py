@@ -35,6 +35,7 @@ import threading
 import time
 from dataclasses import dataclass, field
 
+from mini_lakehouse_control_plane_executor_spark.functions import filters as _filters
 from mini_lakehouse_control_plane_executor_spark.table.schema import (
     Field,
     fields_from_json,
@@ -175,6 +176,17 @@ class Snapshot:
     def file_paths(self) -> list[str]:
         return [f.path for f in self.files]
 
+    def scan(self, *filters: str | None) -> list[FileAdd]:
+        """The files (with their dv pointers) a read of this snapshot
+        opens: every snapshot read picks them here. Each non-empty filter
+        prunes by min/max stats on its own, so one the grammar cannot
+        parse keeps every file without stopping the others."""
+        files = self.files
+        for f in filters:
+            if f:
+                files = _filters.prune_files(files, f, self.schema)
+        return files
+
 
 # Write a checkpoint every N commits: snapshot()/find_txn() then read at
 # most (1 checkpoint + N entries) instead of the whole history. Mirrors
@@ -198,8 +210,8 @@ class TransactionLog:
 
     def __init__(self, table_dir: str):
         self.table_dir = table_dir
+        # Made by the first commit: a missing table leaves nothing on disk.
         self.log_dir = os.path.join(table_dir, "_log")
-        os.makedirs(self.log_dir, exist_ok=True)
         self._mu = threading.Lock()
         self._state_version = 0
         self._state_files: dict[str, FileAdd] = {}
@@ -220,26 +232,22 @@ class TransactionLog:
 
     # -- reads ---------------------------------------------------------
 
+    def _versions(self, suffix: str) -> list[int]:
+        try:
+            names = os.listdir(self.log_dir)
+        except FileNotFoundError:  # no commit yet
+            return []
+        return sorted(
+            int(n[: -len(suffix)])
+            for n in names
+            if n.endswith(suffix) and n[: -len(suffix)].isdecimal()
+        )
+
     def list_versions(self) -> list[int]:
-        out = []
-        for name in os.listdir(self.log_dir):
-            if name.endswith(".json") and ".checkpoint." not in name:
-                try:
-                    out.append(int(name[:-5]))
-                except ValueError:
-                    continue
-        return sorted(out)
+        return self._versions(".json")
 
     def list_checkpoints(self) -> list[int]:
-        suffix = ".checkpoint.json"
-        out = []
-        for name in os.listdir(self.log_dir):
-            if name.endswith(suffix):
-                try:
-                    out.append(int(name[: -len(suffix)]))
-                except ValueError:
-                    continue
-        return sorted(out)
+        return self._versions(".checkpoint.json")
 
     def latest_version(self) -> int:
         versions = self.list_versions()
@@ -503,6 +511,8 @@ class TransactionLog:
         # hard-link into place. link(2) fails if the target exists and a
         # reader can never observe a partially-written entry.
         tmp = f"{path}.{os.getpid()}.{id(entry)}.tmp"
+        if entry.version == 1:
+            os.makedirs(self.log_dir, exist_ok=True)
         with open(tmp, "wb") as fh:
             fh.write(payload)
         try:

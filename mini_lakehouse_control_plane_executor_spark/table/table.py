@@ -44,6 +44,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mini_lakehouse_control_plane_executor_spark.functions.filters import parse_filter
 from mini_lakehouse_control_plane_executor_spark.table.log import (
     CommitConflictError,
     CommitRetriesExhausted,
@@ -858,8 +859,6 @@ class LakehouseTable:
         (log.commit allows re-adding a path whose dv changes); an update
         also appends the rewritten rows as fresh files, in the same
         commit."""
-        from mini_lakehouse_control_plane_executor_spark.functions.filters import parse_filter, prune_files
-
         if mode not in ("copy-on-write", "cow", "merge-on-read", "mor"):
             raise ValueError(f"unknown {op} mode {mode!r}")
         mor = mode in ("merge-on-read", "mor")
@@ -873,7 +872,7 @@ class LakehouseTable:
             unknown = set(assignments or ()) - {f.name for f in snap.schema}
             if unknown:
                 raise ValueError(f"UPDATE of unknown column(s): {sorted(unknown)}")
-            candidates = prune_files(snap.files, filter_str, snap.schema)
+            candidates = snap.scan(filter_str)
             if not candidates:
                 return None
             schema = to_spark_schema(snap.schema)
@@ -1588,22 +1587,16 @@ class LakehouseTable:
         version committed at or before that wall-clock instant.
 
         ``prune_filter`` (reference filter grammar) additionally drops
-        whole files via log min/max stats before Spark ever lists them —
-        at 100 TB this is the difference between touching every object
-        and touching the few that can match.
+        whole files via log min/max stats (``Snapshot.scan``) before
+        Spark ever lists them — at 100 TB this is the difference between
+        touching every object and touching the few that can match.
         """
         if timestamp_ms is not None:
             if version is not None:
                 raise ValueError("pass version OR timestamp_ms, not both")
             version = self.log.version_at_timestamp(timestamp_ms)
         snap = self.log.snapshot(version)
-        schema = to_spark_schema(snap.schema)
-        files = snap.files
-        if prune_filter:
-            from mini_lakehouse_control_plane_executor_spark.functions.filters import prune_files
-
-            files = prune_files(files, prune_filter, snap.schema)
-        return self._scan_files(files, schema)
+        return self._scan_files(snap.scan(prune_filter), to_spark_schema(snap.schema))
 
     def diff(self, v_from: int, v_to: int | None = None) -> DataFrame:
         """Change-data-feed read: the multiset row difference between two
@@ -1830,23 +1823,18 @@ class LakehouseTable:
 
         ``where`` scopes WHICH FILES are eligible (Delta's
         ``OPTIMIZE ... WHERE`` at file granularity): only files whose
-        min/max stats possibly match the predicate (the same sound
-        ``prune_files`` test reads use) are rewritten; everything else
+        min/max stats possibly match the predicate (``Snapshot.scan``,
+        the file selection every read uses) are rewritten; everything else
         is left byte-identical in place. Rows are never filtered —
         a rewritten file keeps ALL its rows, matching or not, so the
         table's data is unchanged (only its layout). The hot-partition
         lever: re-cluster last week's files without paying a full-table
         rewrite. Composes with ``cluster_by``/``zorder_by`` (the scoped
         subset is rewritten in the clustered layout)."""
-        from mini_lakehouse_control_plane_executor_spark.functions.filters import (
-            prune_files,
-        )
 
         def groups(snap: Snapshot) -> list[list[FileAdd]]:
             _validate_cluster_args(snap.schema, cluster_by, zorder_by)
-            pool = list(snap.files)
-            if where:
-                pool = prune_files(pool, where, snap.schema)
+            pool = snap.scan(where)
             if cluster_by or zorder_by:
                 return [pool] if pool else []
             return self.compaction_candidates(snap, files=pool)

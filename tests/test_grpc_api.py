@@ -376,9 +376,16 @@ def test_execute_query_lifecycle_rpc(qsvc, lake, spark):
     assert status.failed_tasks == 0 and status.error == ""
 
 
-def test_execute_query_unknown_table_rpc(qsvc):
-    resp = qsvc.ExecuteQuery(g.ExecuteQueryRequest(table_name="nope"))
-    assert resp.job_id == "" and resp.error
+def test_execute_query_unknown_table_rpc(qsvc, lake):
+    """A missing table, or a name that is not a table name, is an
+    in-band error that leaves no directory inside or outside the root."""
+    for name in ("nope", "../../escaped"):
+        resp = qsvc.ExecuteQuery(g.ExecuteQueryRequest(table_name=name))
+        assert resp.job_id == "" and resp.error
+        snap = g.MetadataServicer(lake).GetSnapshot(g.GetSnapshotRequest(name))
+        assert snap.error and not snap.files
+    assert os.listdir(os.path.join(lake.root, "tables")) == []
+    assert not os.path.exists(os.path.join(lake.root, "..", "escaped"))
     status = qsvc.GetQueryStatus(g.GetQueryStatusRequest("no-such-job"))
     assert status.error
     result = qsvc.WaitForQueryCompletion(g.WaitForQueryRequest("no-such-job"))

@@ -7,7 +7,10 @@ import time
 
 from pyspark.sql import functions as F
 
+from mini_lakehouse_control_plane_executor_spark.functions import filters
 from mini_lakehouse_control_plane_executor_spark.plans.query import Aggregate, SimpleQuery
+from mini_lakehouse_control_plane_executor_spark.table import catalog as cat
+from mini_lakehouse_control_plane_executor_spark.table.log import TransactionLog
 from mini_lakehouse_control_plane_executor_spark.table.schema import Field
 
 SCHEMA = [Field("k", "int64"), Field("v", "string"), Field("x", "float64")]
@@ -53,13 +56,13 @@ def test_job_lifecycle_observable(lake, spark, monkeypatch):
     lake.insert("jl", _df(spark, 0, 10))
 
     gate = threading.Event()
-    real_query = lake.query
+    real_apply = cat.apply_query
 
-    def slow_query(q):
+    def slow_apply(df, q):
         gate.wait(10)
-        return real_query(q)
+        return real_apply(df, q)
 
-    monkeypatch.setattr(lake, "query", slow_query)
+    monkeypatch.setattr(cat, "apply_query", slow_apply)
     job_id = lake.submit_async(SimpleQuery(table_name="jl"))
     deadline = time.time() + 5
     while lake.job_status(job_id).status == "PENDING" and time.time() < deadline:
@@ -261,19 +264,77 @@ def test_job_result_keeps_result_order(lake, spark):
 
 def test_job_pins_one_snapshot(lake, spark, monkeypatch):
     """Input metrics describe the version the job ran: a commit landing
-    between planning and execution must change neither."""
+    between snapshot resolution and execution must change neither."""
     lake.create_table("pin", SCHEMA)
     lake.insert("pin", _df(spark, 0, 10))
-    real_query = lake.query
+    real_apply = cat.apply_query
 
-    def racing_query(q):
+    def racing_apply(df, q):
         lake.insert("pin", _df(spark, 10, 25))
-        return real_query(q)
+        return real_apply(df, q)
 
-    monkeypatch.setattr(lake, "query", racing_query)
+    monkeypatch.setattr(cat, "apply_query", racing_apply)
     q = SimpleQuery(table_name="pin", aggregates=[Aggregate("count", "*", "n")])
     info = lake.job_wait(lake.submit_async(q))
     assert info.metrics["input_rows"] == lake.job_result(info.job_id)[0]["n"] == 10
 
     job_id, df = lake.submit(q)
     assert lake.job_status(job_id).metrics["input_rows"] == df.collect()[0]["n"] == 25
+
+
+def test_job_resolves_its_snapshot_once(lake, spark, monkeypatch):
+    """``query``, ``submit`` and ``submit_async`` each resolve the table's
+    snapshot once and prune its files at most once, on a time-travel
+    query too (a version behind the log's cached state replays cold)."""
+    lake.create_table("once", SCHEMA)
+    for lo in range(0, 30, 10):
+        lake.insert("once", _df(spark, lo, lo + 10))
+    calls = {"snapshot": 0, "prune": 0}
+    real_snapshot, real_prune = TransactionLog.snapshot, filters.prune_files
+
+    def snapshot(self, version=None):
+        calls["snapshot"] += 1
+        return real_snapshot(self, version)
+
+    def prune(files, filter_str, schema=None):
+        calls["prune"] += 1
+        return real_prune(files, filter_str, schema)
+
+    monkeypatch.setattr(TransactionLog, "snapshot", snapshot)
+    monkeypatch.setattr(filters, "prune_files", prune)
+    runs = {
+        "query": lambda q: lake.query(q).collect(),
+        "submit": lambda q: lake.submit(q)[1].collect(),
+        "submit_async": lambda q: lake.job_result(lake.submit_async(q)),
+    }
+    for name, run in runs.items():
+        for q in (
+            SimpleQuery(table_name="once", filter="k >= 15"),
+            SimpleQuery(table_name="once", version=3),
+        ):
+            calls.update(snapshot=0, prune=0)
+            run(q)
+            assert calls == {"snapshot": 1, "prune": int(bool(q.filter))}, (name, q)
+
+
+def test_time_travel_job_counts_live_rows(lake, spark):
+    """A job at an old version over deletion-vector-carrying files
+    reports the live rows of the files its filter keeps."""
+    lake.create_table("ttdv", SCHEMA)
+    for lo in range(0, 400, 100):
+        lake.insert("ttdv", _df(spark, lo, lo + 100).coalesce(1))
+    t = lake.table("ttdv")
+    t.delete("k % 10 = 0", mode="merge-on-read")
+    v = t.snapshot().version
+    lake.insert("ttdv", _df(spark, 400, 500).coalesce(1))
+    q = SimpleQuery(
+        table_name="ttdv", version=v, filter="k >= 150",
+        aggregates=[Aggregate("count", "*", "n")],
+    )
+    info = lake.job_wait(lake.submit_async(q))
+    kept = t.snapshot(v).scan("k >= 150")
+    assert len(kept) == 3 and all(f.dv_rows == 10 for f in kept)
+    assert info.metrics["input_files"] == 3
+    assert info.metrics["input_rows"] == sum(f.rows - f.dv_rows for f in kept) == 270
+    # The filter is applied row-level too: 150..399 less the multiples of 10.
+    assert lake.job_result(info.job_id)[0]["n"] == 225

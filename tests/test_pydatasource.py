@@ -92,6 +92,34 @@ def test_format_prunes_files_by_stats(lake, spark, capsys):
     assert pruned < n_files, (pruned, n_files)
 
 
+def test_format_prunes_on_every_pushed_filter(lake, spark):
+    """Two pushed comparisons on the same column prune together: over 4
+    clustered files, ``100 <= id < 200`` plans exactly the one file."""
+    register(spark)
+    lake.create_table("d2", SCHEMA)
+    for k in range(4):
+        lake.insert("d2", _mk(spark, k * 100, (k + 1) * 100).coalesce(1))
+    df = _fmt(spark, lake, "d2").filter((F.col("id") >= 100) & (F.col("id") < 200))
+    assert df.rdd.getNumPartitions() == 1
+    assert sorted(r["id"] for r in df.collect()) == list(range(100, 200))
+
+
+def test_format_missing_table_is_an_error(lake, spark):
+    """A batch or stream read of a table that was never created raises
+    instead of returning a frame with no table columns, and writes
+    nothing."""
+    import os
+
+    register(spark)
+    with pytest.raises(Exception, match="no such table: nope"):
+        _fmt(spark, lake, "nope")
+    with pytest.raises(Exception, match="no such table: nope"):
+        spark.readStream.format("minilake-stream").option("root", lake.root).option(
+            "table", "nope"
+        ).load()
+    assert os.listdir(os.path.join(lake.root, "tables")) == []
+
+
 def test_format_schema_evolution_nulls(lake, spark):
     """Old files read NULL for columns added later (merge-by-name)."""
     register(spark)

@@ -468,6 +468,24 @@ def test_fuzz_malformed_bodies_never_500(lake, server, spark):
     assert checked > 300  # the grid actually ran
 
 
+def test_table_name_outside_the_lake_is_rejected(server, lake):
+    """A request body's ``table_name`` that is not a table name ("../")
+    is refused without touching the filesystem: 400 on the synchronous
+    query, a FAILED job on the async one, 404 on a route name too long
+    to be a table."""
+    import os
+
+    name = "../../escaped"
+    body = _call(server, "POST", "/query", {"table_name": name}, expect=400)
+    assert "no such table" in body["error"]
+    job = _call(server, "POST", "/queries", {"table_name": name})["job_id"]
+    with pytest.raises(RuntimeError, match="no such table"):
+        lake.job_wait(job)
+    _call(server, "GET", "/tables/" + "x" * 65, expect=404)
+    assert os.listdir(os.path.join(lake.root, "tables")) == []
+    assert not os.path.exists(os.path.join(lake.root, "..", "escaped"))
+
+
 def test_oversize_body_413_without_buffering(server):
     """r13 review: _drain_body read the entire declared Content-Length
     in ONE rfile.read on every path (including 404s), so a client

@@ -132,10 +132,7 @@ report = {
     "dropped": [conf.get(k) for k in
                 ("fs.s3a.impl", "ipc.client.connect.timeout", "hadoop.http.staticuser.user",
                  "io.seqfile.compress.blocksize")],
-    # Streaming checkpoints and the file sink's _spark_metadata log are
-    # written through FileContext, whose ChecksumFs always writes them.
-    "crc": [p for p in crc_files(root + "/io")
-            if not p.startswith(("checkpoint/", "stream/_spark_metadata/"))],
+    "crc": crc_files(root + "/io"),
 }
 # A FileSystem rebuilt after closeAll() writes checksums again until
 # the next get_spark call.
@@ -160,9 +157,11 @@ def test_hadoop_conf_stays_trimmed_after_every_io_path(tmp_path):
     trim. The values a deployment sets through ``extra_conf`` or
     ``SPARK_GRAFT_CONF_spark__hadoop__*`` stay, in a dropped family too;
     one that only a trimmed resource sets is gone; FileContext's
-    ``fs.AbstractFileSystem.file.impl`` stays. No FileSystem write of
-    those paths (batch outputs, stream data files, the table's ``data/``,
-    an async job's ``results/<id>/``) leaves a ``.crc`` sidecar, and a
+    ``fs.AbstractFileSystem.file.impl`` stays, as the session's
+    ``RawLocalFs``. No write of those paths (batch outputs, stream data
+    files, the streaming checkpoint and ``_spark_metadata`` log, the
+    table's ``data/``, an async job's ``results/<id>/``) leaves a
+    ``.crc`` sidecar, and a
     second ``get_spark`` turns checksum writing off again on a
     FileSystem rebuilt after ``closeAll()``. A fresh JVM, because ``get_spark`` on a running session does not
     rebuild its Hadoop conf and trims it again."""
@@ -184,6 +183,6 @@ def test_hadoop_conf_stays_trimmed_after_every_io_path(tmp_path):
     assert out["unused"] == []
     assert out["dropped"] == [None] * 4
     assert out["size"] < 200  # 1,112 keys untrimmed
-    assert out["values"] == ["7", "1234", None, "77", "org.apache.hadoop.fs.local.LocalFs"]
+    assert out["values"] == ["7", "1234", None, "77", "org.apache.hadoop.fs.local.RawLocalFs"]
     assert out["crc"] == []
     assert out["crc_after_close"] == [True, False]

@@ -226,6 +226,37 @@ def test_stream_ingest_exactly_once(spark, lake, tmp_path):
     assert t.read().count() == 110
 
 
+def test_stream_checkpoint_and_sink_write_no_crc(spark, tmp_path):
+    """A stateful availableNow batch into a file sink leaves no Hadoop
+    ``.<name>.crc`` sidecar: not in its checkpoint (offsets, commits,
+    state, metadata), nor in the sink's data files or its
+    ``_spark_metadata`` log. The state store's own ``<name>.zip.crc``
+    files are Spark's state checksums, checked when state loads."""
+    import os
+
+    src, sink, ckpt = (str(tmp_path / d) for d in ("src", "sink", "ckpt"))
+    spark.range(50).selectExpr("id % 20 AS k", "id AS v").write.parquet(src)
+    q = (
+        spark.readStream.schema("k long, v long").parquet(src)
+        .dropDuplicates(["k"])
+        .writeStream.format("parquet")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start(sink)
+    )
+    q.awaitTermination(120)
+    assert spark.read.parquet(sink).count() == 20
+    assert os.path.isdir(os.path.join(ckpt, "state"))
+    crc = [
+        os.path.join(d, f)
+        for root in (ckpt, sink)
+        for d, _, files in os.walk(root)
+        for f in files
+        if f.startswith(".") and f.endswith(".crc")
+    ]
+    assert crc == []
+
+
 def test_correlation_stream_equals_batch(spark, event_dir):
     """Watermarked stream-stream time-range join must equal the
     identical batch join on the same rows (append mode: rows emit once

@@ -227,6 +227,19 @@ def test_drop_table(lake, spark):
         lake.table("gone")
 
 
+def test_missing_table_lookup_writes_nothing(lake):
+    """Looking up a table that does not exist raises KeyError and leaves
+    no directory behind, inside the lake root or, for a name that is not
+    a table name, outside it."""
+    escaped = os.path.join(lake.root, "..", "escaped")
+    for name in ("typo", "../../escaped", "x" * 65):
+        with pytest.raises(KeyError, match="no such table"):
+            lake.table(name)
+    assert os.listdir(os.path.join(lake.root, "tables")) == []
+    assert not os.path.exists(escaped)
+    assert lake.list_tables() == []
+
+
 def test_update_copy_on_write(lake, spark):
     """UPDATE rewrites only stat-pruned files, applies SQL-expression
     assignments to matching rows, preserves old versions."""
