@@ -617,10 +617,9 @@ class QueryExecutionServicer:
 
     def ExecuteQuery(self, req: ExecuteQueryRequest) -> ExecuteQueryResponse:
         try:
-            self.lake.table(req.table_name)  # fail fast like the reference
+            job_id = self.lake.submit_async(req.to_json())
         except KeyError as exc:
             return ExecuteQueryResponse(error=str(exc))
-        job_id = self.lake.submit_async(req.to_json())
         return ExecuteQueryResponse(job_id=job_id)
 
     def GetQueryStatus(self, req: GetQueryStatusRequest) -> GetQueryStatusResponse:

@@ -356,12 +356,11 @@ class LakehouseRestServer:
 
     def execute_query_async(self, body: dict):
         try:
-            # Parsing happens synchronously in submit_async
-            # (SimpleQuery.from_json); execution errors surface through
-            # the job's FAILED status instead. Only the parse/validation
-            # exception classes map to 400 — anything else is a genuine
-            # server fault and must surface as 500 so it reaches 5xx
-            # monitoring.
+            # submit_async parses the body and looks up the table;
+            # execution errors surface through the job's FAILED status.
+            # Only the parse/lookup exception classes map to 400 —
+            # anything else is a genuine server fault and must surface
+            # as 500 so it reaches 5xx monitoring.
             job_id = self.lake.submit_async(body)
         except (ValueError, KeyError, TypeError) as exc:
             raise _ApiError(400, f"Invalid query: {exc}")

@@ -11,6 +11,7 @@ Job tracking (ids + status + row metrics) mirrors
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import threading
 import time
@@ -21,6 +22,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.conversion import ArrowTableToRowsConversion
+from pyspark.sql.session import _monkey_patch_RDD
 from pyspark.sql.types import StructType
 
 from mini_lakehouse_control_plane_executor_spark.observability import log as _slog
@@ -144,7 +146,6 @@ class LakehouseSession:
         self._compacting: dict[str, dict] = {}
         self._compact_mu = threading.Lock()
         self._compact_slots = threading.BoundedSemaphore(COMPACT_MAX_CONCURRENT)
-        self._sql_mu = threading.Lock()
         # Cumulative observability counters (pkg/observability/metrics.go):
         # monotonic across job eviction, unlike scrape-time derivation
         # from the bounded _jobs map.
@@ -496,31 +497,28 @@ class LakehouseSession:
 
     def sql(self, statement: str, versions: dict[str, int] | None = None) -> DataFrame:
         """Real SQL over snapshot views (the reference's POST /query
-        endpoint is mocked — ``rest_api.go:709-734``; this un-mocks it).
-        Every existing table is registered as a temp view pinned at
-        ``versions.get(name, latest)``.
-
-        Registration + analysis run under a lock: views are session
-        globals, so two concurrent ``sql()`` calls pinning different
-        versions of the same table would otherwise interleave
-        registrations and one statement could bind the other's
-        snapshot. ``spark.sql`` RESOLVES views eagerly (analysis binds
-        the view's plan, not its name), so the returned DataFrame is
-        immune to later re-registration and execution happens outside
-        the lock."""
-        versions = versions or {}
-        with self._sql_mu:
-            for name in self.list_tables():
-                self.table(name).read(
-                    version=versions.get(name)
-                ).createOrReplaceTempView(name)
-            return self.spark.sql(statement)
+        endpoint is mocked — ``rest_api.go:709-734``; this un-mocks it),
+        run in a per-call clone of ``self.spark`` that carries the caller's
+        runtime SQL conf, UDFs and temp views. Each lake table named in the
+        statement (an identifier word, any case; table names are
+        ``[A-Za-z0-9_]``, so joins, subqueries and ``EXPLAIN`` are covered)
+        is bound there as a view at ``versions.get(name, latest)``; one
+        bound but not read costs time, never a result (a CTE still shadows
+        it). The returned DataFrame belongs to the clone: a temp view made
+        from it stays there, and ``self.spark`` gains no view."""
+        words = {w.lower() for w in re.findall(r"[A-Za-z0-9_]+", statement)}
+        jclone = self.spark._jsparkSession.cloneSession()
+        clone = SparkSession(self.spark.sparkContext, jsparkSession=jclone)
+        # PySpark's session constructor points RDD.toDF at the new session.
+        _monkey_patch_RDD(self.spark)
+        self._bind_views(clone, [n for n in self.list_tables() if n.lower() in words], versions)
+        return clone.sql(statement)
 
     def attach_sql_views(
         self, prefix: str = "", versions: dict[str, int] | None = None
     ) -> dict[str, int]:
-        """Register EVERY catalog table as a snapshot-pinned temp view
-        named ``<prefix><table>`` and return {view_name: pinned_version}.
+        """Register EVERY catalog table in ``self.spark`` as a snapshot-pinned
+        temp view ``<prefix><table>``; return {view_name: pinned_version}.
 
         This is the one-call workaround for Spark 4.1's Python-DataSource
         catalog gap (``CREATE TABLE ... USING minilake`` parses, but the
@@ -529,23 +527,25 @@ class LakehouseSession:
         plain ``spark.sql("SELECT ... FROM <view>")`` works against
         log-controlled snapshots with no package import at the call site.
 
-        Pinning semantics: each view binds the snapshot current at THIS
-        call (or ``versions[name]`` when given) — a commit that lands
-        afterwards does not change what the view reads. Call again to
-        refresh to latest. Registration runs under the same lock as
-        ``sql()`` so concurrent pinning of different versions cannot
-        interleave; the pinned version is resolved from one snapshot
-        read per table (no latest-version race between resolving and
-        registering)."""
-        versions = versions or {}
-        out: dict[str, int] = {}
-        with self._sql_mu:
-            for name in self.list_tables():
-                t = self.table(name)
-                snap = t.snapshot(versions.get(name))
-                t.read(version=snap.version).createOrReplaceTempView(prefix + name)
-                out[prefix + name] = snap.version
-        return out
+        Each view reads the snapshot current at THIS call (or
+        ``versions[name]``); a commit that lands afterwards does not
+        change it. Call again to refresh to latest."""
+        return self._bind_views(self.spark, self.list_tables(), versions, prefix)
+
+    def _bind_views(
+        self, session: SparkSession, names: list[str], versions: dict | None, prefix: str = ""
+    ) -> dict[str, int]:
+        """Bind each named table in ``session`` as view ``<prefix><name>``, pinned
+        before its one snapshot resolve (the read); return {view: version}."""
+        of_rows = session._jvm.org.apache.spark.sql.classic.Dataset.ofRows
+        pinned = {}
+        for name in names:
+            t = self.table(name)
+            version = (versions or {}).get(name) or t.log.latest_version()
+            jdf = of_rows(session._jsparkSession, t.read(version=version)._jdf.logicalPlan())
+            jdf.createOrReplaceTempView(prefix + name)
+            pinned[prefix + name] = version
+        return pinned
 
     # -- jobs ----------------------------------------------------------
 
@@ -595,12 +595,13 @@ class LakehouseSession:
             info.done.set()
 
     def submit_async(self, q: SimpleQuery | dict) -> str:
-        """The reference's POST /queries contract: returns a job id
-        immediately; the query executes in the background with an
-        observable PENDING → RUNNING → COMPLETED/FAILED lifecycle and
-        execution metrics (rows/bytes/tasks)."""
+        """The reference's POST /queries contract: a missing table raises
+        ``KeyError``; else a job id returns at once and the query runs in
+        the background with an observable PENDING → RUNNING →
+        COMPLETED/FAILED lifecycle and execution metrics (rows/bytes/tasks)."""
         if isinstance(q, dict):
             q = SimpleQuery.from_json(q)
+        self.table(q.table_name)
         job_id = str(uuid.uuid4())
         with self._jobs_mu:
             self._jobs[job_id] = JobInfo(

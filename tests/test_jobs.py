@@ -74,12 +74,18 @@ def test_job_lifecycle_observable(lake, spark, monkeypatch):
 
 
 def test_failed_job_surfaces_error(lake, spark):
-    job_id = lake.submit_async(SimpleQuery(table_name="does_not_exist"))
+    """A query that fails while it runs ends as a FAILED job carrying its
+    error; one naming no table is refused before any job exists."""
     import pytest
 
+    lake.create_table("fj", SCHEMA)
+    job_id = lake.submit_async(SimpleQuery(table_name="fj", projection=["does_not_exist"]))
     with pytest.raises(RuntimeError, match="does_not_exist"):
         lake.job_result(job_id)
     assert lake.job_status(job_id).status == "FAILED"
+    with pytest.raises(KeyError, match="does_not_exist"):
+        lake.submit_async(SimpleQuery(table_name="does_not_exist"))
+    assert list(lake._jobs) == [job_id]
 
 
 def test_large_result_is_file_backed_not_driver_resident(lake, spark):

@@ -804,11 +804,10 @@ def test_version_diff_cdc(lake, spark):
 
 def test_concurrent_sql_version_pinning(lake, spark):
     """Two sql() calls pinning DIFFERENT versions of the same table must
-    each see their own snapshot even when racing: view registration is
-    session-global, so without the registration+analysis lock one
-    statement could bind the other's snapshot. Also proves the eager-
-    binding premise the lock relies on: a DataFrame returned by sql()
-    is immune to later re-registration of its views."""
+    each see their own snapshot even when racing: each call binds its
+    views in its own session clone. Also proves eager binding: a
+    DataFrame returned by sql() is immune to a later registration of a
+    view of the same name."""
     import threading
 
     lake.create_table("sqlpin", SCHEMA)
@@ -817,7 +816,7 @@ def test_concurrent_sql_version_pinning(lake, spark):
 
     # Eager binding: resolve at v2, re-register at latest, then collect.
     df_v2 = lake.sql("SELECT count(*) AS n FROM sqlpin", versions={"sqlpin": 2})
-    lake.sql("SELECT 1")  # re-registers every view at latest
+    lake.attach_sql_views()  # registers sqlpin at latest
     assert df_v2.collect()[0].n == 10
 
     errors = []
@@ -839,6 +838,105 @@ def test_concurrent_sql_version_pinning(lake, spark):
     [t.start() for t in threads]
     [t.join() for t in threads]
     assert not errors, errors
+
+
+def test_sql_matrix(lake, spark, monkeypatch):
+    """sql() binds exactly the lake tables its statement names, each at
+    its pinned version, in a clone of the caller's session: joins,
+    IN/EXISTS/scalar subqueries, a CTE shadowing a table, EXPLAIN and a
+    missing table behave as plain Spark SQL; the caller's temp views,
+    UDFs and runtime conf are visible inside; the caller's session is
+    left as it was; and a statement over one table reads only it."""
+    from pyspark.errors import AnalysisException
+
+    from mini_lakehouse_control_plane_executor_spark.table.log import TransactionLog
+
+    lake.create_table("fact", SCHEMA)
+    lake.create_table("dim", SCHEMA)
+    lake.insert("fact", _df(spark, 0, 10))   # v2: k 0..9
+    lake.insert("fact", _df(spark, 10, 30))  # v3: k 0..29
+    lake.insert("dim", _df(spark, 0, 5))     # v2: k 0..4
+    lake.insert("dim", _df(spark, 5, 8))     # v3: k 0..7
+
+    def one(stmt, **versions):
+        return lake.sql(stmt, versions=versions).collect()[0]
+
+    join = "SELECT count(*) AS n FROM fact JOIN dim ON fact.k = dim.k"
+    assert one(join).n == 8
+    assert one(join, fact=2, dim=3).n == 8
+    assert one(join, fact=3, dim=2).n == 5
+    assert one("SELECT count(*) AS n FROM fact WHERE k IN (SELECT k FROM dim)", dim=2).n == 5
+    assert one(
+        "SELECT count(*) AS n FROM fact f"
+        " WHERE EXISTS (SELECT 1 FROM dim d WHERE d.k = f.k + 1)",
+        dim=2,
+    ).n == 4
+    scalar = one("SELECT (SELECT max(k) FROM dim) AS m, count(*) AS n FROM fact", fact=2, dim=2)
+    assert (scalar.m, scalar.n) == (4, 10)
+    cte = one("WITH dim AS (SELECT 100 AS k) SELECT count(*) AS n, max(k) AS m FROM dim")
+    assert (cte.n, cte.m) == (1, 100)
+    assert one("SELECT count(*) AS n FROM `DIM`").n == 8  # names match case-insensitively
+    plan = "\n".join(r[0] for r in lake.sql("EXPLAIN SELECT * FROM fact WHERE k > 3").collect())
+    assert "== Physical Plan ==" in plan and "parquet" in plan.lower(), plan
+    with pytest.raises(AnalysisException) as missing:
+        lake.sql("SELECT * FROM no_such_table")
+    assert missing.value.getCondition() == "TABLE_OR_VIEW_NOT_FOUND"
+
+    # The caller's session: its own view (one named like a lake table
+    # too), a UDF and a runtime conf are seen inside; nothing changes.
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.range(3).createOrReplaceTempView("mx_mine")
+    spark.range(42).createOrReplaceTempView("dim")
+    spark.udf.register("mx_plus1", lambda x: x + 1, "long")
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Kathmandu")
+    try:
+        views = sorted(t.name for t in spark.catalog.listTables() if t.isTemporary)
+        got = one(
+            "SELECT mx_plus1(count(*)) AS n, current_timezone() AS tz"
+            " FROM mx_mine JOIN dim ON mx_mine.id = dim.k",
+            dim=2,
+        )
+        assert (got.n, got.tz) == (4, "Asia/Kathmandu")
+        out = lake.sql("SELECT k FROM fact")
+        assert out.sparkSession is not spark
+        out.createOrReplaceTempView("mx_out")  # stays in the clone
+        assert sorted(t.name for t in spark.catalog.listTables() if t.isTemporary) == views
+        assert spark.table("dim").count() == 42
+        assert spark.sparkContext.parallelize([(1,)]).toDF(["a"]).sparkSession is spark
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+        for view in ("mx_mine", "dim"):
+            spark.catalog.dropTempView(view)
+
+    # One read, one snapshot resolve, of the named table only.
+    reads, snapshots = [], []
+    read, snapshot = table_mod.LakehouseTable.read, TransactionLog.snapshot
+
+    def counting_read(self, *args, **kwargs):
+        reads.append(self.name)
+        return read(self, *args, **kwargs)
+
+    def counting_snapshot(self, *args, **kwargs):
+        snapshots.append(os.path.basename(self.table_dir))
+        return snapshot(self, *args, **kwargs)
+
+    monkeypatch.setattr(table_mod.LakehouseTable, "read", counting_read)
+    monkeypatch.setattr(TransactionLog, "snapshot", counting_snapshot)
+    assert one("SELECT count(*) AS n FROM dim", dim=2).n == 5
+    assert (reads, snapshots) == (["dim"], ["dim"])
+    snapshots.clear()
+    assert lake.attach_sql_views("mx_", {"dim": 2}) == {"mx_dim": 2, "mx_fact": 3}
+    assert sorted(snapshots) == ["dim", "fact"]
+    monkeypatch.undo()
+    assert spark.table("mx_dim").count() == 5
+    for view in ("mx_dim", "mx_fact"):
+        spark.catalog.dropTempView(view)
+
+    listeners = spark.sparkContext._jsc.sc().listenerBus().listeners()
+    before = listeners.size()
+    for _ in range(30):
+        assert one("SELECT count(*) AS n FROM dim").n == 8
+    assert listeners.size() == before
 
 
 def test_version_diff_empty_across_compaction(lake, spark):
