@@ -347,8 +347,8 @@ class LakehouseRestServer:
 
     def _rows_df(self, t, rows: list):
         """Inline request rows as a driver-local DataFrame: an Arrow
-        table, so the write plans as one ``LocalTableScan`` and lands as
-        one file (``LakehouseTable.insert``)."""
+        table, so the insert starts no Spark write job and lands as one
+        file written by pyarrow (``LakehouseTable.insert``)."""
         fields = t.fields
         return self.lake.spark.createDataFrame(
             _rows_to_arrow(rows, fields), to_spark_schema(fields)

@@ -40,6 +40,8 @@ import uuid
 from dataclasses import dataclass, field as dc_field, replace as dc_replace
 from typing import Callable
 
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -55,6 +57,7 @@ from mini_lakehouse_control_plane_executor_spark.table.log import (
 from mini_lakehouse_control_plane_executor_spark.table.schema import (
     Field,
     SchemaError,
+    arrow_types,
     from_spark_schema,
     to_spark_schema,
     validate_schema,
@@ -271,11 +274,17 @@ def _stat_value(v, ftype: str):
 
 
 def _footer_stats(path: str, fields: list[Field]) -> tuple[int, dict, dict]:
-    """(rows, min_values, max_values) from the Parquet footer — no data read."""
+    """(rows, min_values, max_values) from the Parquet footer — no data read.
+
+    A column with a NaN bound in any row group gets no stats: Spark's
+    writer puts NaN above every value, as Spark's ordering does, and
+    Python comparisons against NaN are all false, so a NaN bound would
+    prune files whose NaN rows match ``x > v``."""
     md = pq.ParquetFile(path).metadata
     wanted = {f.name: f.type for f in fields if f.type in _STATS_TYPES}
     mins: dict[str, object] = {}
     maxs: dict[str, object] = {}
+    nan_cols: set[str] = set()
     for rg in range(md.num_row_groups):
         group = md.row_group(rg)
         for ci in range(group.num_columns):
@@ -288,10 +297,14 @@ def _footer_stats(path: str, fields: list[Field]) -> tuple[int, dict, dict]:
                 continue
             mn = _stat_value(st.min, wanted[name])
             mx = _stat_value(st.max, wanted[name])
+            if mn != mn or mx != mx:
+                nan_cols.add(name)
             if name not in mins or mn < mins[name]:
                 mins[name] = mn
             if name not in maxs or mx > maxs[name]:
                 maxs[name] = mx
+    for name in nan_cols:
+        del mins[name], maxs[name]
     return md.num_rows, mins, maxs
 
 
@@ -299,8 +312,9 @@ _PART_TASK = re.compile(r"part-(\d+)")
 
 
 def part_files(directory: str) -> list[str]:
-    """Names of the Parquet part files one Spark write left in
-    ``directory``, in write order: by the write task's number compared as
+    """Names of the Parquet part files one write (Spark's, or
+    ``_write_local``'s) left in ``directory``, in write order: by the
+    write task's number compared as
     an integer (``part-%05d`` stops being fixed-width past 99,999 tasks),
     then by name. Checksums (``.*``) and markers (``_SUCCESS``) are left
     out."""
@@ -338,6 +352,39 @@ def _with_checks(df: DataFrame, fields: list[Field], checks: dict[str, str]) -> 
             ).cast(dtype),
         ).otherwise(first)
     return df.select(first.alias(fields[0].name), *[df[f.name] for f in fields[1:]])
+
+
+def _write_local(df: DataFrame, stage: str, fields: list[Field], n_files: int) -> None:
+    """Stage a driver-local frame's rows as up to ``n_files`` Parquet
+    files written by pyarrow, with no Spark write job (output committer,
+    per-task Hadoop setup) for rows already on the driver. One
+    single-task job fetches the rows, so every cast, NOT NULL and CHECK
+    guard in ``df``'s plan still runs in Spark and raises there. The
+    rows are cast to the table's Arrow types and split into ``n_files``
+    even row slices; an empty frame stages no file.
+
+    pyarrow leaves NaN out of a float column's min/max, so a float
+    column holding NaN is written without stats: its files then carry
+    no bounds for it, as Spark-written ones do (``_footer_stats``)."""
+    types = arrow_types()
+    rows = df.coalesce(1).toArrow().cast(
+        pa.schema([pa.field(f.name, types[f.type]) for f in fields])
+    )
+    with_stats = [
+        f.name
+        for f in fields
+        if f.type not in ("float32", "float64")
+        or not pc.any(pc.is_nan(rows[f.name])).as_py()
+    ]
+    os.makedirs(stage, exist_ok=True)
+    bounds = [rows.num_rows * i // n_files for i in range(n_files + 1)]
+    for i, (lo, hi) in enumerate(zip(bounds, bounds[1:])):
+        if hi > lo:
+            pq.write_table(
+                rows.slice(lo, hi - lo),
+                os.path.join(stage, f"part-{i:05d}.parquet"),
+                write_statistics=with_stats,
+            )
 
 
 @dataclass(frozen=True)
@@ -657,10 +704,13 @@ class LakehouseTable:
         commit with bounded retry). Idempotent per ``txn_id``.
 
         Driver-local inputs (``df.isLocal()``: pandas or Arrow frames,
-        REST rows) are written as right-sized files with no shuffle: one
-        file per ``COMPACT_TARGET_FILE_SIZE`` of input by the plan's size
-        estimate, so a small append is one task and one file. Other
-        inputs keep their own partitioning.
+        REST rows) without ``cluster_by``/``zorder_by`` start no Spark
+        write job: one single-task job fetches the guarded rows as Arrow
+        and pyarrow writes them as one file per
+        ``COMPACT_TARGET_FILE_SIZE`` of input by the plan's size
+        estimate, at most one per input partition (``_write_local``), so
+        a small append is one file. Other inputs are written by Spark and
+        keep their own partitioning.
 
         ``mode='append'`` adds files; ``mode='overwrite'`` additionally
         removes every file visible at commit time (refreshed on each OCC
@@ -712,17 +762,22 @@ class LakehouseTable:
         schema = to_spark_schema(fields)
         _validate_cluster_args(fields, cluster_by, zorder_by)
         # A driver-local frame (LocalRelation: pandas/Arrow input, REST
-        # rows) is sized by its plan statistics; decided before the
-        # guards below wrap the plan.
-        local_bytes = (
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            if df.isLocal() and not (cluster_by or zorder_by)
-            else None
-        )
+        # rows) gets one file per COMPACT_TARGET_FILE_SIZE of input by its
+        # plan statistics, and never more files than it has partitions;
+        # both are read before the guards below wrap the plan. The
+        # relation's size needs no optimizer pass, and the partition
+        # count costs a physical plan, so it is asked for only when it
+        # could lower the count below the size's.
+        local_files = None
+        if df.isLocal() and not (cluster_by or zorder_by):
+            size = int(df._jdf.queryExecution().analyzed().stats().sizeInBytes())
+            local_files = max(1, -(-size // COMPACT_TARGET_FILE_SIZE))
+            if local_files > 1:
+                local_files = min(local_files, df.rdd.getNumPartitions())
         # Align column order/types to the table schema before writing.
         # NOT NULL enforcement rides the same projection (raise_error
-        # fires inside the write pass — no extra scan), and also catches
-        # a cast that nulled a non-null input.
+        # fires inside the job that writes or fetches the rows — no extra
+        # scan), and also catches a cast that nulled a non-null input.
         df = df.select(
             *[
                 _not_null_guard(df[f.name].cast(schema[f.name].dataType), f).alias(
@@ -748,17 +803,14 @@ class LakehouseTable:
                 df, n_part, cluster_by, zorder_by,
                 {f.name: f.type for f in fields},
             )
-        elif local_bytes is not None:
-            # Right-size driver-local writes: one file per
-            # COMPACT_TARGET_FILE_SIZE of input instead of one per core
-            # (coalesce never raises the partition count, and adds no
-            # shuffle), so a small append is one task and one file.
-            df = df.coalesce(max(1, -(-int(local_bytes) // COMPACT_TARGET_FILE_SIZE)))
 
         self._sweep_stale_stages()
         stage = os.path.join(self.tmp_dir, txn_id)
         try:
-            df.write.mode("overwrite").parquet(stage)
+            if local_files is None:
+                df.write.mode("overwrite").parquet(stage)
+            else:
+                _write_local(df, stage, fields, local_files)
             adds = self._promote_staged(stage, fields)
         finally:
             shutil.rmtree(stage, ignore_errors=True)

@@ -1,8 +1,11 @@
 """Pruning soundness property: prune_files may only drop files that
 contain ZERO rows matching the predicate — DELETE/UPDATE correctness
 depends on this (a wrongly-pruned file would silently keep rows that
-should have been rewritten). Checked per excluded file with DuckDB."""
+should have been rewritten). Checked per excluded file with DuckDB, and
+through Spark on a table whose files come from both writers: Spark's
+(a distributed frame) and pyarrow's (a driver-local one)."""
 
+import datetime as dt
 import os
 
 import duckdb
@@ -11,10 +14,26 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from mini_lakehouse_control_plane_executor_spark.functions.filters import prune_files
+from mini_lakehouse_control_plane_executor_spark.functions.filters import (
+    parse_filter,
+    prune_files,
+)
 from mini_lakehouse_control_plane_executor_spark.table.schema import Field
 
 SCHEMA = [Field("k", "int64"), Field("v", "string"), Field("x", "float64")]
+
+
+def _insert(spark, t, rows, ddl, local):
+    """Insert ``rows`` as one file, written by Spark (a coalesced,
+    distributed frame) or, when ``local``, by the driver-local pyarrow
+    path (an Arrow-backed frame)."""
+    df = spark.createDataFrame(rows, ddl)
+    if local:
+        df = spark.createDataFrame(df.toArrow())
+        assert df.isLocal()
+    else:
+        df = df.coalesce(1)
+    t.insert(df)
 
 
 @pytest.fixture(scope="module")
@@ -32,10 +51,8 @@ def stats_table(spark, tmp_path_factory):
         [(i, None, None) for i in range(500, 510)]                # NULL file
         + [(510, "z", 1e9)],
     ]
-    for rows in batches:
-        t.insert(
-            spark.createDataFrame(rows, "k long, v string, x double").coalesce(1)
-        )
+    for i, rows in enumerate(batches):
+        _insert(spark, t, rows, "k long, v string, x double", local=i % 2 == 1)
     return t
 
 
@@ -116,8 +133,6 @@ def test_timestamp_date_pruning(spark, tmp_path):
     """date/timestamp columns harvest fixed-width ISO stats and prune on
     time-range predicates; DELETE on a time range rewrites only the
     intersecting files."""
-    import datetime as dt
-
     from mini_lakehouse_control_plane_executor_spark.table.catalog import LakehouseSession
 
     lake = LakehouseSession(spark, str(tmp_path))
@@ -132,9 +147,7 @@ def test_timestamp_date_pruning(spark, tmp_path):
              dt.date(2024, 3, day))
             for i in range(5)
         ]
-        t.insert(
-            spark.createDataFrame(rows, "id long, ts timestamp, d date").coalesce(1)
-        )
+        _insert(spark, t, rows, "id long, ts timestamp, d date", local=day == 10)
 
     snap = t.snapshot()
     assert all("ts" in f.min_values and "d" in f.min_values for f in snap.files)
@@ -167,3 +180,97 @@ def test_timestamp_date_pruning(spark, tmp_path):
     # The two untouched day-files carried over by reference.
     assert len(files_before & survivors) == 2
     assert t.read().count() == 10
+
+
+_UTC = dt.timezone.utc
+_NAN = float("nan")
+# Six one-file batches, alternately written by Spark and by pyarrow:
+# (id, ts, d, v, x) with NaN, -0.0, nulls, non-ASCII strings, a leap
+# day, pre-1970 and microsecond timestamps.
+_MIXED_BATCHES = [
+    [(1, dt.datetime(2024, 2, 28, 1, 0, 0, 5, tzinfo=_UTC), dt.date(2024, 2, 28), "apple", 1.5),
+     (2, dt.datetime(2024, 2, 28, 23, 59, 59, 999999, tzinfo=_UTC), dt.date(2024, 2, 28), "banana", 4.0)],
+    [(3, dt.datetime(2024, 2, 29, 0, 0, 0, 1, tzinfo=_UTC), dt.date(2024, 2, 29), "café", _NAN),
+     (4, dt.datetime(2024, 2, 29, 12, 0, tzinfo=_UTC), dt.date(2024, 2, 29), "crème", -0.0)],
+    [(5, dt.datetime(2024, 3, 1, tzinfo=_UTC), dt.date(2024, 3, 1), "日本", -0.0),
+     (6, dt.datetime(2024, 3, 1, 6, 30, tzinfo=_UTC), dt.date(2024, 3, 1), "日本語", _NAN)],
+    [(7, None, None, None, None),
+     (8, dt.datetime(1969, 12, 31, 23, 59, 59, 999999, tzinfo=_UTC), dt.date(1969, 12, 31), "Zebra", -2.5)],
+    [(9, dt.datetime(2024, 3, 5, tzinfo=_UTC), dt.date(2024, 3, 5), "🦆", 0.0),
+     (10, dt.datetime(2024, 3, 5, tzinfo=_UTC), dt.date(2024, 3, 5), "🦆", 0.0)],
+    [(11, dt.datetime(2024, 3, 9, 9, tzinfo=_UTC), dt.date(2024, 3, 9), "", _NAN),
+     (12, dt.datetime(2024, 3, 10, tzinfo=_UTC), dt.date(2024, 3, 10), "z", 1e300)],
+]
+
+
+@pytest.fixture(scope="module")
+def mixed_table(spark, tmp_path_factory):
+    from mini_lakehouse_control_plane_executor_spark.table.catalog import LakehouseSession
+
+    lake = LakehouseSession(spark, str(tmp_path_factory.mktemp("mixed")))
+    lake.create_table(
+        "m",
+        [Field("id", "int64"), Field("ts", "timestamp"), Field("d", "date"),
+         Field("v", "string"), Field("x", "float64")],
+    )
+    t = lake.table("m")
+    for i, rows in enumerate(_MIXED_BATCHES):
+        _insert(spark, t, rows, "id long, ts timestamp, d date, v string, x double",
+                local=i % 2 == 1)
+    assert len(t.snapshot().files) == len(_MIXED_BATCHES)
+    return t
+
+
+def _values(col):
+    i = ["id", "ts", "d", "v", "x"].index(col)
+    return [r[i] for rows in _MIXED_BATCHES for r in rows if r[i] is not None]
+
+
+_MIXED_LITERALS = {
+    "ts": st.sampled_from(_values("ts")).flatmap(
+        lambda t: st.sampled_from([
+            f"'{t.strftime(fmt)}'"
+            for fmt in ("%Y-%m-%d %H:%M:%S.%f", "%Y-%m-%d %H:%M:%S", "%Y-%m-%d")
+        ])
+    ),
+    "d": st.sampled_from(_values("d")).flatmap(
+        lambda d: st.sampled_from([f"'{d + dt.timedelta(days=k)}'" for k in (-1, 0, 1)])
+    ),
+    "v": st.sampled_from(_values("v") + ["a", "caf", "日", "zz", "Z"]).map(lambda v: f"'{v}'"),
+    "x": st.one_of(
+        st.sampled_from([x for x in _values("x") if x == x] + [0.0, 3.0, -1e300]),
+        st.floats(-10, 10, allow_nan=False),
+    ).map(repr),
+}
+
+
+@settings(
+    max_examples=60,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(data=st.data())
+def test_mixed_writers_prune_to_the_same_rows(mixed_table, data):
+    """On a table of Spark- and pyarrow-written files, every timestamp,
+    date, string and float comparison returns the same rows with and
+    without min/max pruning."""
+    col = data.draw(st.sampled_from(sorted(_MIXED_LITERALS)))
+    op = data.draw(st.sampled_from(_OPS))
+    pred = f"{col} {op} {data.draw(_MIXED_LITERALS[col])}"
+
+    def ids(prune_filter):
+        df = mixed_table.read(prune_filter=prune_filter).filter(parse_filter(pred))
+        return sorted(r.id for r in df.select("id").collect())
+
+    assert ids(pred) == ids(None), pred
+
+
+def test_mixed_writers_prune_files(mixed_table):
+    """Pruning on the mixed table drops files for every column type, and
+    keeps each file whose NaN rows match ``x > v`` in Spark's ordering."""
+    snap = mixed_table.snapshot()
+    for pred in ("ts >= '2024-03-05'", "d < '2024-02-29'", "v > 'z'", "x < -1.0"):
+        assert 0 < len(snap.scan(pred)) < len(snap.files), pred
+    nan_ids = {3, 6, 11}
+    kept = mixed_table.read(prune_filter="x > 5.0").filter("x > 5.0")
+    assert {r.id for r in kept.collect()} == nan_ids | {12}

@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import mini_lakehouse_control_plane_executor_spark.table.table as table_mod
-from mini_lakehouse_control_plane_executor_spark.table.schema import Field
+from mini_lakehouse_control_plane_executor_spark.table.schema import Field, arrow_types
 
 SCHEMA = [Field("k", "int64"), Field("v", "string"), Field("x", "float64")]
 
@@ -1310,20 +1310,19 @@ def test_history_limit_reads_tail_only(lake, spark):
     assert [h["schema_changed"] for h in full[:2]] == [False, True]
 
 
-def _write_plans(monkeypatch):
-    """Record the physical plan of every DataFrame the table layer
-    writes with ``DataFrameWriter.parquet``."""
+def _parquet_writes(monkeypatch):
+    """Record the path of every ``DataFrameWriter.parquet`` call."""
     from pyspark.sql.readwriter import DataFrameWriter
 
-    plans = []
+    paths = []
     orig = DataFrameWriter.parquet
 
     def parquet(self, path, *a, **k):
-        plans.append(self._df._jdf.queryExecution().executedPlan().toString())
+        paths.append(path)
         return orig(self, path, *a, **k)
 
     monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
-    return plans
+    return paths
 
 
 def _pandas_df(spark, n):
@@ -1336,25 +1335,45 @@ def _pandas_df(spark, n):
     )
 
 
+def _tasks_per_job(spark, group, call):
+    """Run ``call()`` under Spark job group ``group``; return its result
+    and the task count of every Spark job it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group, False)
+    try:
+        out = call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    tasks = []
+    for jid in tracker.getJobIdsForGroup(group):
+        stages = [tracker.getStageInfo(s) for s in tracker.getJobInfo(jid).stageIds]
+        tasks.append(sum(s.numTasks for s in stages if s))
+    return out, tasks
+
+
 def test_rest_insert_writes_one_local_file(lake, spark, monkeypatch):
-    """A small REST insert is driver-local (an Arrow LocalTableScan) and
-    lands as exactly one file, not one per core."""
+    """A small REST insert is driver-local (an Arrow LocalTableScan): it
+    starts no Spark write, fetches its guarded rows with at most one
+    single-task job and lands as exactly one file, not one per core."""
     from mini_lakehouse_control_plane_executor_spark.api.rest import LakehouseRestServer
 
     lake.create_table("r1", SCHEMA)
-    plans = _write_plans(monkeypatch)
+    writes = _parquet_writes(monkeypatch)
     rows = [{"k": i, "v": f"v{i}", "x": i * 0.5} for i in range(5)]
     srv = LakehouseRestServer(lake)
     try:
-        status, out = srv.insert_rows("r1", {"rows": rows})
+        (status, out), tasks = _tasks_per_job(
+            spark, "rest-insert-r1", lambda: srv.insert_rows("r1", {"rows": rows})
+        )
     finally:
         srv.httpd.server_close()
     assert status == 200 and out["new_version"] == 2
+    assert writes == []
+    assert tasks in ([], [1]), tasks
     t = lake.table("r1")
     assert len(t.snapshot().files) == 1
     assert sorted(r.k for r in t.read().collect()) == list(range(5))
-    assert len(plans) == 1 and "LocalTableScan" in plans[0], plans
-    assert "Exchange" not in plans[0], plans
 
 
 def test_local_pandas_insert_writes_one_file(lake, spark):
@@ -1367,9 +1386,25 @@ def test_local_pandas_insert_writes_one_file(lake, spark):
     assert t.read().count() == 1000
 
 
+def test_empty_local_insert_commits_no_file(lake, spark):
+    import pyarrow as pa
+
+    lake.create_table("p0", SCHEMA)
+    types = arrow_types()
+    df = spark.createDataFrame(
+        pa.schema([(f.name, types[f.type]) for f in SCHEMA]).empty_table()
+    )
+    assert df.isLocal()
+    assert lake.insert("p0", df) == 2
+    t = lake.table("p0")
+    assert t.snapshot().files == [] and os.listdir(t.data_dir) == []
+    assert not os.path.exists(t.tmp_dir) or os.listdir(t.tmp_dir) == []
+
+
 def test_local_insert_splits_at_target_file_size(lake, spark, monkeypatch):
-    """A local frame larger than the compaction target still writes in
-    parallel: ceil(size / target) files, capped at its partition count."""
+    """A local frame larger than the compaction target still writes more
+    than one file: ceil(size / target) files, capped at its partition
+    count."""
     df = _pandas_df(spark, 1000)
     size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     n_part = df.rdd.getNumPartitions()
@@ -1400,6 +1435,145 @@ def test_local_insert_with_cluster_by_keeps_range_layout(lake, spark):
     for a, b in zip(files, files[1:]):
         assert a.max_values["k"] < b.min_values["k"]
     assert t.read().count() == 1000
+
+
+def test_local_insert_runs_one_single_task_job(lake, spark, monkeypatch):
+    """A 1k-row local insert whose NOT NULL and CHECK guards fold into
+    its LocalRelation makes no DataFrameWriter.parquet call and runs at
+    most one Spark job, of one task."""
+    lake.create_table(
+        "g1", [Field("k", "int64", False), Field("v", "string"), Field("x", "float64")]
+    )
+    t = lake.table("g1")
+    t.add_constraint("k_pos", "k >= 0")
+    df = _pandas_df(spark, 1000)
+    writes = _parquet_writes(monkeypatch)
+    _, tasks = _tasks_per_job(spark, "local-insert-g1", lambda: t.insert(df))
+    assert writes == []
+    assert tasks in ([], [1]), tasks
+    assert len(t.snapshot().files) == 1
+    assert t.read().count() == 1000
+
+
+def test_local_insert_enforces_a_check_that_does_not_fold(lake, spark, monkeypatch):
+    """A nondeterministic CHECK keeps the guard projection out of the
+    LocalRelation; the rows' single toArrow job still evaluates it:
+    good rows commit, a bad row raises and leaves no stage and no data
+    file behind."""
+    import pandas as pd
+    from pyspark.errors import PySparkException
+
+    lake.create_table("c1", SCHEMA)
+    t = lake.table("c1")
+    t.add_constraint("x_pos", "x >= 0 OR rand() > 2")
+    frame_cls = type(spark.range(1))
+    fetches = []
+    to_arrow = frame_cls.toArrow
+    monkeypatch.setattr(
+        frame_cls, "toArrow", lambda self: fetches.append(1) or to_arrow(self)
+    )
+    writes = _parquet_writes(monkeypatch)
+    t.insert(_pandas_df(spark, 10))
+    bad = spark.createDataFrame(pd.DataFrame({"k": [1, 2], "v": ["v", "w"], "x": [-1.0, 2.0]}))
+    assert bad.isLocal()
+    with pytest.raises(PySparkException, match="x_pos"):
+        t.insert(bad, txn_id="bad-row")
+    assert len(fetches) == 2 and writes == []
+    assert not os.path.exists(os.path.join(t.tmp_dir, "bad-row"))
+    assert len(os.listdir(t.data_dir)) == 1
+    assert t.read().count() == 10 and t.log.latest_version() == 3
+
+
+TYPED = [
+    Field("i", "int32"), Field("l", "int64"), Field("f", "float32"),
+    Field("d", "float64"), Field("s", "string"), Field("b", "boolean"),
+    Field("dt", "date"), Field("ts", "timestamp"),
+]
+
+
+def _typed_frames(spark):
+    """(distributed, local) frames of the same rows over every declared
+    type: NaN, -0.0, nulls, non-ASCII strings, a leap day and a
+    microsecond timestamp."""
+    import datetime as dt
+
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    utc = dt.timezone.utc
+    rows = [
+        (1, 2**40, 1.5, -0.0, "plain", True, dt.date(2024, 2, 29),
+         dt.datetime(2024, 2, 29, 23, 59, 59, 999999, tzinfo=utc)),
+        (-7, -(2**40), float("nan"), 0.0, "naïve — 日本語 🦆", False,
+         dt.date(1999, 12, 31), dt.datetime(1969, 12, 31, 23, 59, 59, 1, tzinfo=utc)),
+        (0, 0, -0.0, 2.5, "", None, dt.date(2000, 2, 29),
+         dt.datetime(2000, 1, 1, tzinfo=utc)),
+        (None, None, None, None, None, None, None, None),
+        (2**31 - 1, 5, 0.0, 1e300, "zz", True, dt.date(1970, 1, 1),
+         dt.datetime(2024, 3, 1, 0, 0, 0, 1, tzinfo=utc)),
+    ]
+    types = arrow_types()
+    local = spark.createDataFrame(
+        pa.table({f.name: pa.array(col, types[f.type]) for f, col in zip(TYPED, zip(*rows))})
+    )
+    keyed = spark.createDataFrame(
+        [(*r, n) for n, r in enumerate(rows)],
+        T.StructType([*local.schema.fields, T.StructField("n", T.LongType())]),
+    )
+    distributed = (
+        spark.range(len(rows), numPartitions=2)
+        .withColumnRenamed("id", "n")
+        .join(keyed, "n")
+        .drop("n")
+        .coalesce(1)
+    )
+    assert local.isLocal() and not distributed.isLocal()
+    return distributed, local
+
+
+def _rows(t):
+    return sorted(repr(r) for r in t.read().collect())
+
+
+def test_arrow_and_spark_written_files_match_on_every_type(lake, spark):
+    import pyarrow.parquet as pq
+
+    distributed, local = _typed_frames(spark)
+    paths = {}
+    for name, df in (("by_spark", distributed), ("by_arrow", local)):
+        lake.create_table(name, TYPED)
+        lake.insert(name, df)
+        [f] = lake.table(name).snapshot().files
+        paths[name] = os.path.join(lake.table(name).dir, f.path)
+    spark_t, arrow_t = lake.table("by_spark"), lake.table("by_arrow")
+    assert _rows(spark_t) == _rows(arrow_t)
+    assert len(_rows(arrow_t)) == 5
+
+    def footer(path):
+        rows, mins, maxs = table_mod._footer_stats(path, TYPED)
+        return repr((rows, sorted(mins.items()), sorted(maxs.items())))
+
+    assert footer(paths["by_spark"]) == footer(paths["by_arrow"])
+
+    def column_types(path):
+        return [
+            (c.name, c.physical_type, str(c.logical_type))
+            for c in pq.ParquetFile(path).schema
+        ]
+
+    assert column_types(paths["by_spark"]) == column_types(paths["by_arrow"])
+
+    # A table of both writers' files compacts into one with the same rows.
+    lake.create_table("mixed", TYPED)
+    for df in (distributed, local, local):
+        lake.insert("mixed", df)
+    mixed = lake.table("mixed")
+    sums = [F.sum(c) for c in ("i", "l", "f", "d")] + [F.count("s"), F.max("ts")]
+    before_rows, before_sums = _rows(mixed), repr(mixed.read().agg(*sums).collect())
+    assert mixed.compact() is not None
+    assert len(mixed.snapshot().files) == 1
+    assert _rows(mixed) == before_rows
+    assert repr(mixed.read().agg(*sums).collect()) == before_sums
 
 
 def test_concurrent_sql_pinned_versions_during_inserts(lake, spark):
