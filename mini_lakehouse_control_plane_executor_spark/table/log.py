@@ -287,7 +287,7 @@ class TransactionLog:
                 )
         # Time travel behind the cache: cold replay from the newest
         # checkpoint ≤ version (does not disturb the forward cache).
-        files, schema, _, constraints = self._replay_cold(version)
+        files, schema, _, constraints = self._replay(version)
         ordered = [files[p] for p in sorted(files)]
         return Snapshot(
             version=version,
@@ -350,50 +350,27 @@ class TransactionLog:
         from the newest checkpoint ≤ target when the cache is empty."""
         if target <= self._state_version:
             return
-        if self._state_version == 0:
-            ckpts = [c for c in self.list_checkpoints() if c <= target]
-            if ckpts:
-                files, schema, txns, constraints = self._load_checkpoint(ckpts[-1])
-                self._state_version = ckpts[-1]
-                self._state_files = files
-                self._state_schema = schema
-                self._state_txns = txns
-                self._state_constraints = constraints
-        for v in self.list_versions():
-            if v <= self._state_version:
-                continue
-            if v > target:
-                break
-            entry = self.read_entry(v)
-            self._state_schema = self._apply(
-                entry,
-                self._state_files,
-                self._state_schema,
-                self._state_txns,
-                self._state_constraints,
-            )
+        state = self._state_files, self._state_schema, self._state_txns, self._state_constraints
+        state = self._replay(target, self._state_version, state)
+        self._state_files, self._state_schema, self._state_txns, self._state_constraints = state
         self._state_version = target
 
-    def _replay_cold(
-        self, version: int
+    def _replay(
+        self, target: int, base: int = 0, state: tuple | None = None
     ) -> tuple[dict[str, FileAdd], list[Field], dict[str, int], dict[str, str]]:
-        files: dict[str, FileAdd] = {}
-        schema: list[Field] = []
-        txns: dict[str, int] = {}
-        constraints: dict[str, str] = {}
-        start = 0
-        ckpts = [c for c in self.list_checkpoints() if c <= version]
+        """The replayed (files, schema, txns, constraints) at ``target``:
+        entries ``base+1..target`` applied in place to ``state``, the
+        state at ``base``. From ``base`` 0 the replay starts at the
+        newest checkpoint ≤ target instead, if there is one. Versions are
+        contiguous (``commit`` links ``latest+1`` put-if-absent and no
+        entry is ever deleted), so entries are read by number, with no
+        listing of ``_log/``."""
+        ckpts = [c for c in self.list_checkpoints() if c <= target] if not base else []
         if ckpts:
-            files, schema, txns, constraints = self._load_checkpoint(ckpts[-1])
-            start = ckpts[-1]
-        for v in self.list_versions():
-            if v <= start:
-                continue
-            if v > version:
-                break
-            schema = self._apply(
-                self.read_entry(v), files, schema, txns, constraints
-            )
+            base, state = ckpts[-1], self._load_checkpoint(ckpts[-1])
+        files, schema, txns, constraints = state or ({}, [], {}, {})
+        for v in range(base + 1, target + 1):
+            schema = self._apply(self.read_entry(v), files, schema, txns, constraints)
         return files, schema, txns, constraints
 
     # -- checkpoints ----------------------------------------------------

@@ -110,24 +110,6 @@ _STATS_TYPES = {
 }
 
 
-def _not_null_guard(col, field: Field):
-    """Wrap a write-path column so a NULL in a non-nullable field fails
-    the job inside the write pass itself (no separate validation scan).
-    Used by every path that produces table rows: insert, merge source
-    alignment, and when_matched rewrite expressions."""
-    if field.nullable:
-        return col
-    from mini_lakehouse_control_plane_executor_spark.table.schema import to_spark_schema
-
-    dtype = to_spark_schema([field])[field.name].dataType
-    return F.when(
-        col.isNull(),
-        F.raise_error(
-            F.lit(f"NOT NULL constraint violated: column {field.name!r}")
-        ).cast(dtype),
-    ).otherwise(col)
-
-
 def _fill_partition_from_stats(adds: list, cluster_by: list[str]) -> list:
     """Record single-valued cluster columns in FileAdd.partition
     (FileInfo parity — ``proto/metadata.proto:94-113``): a file whose
@@ -333,25 +315,80 @@ def part_files(directory: str) -> list[str]:
     )
 
 
-def _with_checks(df: DataFrame, fields: list[Field], checks: dict[str, str]) -> DataFrame:
-    """``df`` (columns aligned to ``fields``) with CHECK enforcement
-    folded into its first column, so it cannot be pruned away: any row
-    where a constraint evaluates FALSE (NULL passes, SQL CHECK
-    semantics) raises inside the write pass — the ``_not_null_guard``
-    discipline."""
+def _ident(name: str) -> str:
+    """``name`` as a Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _violates(check: str) -> str:
+    """SQL predicate: a row violates CHECK ``check`` (FALSE fails; TRUE
+    and NULL pass, SQL CHECK semantics). The expression sits on lines of
+    its own, so a trailing ``--`` comment in it ends before the closing
+    parenthesis."""
+    return f"NOT coalesce(CAST((\n{check}\n) AS boolean), true)"
+
+
+def _analysis_error(spark: SparkSession, fields: list[Field], check: str):
+    """Why CHECK ``check`` does not analyze over a table of ``fields``
+    (the exception), or None when it does."""
+    try:
+        spark.createDataFrame([], to_spark_schema(fields)).filter(
+            F.expr(check).cast("boolean")
+        ).schema
+    except Exception as exc:
+        return exc
+    return None
+
+
+def _guarded(
+    df: DataFrame,
+    fields: list[Field],
+    checks: dict[str, str],
+    exprs: dict[str, str] | None = None,
+) -> DataFrame:
+    """``df`` aligned to ``fields``: the one projection every write that
+    produces table rows goes through (insert, UPDATE, merge). Each field
+    is ``exprs[name]`` (SQL over ``df``'s columns), or else ``df``'s
+    column of that name, cast to the field's type. A NULL in a NOT NULL
+    field, or a row for which a CHECK in ``checks`` is FALSE, raises
+    inside the job that writes or fetches the rows: no separate
+    validation scan. The CHECKs see the cast values and are folded into
+    the first column, so column pruning cannot drop them. The guard is
+    built from SQL strings by at most two ``selectExpr`` calls, a few
+    py4j round trips whatever the table's width."""
+    exprs = exprs or {}
+    schema = to_spark_schema(fields)
+    # TIMESTAMP alone would follow spark.sql.timestampType.
+    types = {
+        f.name: "timestamp_ltz" if f.type == "timestamp" else s.dataType.simpleString()
+        for f, s in zip(fields, schema)
+    }
+
+    def fail(message: str, name: str) -> str:
+        literal = message.replace("\\", "\\\\").replace("'", "\\'")
+        return f"CAST(raise_error('{literal}') AS {types[name]})"
+
+    cols = []
+    for f in fields:
+        value = "(\n" + exprs[f.name] + "\n)" if f.name in exprs else _ident(f.name)
+        value = f"CAST({value} AS {types[f.name]})"
+        if not f.nullable:
+            message = f"NOT NULL constraint violated: column {f.name!r}"
+            value = f"coalesce({value}, {fail(message, f.name)})"
+        cols.append(f"{value} AS {_ident(f.name)}")
+    df = df.selectExpr(*cols)
     if not checks:
         return df
-    first = df[fields[0].name]
-    dtype = to_spark_schema(fields)[0].dataType
-    for cname in sorted(checks):
-        violated = ~F.coalesce(F.expr(checks[cname]).cast("boolean"), F.lit(True))
-        first = F.when(
-            violated,
-            F.raise_error(
-                F.lit(f"CHECK constraint {cname!r} violated: ({checks[cname]})")
-            ).cast(dtype),
-        ).otherwise(first)
-    return df.select(first.alias(fields[0].name), *[df[f.name] for f in fields[1:]])
+    first = fields[0].name
+    whens = "".join(
+        f"WHEN {_violates(checks[c])} THEN "
+        f"{fail(f'CHECK constraint {c!r} violated: ({checks[c]})', first)}\n"
+        for c in sorted(checks)
+    )
+    return df.selectExpr(
+        f"CASE {whens}ELSE {_ident(first)} END AS {_ident(first)}",
+        *[_ident(f.name) for f in fields[1:]],
+    )
 
 
 def _write_local(df: DataFrame, stage: str, fields: list[Field], n_files: int) -> None:
@@ -464,18 +501,15 @@ class LakehouseTable:
             raise ValueError(f"table {name!r} already exists")
         os.makedirs(table.data_dir, exist_ok=True)
         os.makedirs(table.tmp_dir, exist_ok=True)
-        if constraints:
-            probe = spark.createDataFrame([], to_spark_schema(fields))
-            for cname, expr in constraints.items():
-                if not re.fullmatch(r"[A-Za-z0-9_]+", cname):
-                    raise ValueError(f"invalid constraint name {cname!r}")
-                try:
-                    probe.filter(F.expr(expr).cast("boolean")).schema
-                except Exception as exc:
-                    raise ValueError(
-                        f"constraint {cname!r} does not analyze against the "
-                        f"table schema: {exc}"
-                    ) from exc
+        for cname, expr in (constraints or {}).items():
+            if not re.fullmatch(r"[A-Za-z0-9_]+", cname):
+                raise ValueError(f"invalid constraint name {cname!r}")
+            exc = _analysis_error(spark, fields, expr)
+            if exc is not None:
+                raise ValueError(
+                    f"constraint {cname!r} does not analyze against the "
+                    f"table schema: {exc}"
+                ) from exc
         # Version 1 = creation: schema + the constraint set, one atomic
         # commit — constraints are VERSIONED in the log (Delta table-
         # feature semantics), not a sidecar, so a crash can never leave
@@ -519,7 +553,6 @@ class LakehouseTable:
             F.expr(expr)  # syntax; analysis happens in the scan below
         except Exception as exc:
             raise ValueError(f"constraint {cname!r} does not parse: {exc}") from exc
-        violating = ~F.coalesce(F.expr(expr).cast("boolean"), F.lit(True))
 
         def plan(snap: Snapshot, a: _Attempt) -> _Commit:
             current = self._checks(snap)
@@ -528,7 +561,7 @@ class LakehouseTable:
             try:
                 n_bad = (
                     self._scan_files(snap.files, to_spark_schema(snap.schema))
-                    .filter(violating)
+                    .filter(_violates(expr))
                     .limit(1)
                     .count()
                 )
@@ -592,11 +625,8 @@ class LakehouseTable:
             new_schema = [f for f in snap.schema if f.name != name]
             if not new_schema:
                 raise SchemaError("cannot drop the last column")
-            probe = self.spark.createDataFrame([], to_spark_schema(new_schema))
             for cname, expr in self._checks(snap).items():
-                try:
-                    probe.filter(F.expr(expr).cast("boolean")).schema
-                except Exception:
+                if _analysis_error(self.spark, new_schema, expr) is not None:
                     raise SchemaError(
                         f"cannot drop column {name!r}: CHECK constraint "
                         f"{cname!r} references it ({expr}); drop the "
@@ -759,7 +789,6 @@ class LakehouseTable:
             self.add_columns(new_fields, txn_id=f"{txn_id}-mergeschema")
             snap = self.log.snapshot()
             fields = snap.schema
-        schema = to_spark_schema(fields)
         _validate_cluster_args(fields, cluster_by, zorder_by)
         # A driver-local frame (LocalRelation: pandas/Arrow input, REST
         # rows) gets one file per COMPACT_TARGET_FILE_SIZE of input by its
@@ -774,25 +803,13 @@ class LakehouseTable:
             local_files = max(1, -(-size // COMPACT_TARGET_FILE_SIZE))
             if local_files > 1:
                 local_files = min(local_files, df.rdd.getNumPartitions())
-        # Align column order/types to the table schema before writing.
-        # NOT NULL enforcement rides the same projection (raise_error
-        # fires inside the job that writes or fetches the rows — no extra
-        # scan), and also catches a cast that nulled a non-null input.
-        df = df.select(
-            *[
-                _not_null_guard(df[f.name].cast(schema[f.name].dataType), f).alias(
-                    f.name
-                )
-                for f in fields
-            ]
-        )
-        # CHECK constraints ride a second projection over the ALIGNED
-        # (post-cast) columns — Delta semantics: constraints see final
-        # values; CollapseProject folds both into one pass. The files are
+        # Align column order/types to the table schema and guard NOT
+        # NULL and CHECK inside the job that writes or fetches the rows;
+        # a cast that nulls a non-null input is caught too. The files are
         # staged once, so the commit loop re-validates them against any
         # CHECK a racing add_constraint commits before this insert does.
         enforced = self._checks(snap)
-        df = _with_checks(df, fields, enforced)
+        df = _guarded(df, fields, enforced)
         if cluster_by or zorder_by:
             # Range-partition (not hash): gives each output file a
             # CONTIGUOUS slice of the cluster-key space, the layout that
@@ -932,19 +949,14 @@ class LakehouseTable:
             n_out = max(1, len(candidates))
 
             def assigned(df: DataFrame) -> DataFrame:
-                # Rewritten rows pass the same CHECK gate as insert; the
-                # untouched rows trivially satisfy it (they already did).
-                return _with_checks(
-                    df.select(
-                        *[
-                            F.when(pred, F.expr(assignments[f.name]))
-                            .otherwise(F.col(f.name))
-                            .cast(schema[f.name].dataType)
-                            .alias(f.name)
-                            if f.name in assignments
-                            else F.col(f.name)
-                            for f in snap.schema
-                        ]
+                # Rewritten rows pass the same NOT NULL and CHECK guard
+                # as insert; the untouched rows already did.
+                return _guarded(
+                    df.withColumns(
+                        {
+                            c: F.when(pred, F.expr(e)).otherwise(F.col(_ident(c)))
+                            for c, e in assignments.items()
+                        }
                     ),
                     snap.schema,
                     checks,
@@ -1139,15 +1151,7 @@ class LakehouseTable:
             unknown = set(when_matched) - {f.name for f in fields}
             if unknown:
                 raise ValueError(f"when_matched unknown column(s): {sorted(unknown)}")
-        schema = to_spark_schema(fields)
-        source = source.select(
-            *[
-                _not_null_guard(
-                    source[f.name].cast(schema[f.name].dataType), f
-                ).alias(f.name)
-                for f in fields
-            ]
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        source = _guarded(source, fields, {}).persist(StorageLevel.MEMORY_AND_DISK)
         try:
             if when_matched is not None:
                 dups = (
@@ -1192,17 +1196,11 @@ class LakehouseTable:
                 fields = snap.schema
                 schema = to_spark_schema(fields)
                 checks = self._checks(snap)
-                news_src = _with_checks(
-                    source.select(
-                        *[
-                            F.col(f.name)
-                            if f.name in source.columns
-                            else F.lit(None).cast(schema[f.name].dataType).alias(f.name)
-                            for f in fields
-                        ]
-                    ),
+                news_src = _guarded(
+                    source,
                     fields,
                     checks,
+                    {f.name: "NULL" for f in fields if f.name not in source.columns},
                 )
                 candidates = [f for f in snap.files if _overlaps(f)]
                 n_out = max(1, len(candidates))
@@ -1237,22 +1235,15 @@ class LakehouseTable:
                             source.alias("source"),
                             F.col(f"target.{key}") == F.col(f"source.{key}"),
                         )
-                        updated = matched.select(
-                            *[
-                                _not_null_guard(
-                                    F.expr(when_matched[f.name]).cast(
-                                        schema[f.name].dataType
-                                    ),
-                                    f,
-                                ).alias(f.name)
-                                if f.name in when_matched
-                                else F.col(f"target.{f.name}").alias(f.name)
-                                for f in fields
-                            ]
-                        )
                         # when_matched assignments produce NEW values, so
-                        # they pass the same CHECK gate as inserts.
-                        updated = _with_checks(updated, fields, checks)
+                        # they pass the same guard as inserts.
+                        updated = _guarded(
+                            matched,
+                            fields,
+                            checks,
+                            {f.name: f"target.{_ident(f.name)}" for f in fields}
+                            | when_matched,
+                        )
                         adds += a.write(updated.coalesce(n_out), "upd", fields)
                 # WHEN NOT MATCHED rows (or the whole source for replace
                 # semantics), written at natural parallelism — a large
@@ -1405,27 +1396,15 @@ class LakehouseTable:
         """Name of the first CHECK constraint any row in ``adds``
         violates, else None. ONE aggregate scan evaluates every
         constraint (post-cast values — the files were written through
-        the schema-aligned projection, so semantics match the in-write
-        ``_with_checks``; TRUE/NULL passes, FALSE fails)."""
+        ``_guarded``, so semantics match the in-write guard)."""
         if not constraints or not adds:
             return None
         names = sorted(constraints)
         row = (
             self.spark.read.schema(to_spark_schema(fields))
             .parquet(*[os.path.join(self.dir, a.path) for a in adds])
-            .agg(
-                *[
-                    F.count(
-                        F.when(
-                            ~F.coalesce(
-                                F.expr(constraints[n]).cast("boolean"),
-                                F.lit(True),
-                            ),
-                            1,
-                        )
-                    ).alias(n)
-                    for n in names
-                ]
+            .selectExpr(
+                *[f"count_if({_violates(constraints[n])}) AS {_ident(n)}" for n in names]
             )
             .collect()[0]
         )

@@ -470,3 +470,48 @@ def test_drop_constraint_over_http(lake, spark):
         srv.stop()
     lake.insert("cdh", _df(spark, [(1, -1.0, "new")]))  # gate gone
     assert lake.table("cdh").read().count() == 1
+
+
+def test_guard_embeds_names_and_check_text(lake, spark):
+    """The write guard is SQL text: a column name with a space, a CHECK
+    holding a doubled quote, a backslash and a trailing ``--`` comment,
+    and UPDATE/when_matched expressions ending in a comment all pass
+    through it unchanged. Good rows commit on insert, UPDATE and merge;
+    bad rows raise the exact NOT NULL and CHECK messages."""
+    import re
+
+    check = "`a b` >= 0 AND `xy` <> 'it''s \\\\ here' -- no negatives"
+    lake.create_table(
+        "ce",
+        [Field("a b", "int64", False), Field("xy", "string", False), Field("n", "int64")],
+        constraints={"c1": check},
+    )
+    t = lake.table("ce")
+    violated = re.escape(f"CHECK constraint 'c1' violated: ({check})")
+    null_ab = re.escape("NOT NULL constraint violated: column 'a b'")
+    null_xy = re.escape("NOT NULL constraint violated: column 'xy'")
+
+    def df(rows):
+        return spark.createDataFrame(rows, "`a b` long, xy string, n long")
+
+    t.insert(df([(1, "x", 1), (2, "y", 2)]))
+    for rows, message in (
+        ([(-1, "x", 3)], violated),
+        ([(3, "it's \\ here", 3)], violated),
+        ([(None, "x", 3)], null_ab),
+        ([(3, None, 3)], null_xy),
+    ):
+        with pytest.raises(Exception, match=message):
+            t.insert(df(rows))
+    t.update("n = 1", {"xy": "concat(xy, '!') -- shout"})
+    with pytest.raises(Exception, match=violated):
+        t.update("n = 1", {"a b": "-`a b` -- negate"})
+    t.merge(df([(2, "z", 20)]), "a b", when_matched={"xy": "source.xy -- take theirs"})
+    for when_matched, message in (
+        ({"xy": "NULL -- drop"}, null_xy),
+        ({"a b": "-target.`a b` -- negate"}, violated),
+    ):
+        with pytest.raises(Exception, match=message):
+            t.merge(df([(2, "w", 20)]), "a b", when_matched=when_matched)
+    assert sorted(tuple(r) for r in t.read().collect()) == [(1, "x!", 1), (2, "z", 2)]
+    assert t.log.latest_version() == 4

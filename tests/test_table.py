@@ -976,6 +976,50 @@ def test_not_null_enforced_on_merge(lake, spark):
     assert {r.v for r in t.read().collect()} == {"a", "b"}
 
 
+def test_not_null_enforced_on_update(lake, spark):
+    """An UPDATE assignment that yields NULL into a NOT NULL column fails
+    in both modes and over REST (a 400), commits no version and leaves
+    no stage, data file or deletion-vector file behind."""
+    import json
+    import urllib.error
+    import urllib.request
+
+    from mini_lakehouse_control_plane_executor_spark.api.rest import LakehouseRestServer
+
+    lake.create_table(
+        "nnu", [Field("k", "int64", nullable=False), Field("v", "string", nullable=False)]
+    )
+    lake.insert(
+        "nnu", spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
+    )
+    t = lake.table("nnu")
+    version = t.log.latest_version()
+    files_before = sorted(os.listdir(t.data_dir))
+    to_null = {"v": "CAST(NULL AS STRING)"}
+    for mode in ("copy-on-write", "merge-on-read"):
+        with pytest.raises(Exception, match="NOT NULL constraint violated: column 'v'"):
+            t.update("k = 1", to_null, mode=mode)
+    srv = LakehouseRestServer(lake).start()
+    try:
+        req = urllib.request.Request(
+            f"http://127.0.0.1:{srv.port}/tables/nnu/update",
+            method="POST",
+            data=json.dumps({"filter": "k = 1", "set": to_null}).encode(),
+            headers={"Content-Type": "application/json"},
+        )
+        with pytest.raises(urllib.error.HTTPError) as err:
+            urllib.request.urlopen(req)
+        assert err.value.code == 400
+        assert "NOT NULL constraint violated" in json.loads(err.value.read())["error"]
+    finally:
+        srv.stop()
+    assert t.log.latest_version() == version
+    assert sorted(os.listdir(t.data_dir)) == files_before
+    assert os.listdir(t.tmp_dir) == []
+    assert not os.path.exists(t.dv_dir) or os.listdir(t.dv_dir) == []
+    assert sorted((r.k, r.v) for r in t.read().collect()) == [(1, "a"), (2, "b")]
+
+
 def test_read_timestamp_as_of(lake, spark):
     """Delta timestampAsOf through read(timestamp_ms=...): resolves the
     last version committed at or before the instant; exclusive with
@@ -1482,6 +1526,24 @@ def test_local_insert_enforces_a_check_that_does_not_fold(lake, spark, monkeypat
     assert not os.path.exists(os.path.join(t.tmp_dir, "bad-row"))
     assert len(os.listdir(t.data_dir)) == 1
     assert t.read().count() == 10 and t.log.latest_version() == 3
+
+
+def test_guard_builds_in_a_few_py4j_calls(spark):
+    """The write guard of a 3-column NOT NULL table with one CHECK is
+    built from SQL strings by two selectExpr calls: a handful of py4j
+    commands (per-Column building took 330)."""
+    client = spark.sparkContext._gateway._gateway_client
+    fields = [Field("k", "int64", False), Field("v", "string", False), Field("x", "float64", False)]
+    df = _pandas_df(spark, 10)
+    sent = []
+    send = client.send_command
+    client.send_command = lambda *a, **k: sent.append(1) or send(*a, **k)
+    try:
+        guarded = table_mod._guarded(df, fields, {"k_pos": "k >= 0"})
+    finally:
+        del client.send_command
+    assert len(sent) <= 20, len(sent)
+    assert guarded.columns == ["k", "v", "x"]
 
 
 TYPED = [
