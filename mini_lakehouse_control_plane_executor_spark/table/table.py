@@ -354,8 +354,8 @@ def _guarded(
     inside the job that writes or fetches the rows: no separate
     validation scan. The CHECKs see the cast values and are folded into
     the first column, so column pruning cannot drop them. The guard is
-    built from SQL strings by at most two ``selectExpr`` calls, a few
-    py4j round trips whatever the table's width."""
+    built by at most two ``selectExpr`` calls of SQL strings, each five
+    py4j commands plus one per column."""
     exprs = exprs or {}
     schema = to_spark_schema(fields)
     # TIMESTAMP alone would follow spark.sql.timestampType.

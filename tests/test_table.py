@@ -1530,8 +1530,8 @@ def test_local_insert_enforces_a_check_that_does_not_fold(lake, spark, monkeypat
 
 def test_guard_builds_in_a_few_py4j_calls(spark):
     """The write guard of a 3-column NOT NULL table with one CHECK is
-    built from SQL strings by two selectExpr calls: a handful of py4j
-    commands (per-Column building took 330)."""
+    built from SQL strings by two selectExpr calls: 16 py4j commands,
+    five per call plus one per column (per-Column building sent 330)."""
     client = spark.sparkContext._gateway._gateway_client
     fields = [Field("k", "int64", False), Field("v", "string", False), Field("x", "float64", False)]
     df = _pandas_df(spark, 10)
