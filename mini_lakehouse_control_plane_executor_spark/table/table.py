@@ -344,19 +344,18 @@ def _guarded(
     df: DataFrame,
     fields: list[Field],
     checks: dict[str, str],
-    exprs: dict[str, str] | None = None,
 ) -> DataFrame:
     """``df`` aligned to ``fields``: the one projection every write that
     produces table rows goes through (insert, UPDATE, merge). Each field
-    is ``exprs[name]`` (SQL over ``df``'s columns), or else ``df``'s
-    column of that name, cast to the field's type. A NULL in a NOT NULL
-    field, or a row for which a CHECK in ``checks`` is FALSE, raises
-    inside the job that writes or fetches the rows: no separate
-    validation scan. The CHECKs see the cast values and are folded into
-    the first column, so column pruning cannot drop them. The guard is
-    built by at most two ``selectExpr`` calls of SQL strings, each five
-    py4j commands plus one per column."""
-    exprs = exprs or {}
+    is ``df``'s column of that name, cast to the field's type; callers
+    compute new values as Columns first, so no caller text but the
+    CHECKs (parsed on their own when added) enters the SQL built here.
+    A NULL in a NOT NULL field, or a row for which a CHECK in ``checks``
+    is FALSE, raises inside the job that writes or fetches the rows: no
+    separate validation scan. The CHECKs see the cast values and are
+    folded into the first column, so column pruning cannot drop them.
+    The guard is built by at most two ``selectExpr`` calls of SQL
+    strings, each five py4j commands plus one per column."""
     schema = to_spark_schema(fields)
     # TIMESTAMP alone would follow spark.sql.timestampType.
     types = {
@@ -370,8 +369,7 @@ def _guarded(
 
     cols = []
     for f in fields:
-        value = "(\n" + exprs[f.name] + "\n)" if f.name in exprs else _ident(f.name)
-        value = f"CAST({value} AS {types[f.name]})"
+        value = f"CAST({_ident(f.name)} AS {types[f.name]})"
         if not f.nullable:
             message = f"NOT NULL constraint violated: column {f.name!r}"
             value = f"coalesce({value}, {fail(message, f.name)})"
@@ -549,10 +547,14 @@ class LakehouseTable:
         before committing)."""
         if not re.fullmatch(r"[A-Za-z0-9_]+", cname):
             raise ValueError(f"invalid constraint name {cname!r}")
-        try:
-            F.expr(expr)  # syntax; analysis happens in the scan below
-        except Exception as exc:
-            raise ValueError(f"constraint {cname!r} does not parse: {exc}") from exc
+        # Parsed on its own first (F.expr parses only when analyzed):
+        # the scan below and every write guard embed the text in SQL.
+        exc = _analysis_error(self.spark, self.fields, expr)
+        if exc is not None:
+            raise ValueError(
+                f"constraint {cname!r} does not analyze against the "
+                f"table schema: {exc}"
+            ) from exc
 
         def plan(snap: Snapshot, a: _Attempt) -> _Commit:
             current = self._checks(snap)
@@ -1197,10 +1199,11 @@ class LakehouseTable:
                 schema = to_spark_schema(fields)
                 checks = self._checks(snap)
                 news_src = _guarded(
-                    source,
+                    source.withColumns(
+                        {f.name: F.lit(None) for f in fields if f.name not in source.columns}
+                    ),
                     fields,
                     checks,
-                    {f.name: "NULL" for f in fields if f.name not in source.columns},
                 )
                 candidates = [f for f in snap.files if _overlaps(f)]
                 n_out = max(1, len(candidates))
@@ -1236,13 +1239,24 @@ class LakehouseTable:
                             F.col(f"target.{key}") == F.col(f"source.{key}"),
                         )
                         # when_matched assignments produce NEW values, so
-                        # they pass the same guard as inserts.
+                        # they pass the same guard as inserts. Like
+                        # UPDATE's, each is parsed on its own by F.expr:
+                        # caller text never enters the guard's SQL, where
+                        # text closing its parentheses would escape the
+                        # cast and the NOT NULL check.
                         updated = _guarded(
-                            matched,
+                            matched.select(
+                                *[
+                                    (
+                                        F.expr(when_matched[f.name])
+                                        if f.name in when_matched
+                                        else F.col(f"target.{_ident(f.name)}")
+                                    ).alias(f.name)
+                                    for f in fields
+                                ]
+                            ),
                             fields,
                             checks,
-                            {f.name: f"target.{_ident(f.name)}" for f in fields}
-                            | when_matched,
                         )
                         adds += a.write(updated.coalesce(n_out), "upd", fields)
                 # WHEN NOT MATCHED rows (or the whole source for replace

@@ -513,5 +513,16 @@ def test_guard_embeds_names_and_check_text(lake, spark):
     ):
         with pytest.raises(Exception, match=message):
             t.merge(df([(2, "w", 20)]), "a b", when_matched=when_matched)
+    # Caller text is parsed on its own before any guard embeds it: text
+    # that would close the guard's parentheses is a parse error, not a
+    # NULL written past the NOT NULL check or a CHECK that always holds.
+    with pytest.raises(Exception, match="PARSE_SYNTAX_ERROR"):
+        t.merge(
+            df([(2, "w", 20)]),
+            "a b",
+            when_matched={"xy": "NULL) AS string), NULL) || coalesce(CAST((''"},
+        )
+    with pytest.raises(ValueError, match="does not analyze"):
+        t.add_constraint("c2", "true) AS boolean), true) OR coalesce(CAST((false")
     assert sorted(tuple(r) for r in t.read().collect()) == [(1, "x!", 1), (2, "z", 2)]
     assert t.log.latest_version() == 4

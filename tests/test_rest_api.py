@@ -287,6 +287,24 @@ def test_merge_over_http(server, spark):
     _call(server, "POST", "/tables/um/merge", {"rows": [], "key": "id"}, expect=400)
 
 
+def test_merge_when_matched_cannot_escape_the_row_guard(server, lake):
+    """A when_matched value is parsed on its own: text that would close
+    the row guard's parentheses is a 400 and commits nothing, rather
+    than a NULL written into a NOT NULL column."""
+    _call(server, "POST", "/tables", {"name": "umx", "schema": SCHEMA_API})
+    _call(server, "POST", "/tables/umx/insert", {"rows": ROWS})
+    version = lake.table("umx").log.latest_version()
+    _call(server, "POST", "/tables/umx/merge", {
+        "key": "id",
+        "rows": [ROWS[0]],
+        "when_matched": {"product": "NULL) AS string), NULL) || coalesce(CAST((''"},
+    }, expect=400)
+    assert lake.table("umx").log.latest_version() == version
+    res = _call(server, "POST", "/sql",
+                {"sql": "SELECT COUNT(*) AS n FROM umx WHERE product IS NULL"})
+    assert res["rows"][0]["n"] == 0
+
+
 def test_table_diff_over_http(server, lake, spark):
     from mini_lakehouse_control_plane_executor_spark.table.schema import Field
 
